@@ -61,16 +61,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with identical (depth, width): union the
-    cell tables and re-sum — the property that makes per-segment
-    sketches re-aggregable without touching raw data."""
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     candidates: DataFrame,
     sketch: DataFrame,

@@ -45,12 +45,6 @@ def shingles(toks: Column, n: int = 3) -> Column:
     )
 
 
-def sql_shingles(toks_expr: str, n: int = 3) -> str:
-    """DuckDB twin of :func:`shingles` (1-based list indexing)."""
-    parts = " || ' ' || ".join(f"{toks_expr}[i+{k}]" for k in range(n))
-    return f"list_transform(range(1, len({toks_expr}) - {n - 2}), i -> {parts})"
-
-
 def gram_key(col: Column | str) -> Column:
     """96-bit INTERNAL identity key for a gram/span string:
     struct(xxhash64, hash). For grouping/join keys that never reach

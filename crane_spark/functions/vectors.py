@@ -66,18 +66,3 @@ def vec_norm(a: Column | str) -> Column:
 def cosine_similarity(a: Column, b: Column) -> Column:
     """cos(a, b); both inputs must already be array<double>."""
     return dot(a, b) / (vec_norm(a) * vec_norm(b))
-
-
-def sql_dot(a: str, b: str, dim: int) -> str:
-    """DuckDB twin of :func:`dot` for fixed-dimension vectors."""
-    return (
-        f"list_sum(list_transform(range(1, {dim + 1}), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
-
-
-def sql_norm(a: str, dim: int) -> str:
-    return (
-        f"sqrt(list_sum(list_transform(range(1, {dim + 1}), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE))))"
-    )

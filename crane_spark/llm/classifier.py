@@ -293,7 +293,3 @@ def train_language_gate(
         F.col(id_col), logreg_score(pinned, weights).alias("quality_score")
     )
     return weights, losses, scored
-
-
-def sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))

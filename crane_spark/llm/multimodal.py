@@ -32,11 +32,10 @@ from struct import error as struct_error
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crane_spark.llm import codecs
-from crane_spark.llm.codecs import DecodedAudio, DecodedImage
+from crane_spark.llm.codecs import DecodedImage
 
 ASSET_SCHEMA = T.StructType(
     [
@@ -142,152 +141,3 @@ def extract_features(
             )
 
     return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(
-    assets: DataFrame, every_n_bytes: int = 1024, fake: bool = False
-) -> DataFrame:
-    """Frame/sample extraction (UDTF-shaped: one asset row -> many
-    frame rows). Real path: audio assets emit every N-th PCM frame
-    (`frame_value` = first-channel 16-bit amplitude, `offset` = frame
-    index); image assets emit every N-th pixel in row-major order
-    (`frame_value` = 0-255 luminance, `offset` = pixel index). With
-    fake=True the 'frame' is the raw byte at each sampled offset —
-    the stride parameter keeps its name from that original byte-level
-    semantics."""
-    frame_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("frame_no", T.LongType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("frame_value", T.LongType()),
-        ]
-    )
-    step = max(1, every_n_bytes)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                data = data or b""
-                if fake:
-                    for frame_no, off in enumerate(range(0, len(data), step)):
-                        rows.append((int(aid), frame_no, off, int(data[off])))
-                    continue
-                try:
-                    dec = codecs.decode_asset(data)
-                except (ValueError, struct_error):
-                    continue  # quarantine: no frames for bad assets
-                if isinstance(dec, DecodedImage):
-                    lum = dec.pixels.mean(axis=2).reshape(-1)
-                    vals = lum[::step]
-                else:
-                    pcm = np.clip(
-                        np.round(dec.samples[:, 0] * 32767.0), -32768, 32767
-                    )
-                    vals = pcm[::step]
-                for frame_no, v in enumerate(vals):
-                    rows.append((int(aid), frame_no, frame_no * step, int(v)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_no", "offset", "frame_value"]
-            )
-
-    return assets.mapInPandas(run, schema=frame_schema)
-
-
-def asset_stats(assets: DataFrame) -> DataFrame:
-    """Pure-JVM metadata pass (no decode): size/mime distribution.
-    This is the cheap pre-filter that runs BEFORE any decode at scale."""
-    return (
-        assets.select("mime", F.octet_length("data").cast("long").alias("n_bytes"))
-        .groupBy("mime")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.min("n_bytes").alias("min_bytes"),
-            F.max("n_bytes").alias("max_bytes"),
-        )
-    )
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("data", T.BinaryType()),
-        T.StructField("orig_bytes", T.LongType()),
-        T.StructField("resized_bytes", T.LongType()),
-    ]
-)
-
-
-def _resize_real(data: bytes, target_bytes: int) -> bytes:
-    """Shrink one decoded asset to approximately `target_bytes`,
-    re-encoded in its ORIGINAL container: images downscale by
-    nearest-neighbor on the pixel grid, audio decimates frames.
-    Already-small or undecodable assets pass through unchanged."""
-    if len(data) <= target_bytes:
-        return bytes(data)
-    try:
-        dec = codecs.decode_asset(data)
-    except (ValueError, struct_error):
-        return bytes(data)
-    if isinstance(dec, DecodedImage):
-        bytes_per_px = dec.channels  # 1 gray / 3 RGB, any container
-        budget_px = max(1, (target_bytes - 64) // bytes_per_px)
-        cur_px = dec.width * dec.height
-        if cur_px <= budget_px:
-            return bytes(data)
-        scale = (budget_px / cur_px) ** 0.5
-        nw = max(1, int(dec.width * scale))
-        nh = max(1, int(dec.height * scale))
-        ys = np.linspace(0, dec.height - 1, nh).round().astype(int)
-        xs = np.linspace(0, dec.width - 1, nw).round().astype(int)
-        dec.pixels = dec.pixels[ys][:, xs]
-        return codecs.encode_like(dec)
-    # audio: 16-bit frames; keep the same duration by decimation
-    frame_bytes = 2 * dec.channels
-    budget_frames = max(1, (target_bytes - 44) // frame_bytes)
-    if dec.n_frames <= budget_frames:
-        return bytes(data)
-    idx = np.linspace(0, dec.n_frames - 1, budget_frames).round().astype(int)
-    dec.samples = dec.samples[idx]
-    return codecs.encode_like(dec)
-
-
-def resize_assets(
-    assets: DataFrame, target_bytes: int = 256, fake: bool = False
-) -> DataFrame:
-    """Resize/transcode: binary in -> (smaller) binary out, with
-    before/after sizes as typed metadata. Real path: nearest-neighbor
-    pixel-grid downscale for BMP/PPM/PGM, frame decimation for WAV,
-    re-encoded in the same container so the output remains a valid
-    decodable asset (round-trip tested). The fake path STRIDES raw
-    bytes (content-dependent but not format-aware). Arrow-batched
-    mapInPandas, binary-safe both directions."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def shrink(d):
-            d = d or b""
-            if not fake:
-                return _resize_real(d, target_bytes)
-            if len(d) <= target_bytes:
-                return bytes(d)
-            step = max(1, len(d) // target_bytes)
-            return bytes(d[::step][:target_bytes])
-
-        for pdf in batches:
-            resized = pdf["data"].map(shrink)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "mime": pdf["mime"],
-                    "data": resized,
-                    "orig_bytes": pdf["data"].map(
-                        lambda d: len(d) if d is not None else 0
-                    ),
-                    "resized_bytes": resized.map(len),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=RESIZE_SCHEMA)

@@ -130,108 +130,6 @@ def _local_union_find(und: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_alternating(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_rounds: int = 30,
-    reliable_every: int = 0,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") — the scale path for HIGH-DIAMETER graphs, where the
-    min-label loop in `connected_components` needs diameter-many
-    rounds (a 10M-hop chain would take 10M shuffles) but star
-    contraction converges in O(log^2 n) rounds regardless of shape:
-
-    * large-star: every node u links each LARGER neighbor to the
-      minimum of its neighborhood (incl. itself)
-    * small-star: every node u links each neighbor <= u, and itself,
-      to that minimum
-
-    Both steps are one symmetric groupBy + join (hash, map-side
-    combinable); each halves tree heights roughly geometrically, and
-    the fixed point is a star per component centered at its minimum
-    id. localCheckpoint bounds lineage per round; convergence is an
-    edge-set checksum (count + xor of pair hashes — two scalar
-    aggregates), no driver-side edge collection.
-
-    Returns (v, component_id) for every vertex with at least one
-    edge, identical to `connected_components` (equality-tested on
-    random and path graphs). ``reliable_every=N`` makes every Nth
-    round's small-star output a durable checkpoint (bounded replay
-    after executor loss; bit-identical output).
-    """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def neighborhoods(cur: DataFrame) -> DataFrame:
-        return cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def star(cur: DataFrame, large: bool, ck=None) -> DataFrame:
-        nb = neighborhoods(cur)
-        mins = nb.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        joined = nb.join(mins, "u")
-        if large:
-            linked = joined.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("u"), F.col("m").alias("v")
-            )
-        else:
-            linked = (
-                joined.filter(F.col("v") <= F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(joined.select("u", F.col("m").alias("v")))
-            )
-        out = linked.filter(F.col("u") != F.col("v")).distinct()
-        return ck(out) if ck else out.localCheckpoint(eager=True)
-
-    from crane_spark.operators.caching import (
-        loop_checkpoint,
-        release_local_checkpoint,
-    )
-
-    prev_sig = None
-    converged = False
-    for rnd in range(1, max_rounds + 1):
-        mid = star(e, large=True)
-        # the small-star output is the round's durable state
-        nxt = star(mid, large=False, ck=lambda d: loop_checkpoint(d, rnd, reliable_every))
-        # both inputs of this round are superseded once `nxt` is
-        # stored — free them now instead of stacking two copies per
-        # round until a driver GC runs (ADVICE r3 pattern)
-        release_local_checkpoint(mid)
-        release_local_checkpoint(e)
-        e = nxt
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        # An unconverged edge set means the stars are not yet flat and
-        # the labels below could be WRONG (two labels for one true
-        # component). An iterative operator must fail loudly, not
-        # return silently-truncated results.
-        raise RuntimeError(
-            f"connected_components_alternating did not reach a fixed "
-            f"point in max_rounds={max_rounds} (O(log^2 n) expected; "
-            f"raise max_rounds)"
-        )
-    return neighborhoods(e).groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("component_id")
-    ).select(F.col("u").alias("v"), "component_id")
-
-
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Enumerate triangles (a,b,c) of an undirected graph given as
     CANONICAL edges (src < dst): each triangle appears exactly once as
@@ -248,68 +146,3 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     e2 = edges.select(F.col(src).alias("b"), F.col(dst).alias("c"))
     e3 = edges.select(F.col(src).alias("a"), F.col(dst).alias("c"))
     return e1.join(e2, "b").join(e3, ["a", "c"]).select("a", "b", "c")
-
-
-def label_propagation(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    vertex_col: str = "v",
-    label_col: str = "label",
-    n_rounds: int = 5,
-    reliable_every: int = 0,
-) -> DataFrame:
-    """Semi-supervised label propagation: seed vertices carry fixed
-    labels; every round, each unlabeled vertex takes the majority
-    label among its labeled neighbors (ties -> smallest label, so the
-    result is deterministic on any cluster/partitioning). Returns
-    (v, label, round_assigned); vertices never reached keep no row.
-
-    Each round is one join (edges x current labels) and one majority
-    aggregate — the degree-weighted shuffle an iterative Pregel step
-    costs, with localCheckpoint bounding lineage like the k-means and
-    PageRank loops. Seeds are immutable: propagation never overwrites
-    a seed (the CASE keeps the fixed point stable).
-    """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = seeds.select(
-        F.col(vertex_col).alias("v"),
-        F.col(label_col).alias("label"),
-        F.lit(0).alias("round_assigned"),
-        F.lit(True).alias("is_seed"),
-    ).localCheckpoint(eager=True)
-    for rnd in range(1, n_rounds + 1):
-        # labeled neighbors vote; majority with smallest-label tiebreak
-        votes = (
-            und.join(labels.select(F.col("v").alias("s"), "label"), "s")
-            .groupBy(F.col("t").alias("v"), "label")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        majority = (
-            votes.groupBy("v")
-            .agg(
-                F.max_by(
-                    "label", F.struct(F.col("n"), (-F.col("label")).alias("nl"))
-                ).alias("new_label")
-            )
-            .select("v", "new_label")
-        )
-        labels = (
-            majority.join(labels, "v", "full_outer")
-            .select(
-                "v",
-                F.coalesce("label", "new_label").alias("label"),
-                F.coalesce("round_assigned", F.lit(rnd)).alias("round_assigned"),
-                F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
-            )
-        )
-        from crane_spark.operators.caching import loop_checkpoint
-
-        labels = loop_checkpoint(labels, rnd, reliable_every)
-    return labels.select("v", "label", "round_assigned")

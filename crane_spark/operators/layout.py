@@ -15,27 +15,19 @@ splits over k dimensions, each split covers roughly a
 ``files**(-1/k)`` fraction of each dimension's range instead of one
 dimension at ``1/files`` and the rest at ``1``.
 
-Division of labor with :mod:`crane_spark.sources.sinks`:
-``sinks.write_zordered`` is the WRITE-SIDE consumer (double-normalized
-bitwise key, range-partitioned + sorted output; pruning proven from
-real footer statistics in tests/test_storage.py and
-tests/test_layout.py). This module holds the INTEGER-EXACT key: flat
-div/mod arithmetic over uniform bucket ranks, no bit intrinsics, so
-the exact same formula is expressible in ANSI SQL and the layout math
-is differentially verifiable against DuckDB bit for bit
-(queries/layout.zorder_locality). Same curve, two normalizations —
-the exact one exists to be testable, the writer's to be cheap.
+This module holds the one Morton key in the package: flat div/mod
+arithmetic over uniform bucket ranks, no bit intrinsics, so the same
+formula is expressible in ANSI SQL and the layout math is
+differentially verifiable against DuckDB bit for bit
+(queries/layout.zorder_locality). Callers bucket each dimension with
+:func:`uniform_bucket_expr` and interleave the ranks with
+:func:`morton_expr`.
 
 Beyond-reference extension: the reference engine has no layout
 optimizer; this is part of the 100 TB data-pipeline surface.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-_INTEGRAL = ("tinyint", "smallint", "int", "bigint", "long")
 
 
 def morton_expr(bucket_cols: list[str], bits: int, div: str = "div") -> str:
@@ -75,58 +67,3 @@ def uniform_bucket_expr(
     cap), degenerate single-value ranges land in bucket 0. Operands
     must already be BIGINT to keep the multiply exact."""
     return f"((({col} - {mn}) * {buckets}) {div} ({mx} - {mn} + 1))"
-
-
-def zorder_key(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    extents: dict[str, tuple] | None = None,
-    out: str = "_z",
-) -> DataFrame:
-    """Add a Z-order key column interleaving ``bits`` bits per
-    dimension. ``extents`` maps col -> (min, max); when absent they
-    are computed in ONE aggregate job over ``df`` (pass them to keep
-    construction lazy, e.g. from table statistics). Integral columns
-    use exact integer bucketing; fractional columns bucket through
-    double arithmetic with a top-bucket cap. NULL dimension values
-    land in bucket 0 (NULLS-FIRST placement) instead of propagating
-    to a NULL key that would sort the row unplaced (ADVICE r6);
-    ``bits * len(cols)`` > 62 raises in :func:`morton_expr` before
-    any weight can exceed BIGINT."""
-    if len(cols) < 2:
-        raise ValueError("zorder needs >= 2 columns (sort the one column instead)")
-    if extents is None:
-        row = df.agg(
-            *[F.min(c).alias(f"_mn_{c}") for c in cols],
-            *[F.max(c).alias(f"_mx_{c}") for c in cols],
-        ).first()
-        extents = {c: (row[f"_mn_{c}"], row[f"_mx_{c}"]) for c in cols}
-    b = 1 << bits
-    dtypes = dict(df.dtypes)
-    d = df
-    bcols = []
-    for c in cols:
-        mn, mx = extents[c]
-        if mn is None:  # empty input: any constant key is fine
-            expr = F.lit(0)
-        elif dtypes[c] in _INTEGRAL:
-            expr = F.expr(
-                uniform_bucket_expr(
-                    f"CAST({c} AS BIGINT)", str(int(mn)), str(int(mx)), b
-                )
-            )
-        else:
-            span = float(mx) - float(mn)
-            if span <= 0:
-                expr = F.lit(0)
-            else:
-                expr = F.least(
-                    F.lit(b - 1),
-                    F.floor((F.col(c) - F.lit(float(mn))) * b / F.lit(span)),
-                )
-        bc = f"_zb_{c}"
-        d = d.withColumn(bc, F.coalesce(expr.cast("long"), F.lit(0)))
-        bcols.append(bc)
-    d = d.withColumn(out, F.expr(morton_expr(bcols, bits)))
-    return d.drop(*bcols)

@@ -998,7 +998,7 @@ def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global key count and the Herfindahl concentration index
     (sum of squared shares; 1/n_keys when uniform, ->1 when one key
     dominates). This is the report that decides between plain
-    hash-partitioning, salting (operators/skew.py), and AQE skew-join
+    hash-partitioning, key salting, and AQE skew-join
     before a 100 TB shuffle — computed from one key-sized aggregate
     (map-side combined) with every statistic derived from exact
     integer counts."""

@@ -114,110 +114,3 @@ def pagerank_edges_from_tsv(
         )
         .filter(F.col("dst") != "")
     )
-
-
-def read_binary_assets(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    streaming: bool = False,
-) -> DataFrame:
-    """Raw media files as a multimodal asset table via the built-in
-    ``binaryFile`` source — the ingestion edge for image/audio/video
-    blobs (decode itself is the stubbed step, llm/multimodal.py).
-
-    Output matches the asset-column convention:
-    ``asset_id`` (stable 64-bit hash of the file path), ``data``
-    (binary payload), ``mime`` (from the extension), ``path``,
-    ``length``. The source prunes columns: a query that never touches
-    ``data`` (e.g. a size audit) reads file metadata only, no blob
-    I/O. At 100 TB, payload partition sizing is governed by
-    ``spark.sql.files.maxPartitionBytes``; files never split, so one
-    asset always lands whole in one task.
-    """
-    # binaryFile's schema is fixed by the source; file streams always
-    # need it stated up front.
-    binary_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    reader = (
-        spark.readStream.format("binaryFile").schema(binary_schema)
-        if streaming
-        else spark.read.format("binaryFile")
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    mime = (
-        F.when(ext.isin("jpg", "jpeg"), "image/jpeg")
-        .when(ext == "png", "image/png")
-        .when(ext == "wav", "audio/wav")
-        .when(ext == "mp4", "video/mp4")
-        .otherwise(F.concat(F.lit("application/"), ext))
-    )
-    return df.select(
-        F.xxhash64("path").alias("asset_id"),
-        F.col("content").alias("data"),
-        mime.alias("mime"),
-        "path",
-        "length",
-    )
-
-
-def read_parquet_evolved(
-    spark: SparkSession, *paths: str, streaming: bool = False
-) -> DataFrame:
-    """Read parquet written under an EVOLVING schema as one DataFrame
-    with the union schema (``mergeSchema``): columns added by later
-    writers appear as nulls in older files, reordered columns align by
-    name, and the scan still prunes/pushes down per file.
-
-    At 100 TB a table accretes schema versions for years; requiring a
-    full rewrite per added column is a non-starter, so additive
-    evolution must be a READ-side property. Schema merging is exactly
-    that — footer-only union at planning time, no data pass. (The
-    reference is schema-less by construction — a tuple's payload is
-    whatever a bolt emits, util.py:41-44 — so evolution "worked" there
-    by positional convention; here it works with real types.)
-
-    ``streaming=True`` returns the readStream twin pinned to the same
-    merged schema (streaming sources need an explicit schema).
-    """
-    merged = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if not streaming:
-        return merged
-    # readStream.parquet takes exactly one directory; silently reading
-    # only paths[0] would drop the rest of a multi-path request, so
-    # refuse loudly. Callers with several roots should point the stream
-    # at a common parent directory or union per-path streams.
-    if len(paths) != 1:
-        raise ValueError(
-            "read_parquet_evolved(streaming=True) supports exactly one "
-            f"path (got {len(paths)}); stream a common parent directory "
-            "or union one stream per path"
-        )
-    return (
-        spark.readStream.schema(merged.schema)
-        .option("mergeSchema", "true")
-        .parquet(paths[0])
-    )
-
-
-def union_evolved(*frames: DataFrame) -> DataFrame:
-    """Multiset union of frames with ADDITIVELY different schemas:
-    align columns by NAME (never position) and fill columns missing on
-    either side with nulls — the DataFrame-level counterpart of
-    ``read_parquet_evolved`` for sources that were read separately
-    (different formats, different stores, a migration boundary).
-    Column order follows the first frame, then first-appearance of
-    added columns, so the output schema is deterministic."""
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql.datasource import (
@@ -31,6 +32,11 @@ from pyspark.sql.datasource import (
     DataSourceWriter,
     WriterCommitMessage,
 )
+
+
+# Committed manifests only: the batch write's ``_MANIFEST.json`` and one
+# ``_MANIFEST-{batchId}.json`` per micro-batch.
+_MANIFEST_RE = re.compile(r"_MANIFEST(?:-(\d+))?\.json")
 
 
 class _FileDone(WriterCommitMessage):
@@ -54,12 +60,17 @@ def _write_partition(path: str, prefix: str, iterator) -> _FileDone:
 
 
 def _commit_manifest(path: str, name: str, messages) -> None:
+    """Publish a manifest atomically: write it under a temporary name
+    that :data:`_MANIFEST_RE` rejects, then rename it into place, so a
+    crash mid-write leaves a torn temp file readers never parse."""
     manifest = {
         "files": sorted(m.rel_path for m in messages if m is not None),
         "rows": sum(m.n_rows for m in messages if m is not None),
     }
-    with open(os.path.join(path, name), "w", encoding="utf-8") as fh:
+    tmp = os.path.join(path, f".{name}.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(manifest, fh)
+    os.replace(tmp, os.path.join(path, name))
 
 
 class CraneSinkWriter(DataSourceWriter):
@@ -103,11 +114,19 @@ class CraneSinkDataSource(DataSource):
 
 
 def read_crane_sink(path: str) -> dict[str, str]:
-    """Read back committed ``key --- value`` output (manifest-gated)."""
+    """Read back committed ``key --- value`` output (manifest-gated).
+
+    Manifests apply in commit order — the batch-write ``_MANIFEST.json``
+    first, then ``_MANIFEST-{batchId}.json`` by NUMERIC batch id — so a
+    key rewritten by a later micro-batch ends at its latest value
+    (name order would put batch 10 before batch 2)."""
+    manifests = []
+    for name in os.listdir(path):
+        m = _MANIFEST_RE.fullmatch(name)
+        if m:
+            manifests.append((int(m.group(1) or -1), name))
     out: dict[str, str] = {}
-    for name in sorted(os.listdir(path)):
-        if not name.startswith("_MANIFEST"):
-            continue
+    for _, name in sorted(manifests):
         with open(os.path.join(path, name), encoding="utf-8") as fh:
             for rel in json.load(fh)["files"]:
                 with open(os.path.join(path, rel), encoding="utf-8") as part:

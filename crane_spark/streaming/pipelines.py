@@ -222,49 +222,6 @@ def run_available_now(
             query.stop()
 
 
-def stream_stream_outer_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    watermark: str = "10 minutes",
-    within: str = "30 minutes",
-    how: str = "leftOuter",
-) -> DataFrame:
-    """Watermarked stream-stream OUTER join (left or full): matched
-    pairs emit like the inner join; an unmatched row emits once with
-    nulls — but only after the watermark passes its join bound (before
-    that, a match could still arrive), which is why outer results
-    trail the data by watermark + within. Both the time-bound and the
-    watermark are mandatory here: they are what lets Spark ever
-    declare a row unmatchable and evict it. ``how="fullOuter"`` adds
-    the symmetric right-side null emission."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {within}"))
-    )
-    return lw.join(rw, cond, how)
-
-
-def stream_dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """dropDuplicatesWithinWatermark: dedup on business keys ALONE
-    (no timestamp in the key — two occurrences with different event
-    times still collapse), with state evicted once the watermark
-    passes. This is the at-least-once-source cleaner: a replayed event
-    whose retry carries a slightly different timestamp would survive
-    plain dropDuplicates(keys + ts) but is removed here."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def stream_incremental_ingest(
     docs: DataFrame,
     store_path: str,

@@ -111,185 +111,3 @@ def running_totals(
             ),
         )
     )
-
-
-# --------------------------------------------------------------------
-# Spark 4 arbitrary-state API (transformWithStateInPandas)
-# --------------------------------------------------------------------
-
-def _has_tws_runtime() -> bool:
-    """transformWithStateInPandas talks to the state store over a
-    protobuf channel; the worker crashes without google.protobuf.
-    Gate so environments without it fall back to
-    applyInPandasWithState (running_totals above)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_totals_tws(
-    stream: DataFrame,
-    key_col: str,
-    value_col: str,
-    idle_ttl_sec: int | None = None,
-) -> DataFrame:
-    """`running_totals` on the Spark 4 arbitrary-state API
-    (transformWithStateInPandas + ValueState): same semantics, but the
-    processor can hold multiple named state variables (value/list/map),
-    register timers, and evolve state schema — the long-term home for
-    custom stateful operators.
-
-    ``idle_ttl_sec`` opts into bounded state on grow-forever key
-    spaces, mirroring `running_totals`'s knob but via the API's NATIVE
-    state TTL (``getValueState(..., ttlDurationMs=...)``): the store
-    itself expires entries not updated within the TTL — no timer
-    bookkeeping in the processor, and expiry happens store-side even
-    for keys whose partitions see no new input (the
-    processing-time-timeout pattern only fires timers when a batch
-    runs). An expired key that reappears restarts from zero, the same
-    semantics as `running_totals(idle_ttl_sec=...)` minus the final
-    eviction row (the native TTL drops state silently).
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — which is also the right
-    store at 100 TB: state spills to local SST files + changelog
-    checkpointing instead of living on the JVM heap.
-    """
-    if not _has_tws_runtime():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which "
-            "is not installed in this environment; use running_totals()."
-        )
-
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals",
-                RUNNING_STATE,
-                ttlDurationMs=(
-                    idle_ttl_sec * 1000 if idle_ttl_sec is not None else None
-                ),
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            count, total = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                count += len(pdf)
-                total += float(pdf["v"].sum())
-            self._totals.update((count, total))
-            yield pd.DataFrame(
-                {"key": [key[0]], "running_count": [count], "running_sum": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.selectExpr(f"CAST({key_col} AS STRING) AS key", f"{value_col} AS v")
-        .groupBy("key")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=RUNNING_OUTPUT,
-            outputMode="Update",
-            # state TTL is processing-time-based: the API requires the
-            # matching time mode whenever a TTL is configured
-            timeMode="None" if idle_ttl_sec is None else "ProcessingTime",
-        )
-    )
-
-
-# --------------------------------------------------------------------
-# Timer-driven session finalization (event-time timeout)
-# --------------------------------------------------------------------
-
-SESSION_OUTPUT = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-# epoch microseconds — integers survive the state store exactly
-SESSION_STATE = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def finalized_sessions(
-    stream: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Sessions emitted ONLY when they end — the timer pattern the
-    built-in session_window cannot express in update-free sinks: state
-    accumulates (start, last, count) per key, every input re-arms an
-    EVENT-TIME timeout at last_ts + gap, and when the watermark passes
-    it the handler fires with ``state.hasTimedOut``, emits the single
-    finalized session row, and removes the state. Emission is
-    append-mode (each session exactly once), which is what downstream
-    training-data jobs want: closed sessions, no retractions.
-
-    This is the Spark analog of Crane's run-to-completion batch close
-    (crane_master.py:58-61) generalized to per-key completion under
-    continuous input. State per key is 3 longs — millions of live
-    sessions fit one executor; RocksDB state store at production scale.
-    """
-    import datetime as _dt
-
-    gap_ms = gap_minutes * 60 * 1000
-
-    def update(key, batches, state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "session_start": [
-                        _dt.datetime.utcfromtimestamp(start_us / 1e6)
-                    ],
-                    "session_end": [_dt.datetime.utcfromtimestamp(last_us / 1e6)],
-                    "n_events": [n],
-                }
-            )
-            return
-        start_us, last_us, n = state.get if state.exists else (None, None, 0)
-        for pdf in batches:
-            ts_us = pdf["ts"].astype("int64")  # datetime64[ns] -> ns; see below
-            # pandas stores ns since epoch; convert to us exactly
-            ts_us = ts_us // 1000
-            lo, hi = int(ts_us.min()), int(ts_us.max())
-            start_us = lo if start_us is None else min(start_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-            n += len(pdf)
-        state.update((start_us, last_us, n))
-        state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
-
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .selectExpr(f"CAST({key_col} AS STRING) AS key", f"{ts_col} AS ts")
-        .groupBy("key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_OUTPUT,
-            stateStructType=SESSION_STATE,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    )

@@ -192,60 +192,6 @@ def test_real_feature_extraction(spark):
     assert out[4]["feature"] is None  # quarantined
 
 
-def test_real_frame_sampling_audio_and_image(spark):
-    from crane_spark.llm.multimodal import sample_frames
-
-    df, img, gray, audio = _real_assets(spark)
-    frames = sample_frames(df, every_n_bytes=100, fake=False).collect()
-    per = {}
-    for r in frames:
-        per.setdefault(r["asset_id"], []).append(r)
-    # audio: 400 frames, stride 100 -> 4 frames with true amplitudes
-    aud = sorted(per[3], key=lambda r: r["frame_no"])
-    assert [r["offset"] for r in aud] == [0, 100, 200, 300]
-    expect = np.clip(np.round(audio[::100] * 32767.0), -32768, 32767)
-    assert [r["frame_value"] for r in aud] == [int(v) for v in expect]
-    # image: 64 pixels, stride 100 -> single frame = first pixel lum
-    assert len(per[0]) == 1
-    assert per[0][0]["frame_value"] == int(img[0, 0].astype(np.float64).mean())
-    assert 4 not in per  # undecodable -> zero frames
-
-
-def test_real_resize_images_and_audio(spark):
-    from crane_spark.llm.multimodal import resize_assets
-
-    img = rng_pixels(64, 64, seed=11)
-    t = np.linspace(0, 1, 4000, endpoint=False)
-    audio = 0.5 * np.sin(2 * np.pi * 100 * t)
-    rows = [
-        (0, bytearray(codecs.encode_bmp(img)), "image/bmp"),
-        (1, bytearray(codecs.encode_ppm(img)), "image/x-portable-pixmap"),
-        (2, bytearray(stdlib_wav(audio, 8000)), "audio/wav"),
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, data binary, mime string")
-    out = {r["asset_id"]: r for r in resize_assets(df, 1200, fake=False).collect()}
-
-    for aid, fmt in ((0, "bmp"), (1, "ppm")):
-        r = out[aid]
-        assert r["resized_bytes"] < r["orig_bytes"]
-        dec = codecs.decode_asset(bytes(r["data"]))  # output still valid
-        assert dec.fmt == fmt
-        assert dec.width < 64 and dec.height < 64
-        assert dec.width * dec.height * 3 <= 1200  # inside pixel budget
-        # nearest-neighbor: every output pixel exists in the source
-        src = {tuple(p) for p in img.reshape(-1, 3)}
-        assert all(tuple(p) in src for p in dec.pixels.reshape(-1, 3))
-
-    r = out[2]
-    assert r["resized_bytes"] <= 1200
-    dec = codecs.decode_asset(bytes(r["data"]))
-    assert dec.fmt == "wav" and dec.sample_rate == 8000
-    assert dec.n_frames == (1200 - 44) // 2
-    # decimation keeps true sample values (within 16-bit quantization)
-    idx = np.linspace(0, 3999, dec.n_frames).round().astype(int)
-    assert np.allclose(dec.samples[:, 0], audio[idx], atol=2.5 / 32768)
-
-
 # ------------------------------------------------------------------
 # property-based fuzzing (hypothesis): roundtrips over arbitrary
 # shapes/values, and decoder robustness against mutated bytes

@@ -100,37 +100,6 @@ def test_connected_components_chain_and_islands(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-def test_alternating_star_components_match_union_find(spark):
-    """The log-round large-star/small-star contraction must agree with
-    the union-find result on a HIGH-DIAMETER graph (a 200-hop path,
-    where min-label propagation would need 200 rounds) plus islands
-    and a cycle — and converge in far fewer than diameter rounds."""
-    import random
-
-    from crane_spark.operators.graph import (
-        connected_components,
-        connected_components_alternating,
-    )
-
-    path = [(i, i + 1) for i in range(200)]
-    extra = [(500, 501), (501, 502), (502, 500), (900, 901)]
-    rng = random.Random(7)
-    rand = [(1000 + rng.randrange(50), 1000 + rng.randrange(50)) for _ in range(60)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in path + extra + rand if a != b], "doc_a long, doc_b long"
-    )
-    alt = {
-        (r["v"], r["component_id"])
-        for r in connected_components_alternating(edges, max_rounds=12).collect()
-    }
-    ref = {
-        (r["v"], r["component_id"])
-        for r in connected_components(edges).collect()
-    }
-    assert alt == ref
-    assert (0, 0) in alt and all(c == 0 for v, c in alt if v <= 200)
-
-
 def test_dup_span_ranges_finds_shifted_passages_maximally(spark, tmp_path):
     """A 12-token passage shared at DIFFERENT offsets must come back
     as one maximal island per doc covering exactly the passage — the
@@ -151,25 +120,6 @@ def test_dup_span_ranges_finds_shifted_passages_maximally(spark, tmp_path):
         for r in REGISTRY["dup_span_ranges"].fn(spark, sf).collect()
     }
     assert out == {(1, 3, 15, 5), (2, 0, 12, 5)}
-
-
-def test_alternating_components_raises_when_unconverged(spark):
-    """Exhausting max_rounds without a fixed point must raise (an
-    iterative operator may never return silently-wrong labels —
-    round-1 ADVICE item, fixed in round 2)."""
-    import pytest
-
-    from crane_spark.operators.graph import connected_components_alternating
-
-    # a path graph long enough that 1 round cannot flatten it
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="fixed point"):
-        connected_components_alternating(edges, max_rounds=1)
-    # and with enough rounds the same input converges fine
-    out = connected_components_alternating(edges, max_rounds=30)
-    assert out.select("component_id").distinct().count() == 1
 
 
 def test_dup_span_ranges_skew_safe_regime_identical(spark, tmp_path):

@@ -1,19 +1,13 @@
-"""Z-order layout: Morton key correctness against a Python reference
-(the integer-exact operators/layout key the zorder_locality oracle
-query is built on), and the point of the whole exercise — a measured
-pruning proof from real parquet footer statistics: the same box
-predicate intersects several-fold fewer row groups in a Z-ordered
-file set (sinks.write_zordered) than in a single-column-range file
-set."""
+"""Z-order layout: the Morton key in operators/layout (the one the
+zorder_locality oracle query is built on) against a pure-Python
+bit-twiddled reference, and its BIGINT bit-budget guard."""
 
 from __future__ import annotations
 
-import os
-
+import pytest
 from pyspark.sql import functions as F
 
-from crane_spark.operators.layout import zorder_key
-from crane_spark.sources.sinks import write_zordered
+from crane_spark.operators.layout import morton_expr
 
 
 def _py_morton(vals: list[int], bits: int) -> int:
@@ -26,146 +20,31 @@ def _py_morton(vals: list[int], bits: int) -> int:
 
 
 def test_morton_key_matches_python_reference(spark):
-    """With extents exactly spanning 0..2**bits-1 the bucket rank IS
-    the value, so the generated interleave polynomial must equal the
-    bit-twiddled Python Morton code for every (a, b) pair."""
+    """The generated interleave polynomial must equal the bit-twiddled
+    Python Morton code for every (a, b) pair on a 4-bit grid, and keep
+    dimension 0 most significant for k=3."""
     bits = 4
     rows = spark.range(256).select(
         (F.col("id") % 16).alias("a"), (F.col("id") / 16).cast("long").alias("b")
     )
-    out = zorder_key(
-        rows, ["a", "b"], bits=bits, extents={"a": (0, 15), "b": (0, 15)}
-    ).collect()
+    out = rows.withColumn("_z", F.expr(morton_expr(["a", "b"], bits))).collect()
+    assert len(out) == 256
     for r in out:
         assert r["_z"] == _py_morton([r["a"], r["b"]], bits), (r["a"], r["b"])
 
-
-def test_morton_key_three_dims_and_float_bucketing(spark):
-    """k=3 interleave keeps dimension 0 most significant; fractional
-    columns bucket through the capped double path (the max value must
-    land in the top bucket, not one past it)."""
-    rows = spark.createDataFrame(
-        [(3, 1, 0.0), (3, 1, 1.0), (0, 2, 0.5)], "a long, b long, x double"
+    triples = spark.createDataFrame(
+        [(3, 1, 0), (3, 1, 3), (0, 2, 2)], "a long, b long, c long"
     )
-    out = {
-        (r["a"], r["b"], r["x"]): r["_z"]
-        for r in zorder_key(
-            rows,
-            ["a", "b", "x"],
-            bits=2,
-            extents={"a": (0, 3), "b": (0, 3), "x": (0.0, 1.0)},
-        ).collect()
-    }
-    # x buckets: 0.0 -> 0, 1.0 -> capped 3, 0.5 -> 2
-    assert out[(3, 1, 0.0)] == _py_morton([3, 1, 0], 2)
-    assert out[(3, 1, 1.0)] == _py_morton([3, 1, 3], 2)
-    assert out[(0, 2, 0.5)] == _py_morton([0, 2, 2], 2)
+    for r in triples.withColumn(
+        "_z", F.expr(morton_expr(["a", "b", "c"], 2))
+    ).collect():
+        assert r["_z"] == _py_morton([r["a"], r["b"], r["c"]], 2), r
 
 
-def _rowgroup_stats(path: str, col: str) -> list[tuple[int, int]]:
-    """(min, max) of ``col`` for every row group of every part file."""
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in sorted(os.listdir(path)):
-        if not f.endswith(".parquet"):
-            continue
-        pf = pq.ParquetFile(os.path.join(path, f))
-        idx = pf.schema_arrow.get_field_index(col)
-        for i in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(i).column(idx).statistics
-            spans.append((st.min, st.max))
-    return spans
-
-
-def test_zorder_write_prunes_rowgroups_on_the_second_dimension(spark, tmp_path):
-    """The measured claim behind the operator: a box predicate on the
-    dimension a single-column layout ignores intersects (and therefore
-    reads) several-fold fewer row groups under Z-order. Uses real
-    footer min/max statistics — the same metadata the parquet reader
-    prunes with."""
-    n = 240_000
-    files = 64  # ~8x8 grid of (a, b) tiles under a 16-bit z key
-    df = spark.range(n).select(
-        ((F.col("id") * 7919) % 100_000).alias("a"),
-        ((F.col("id") * 104_729) % 100_000).alias("b"),
-    )
-    naive, zord = str(tmp_path / "naive"), str(tmp_path / "zord")
-    df.repartitionByRange(files, "a").sortWithinPartitions("a").write.parquet(naive)
-    write_zordered(df, zord, ["a", "b"], n_files=files)
-
-    lo, hi = 40_000, 45_000  # 5% slice of b's range
-    naive_hit = sum(1 for mn, mx in _rowgroup_stats(naive, "b") if mx >= lo and mn < hi)
-    naive_all = len(_rowgroup_stats(naive, "b"))
-    z_hit = sum(1 for mn, mx in _rowgroup_stats(zord, "b") if mx >= lo and mn < hi)
-    z_all = len(_rowgroup_stats(zord, "b"))
-    # single-column-range layout: every row group spans all of b
-    assert naive_hit == naive_all
-    # z-order: only the grid stripe(s) containing the slice intersect —
-    # expected ~1-2 tile rows of 8 (8-16 of 64); 3/8 leaves headroom
-    # for the range sampler's jittered file boundaries
-    assert z_hit * 8 <= z_all * 3, (z_hit, z_all, naive_hit, naive_all)
-    # and the FIRST dimension keeps working selectivity too: the same
-    # slice on `a` must not degrade to reading everything
-    a_hit = sum(1 for mn, mx in _rowgroup_stats(zord, "a") if mx >= lo and mn < hi)
-    assert a_hit * 8 <= z_all * 3, (a_hit, z_all)
-
-
-def test_zorder_write_round_trips_rows_and_schema(spark, tmp_path):
-    df = spark.range(5_000).select(
-        (F.col("id") % 97).alias("a"),
-        (F.col("id") % 89).alias("b"),
-        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
-    )
-    out = str(tmp_path / "zrt")
-    write_zordered(df, out, ["a", "b"], n_files=8)
-    back = spark.read.parquet(out)
-    assert back.columns == ["a", "b", "payload"]  # no layout-key leak
-    assert back.count() == 5_000
-    assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
-
-
-def test_zorder_write_degenerate_constant_dimension(spark, tmp_path):
-    """A constant dimension collapses to one grid coordinate (the
-    normalizer's zero-width guard, never a divide-by-zero) and the
-    write still produces the full row set."""
-    df = spark.range(2_000).select(
-        F.lit(5).cast("long").alias("a"), (F.col("id") % 100).alias("b")
-    )
-    out = str(tmp_path / "zconst")
-    write_zordered(df, out, ["a", "b"], n_files=4)
-    assert spark.read.parquet(out).count() == 2_000
-
-
-def test_morton_bit_budget_guard_and_null_buckets(spark):
+def test_morton_bit_budget_guard():
     """ADVICE r6: bit weights must never exceed BIGINT — bits*k > 62
-    raises up front; and NULL dimension values bucket to 0 (NULLS
-    FIRST placement) instead of nulling the whole Z key."""
-    import pytest
-
-    from crane_spark.operators.layout import morton_expr, zorder_key
-
+    raises up front instead of wrapping."""
     with pytest.raises(ValueError, match="62"):
         morton_expr([f"c{i}" for i in range(8)], bits=8)
     # 62 exactly is fine
     morton_expr(["a", "b"], bits=31)
-
-    df = spark.createDataFrame(
-        [(None, 5), (0, None), (None, None), (3, 7)], "x int, y int"
-    )
-    keyed = zorder_key(df, ["x", "y"], bits=2, extents={"x": (0, 3), "y": (0, 7)})
-    rows = {(r["x"], r["y"]): r["_z"] for r in keyed.collect()}
-    assert None not in rows.values()
-    assert rows[(None, None)] == 0  # both dims -> bucket 0
-    assert rows[(3, 7)] == 15  # full-scale corner unchanged
-
-
-def test_zorder_key_default_bits_guard(spark):
-    """Default bits=8 with >7 dims must fail loudly, not wrap."""
-    import pytest
-
-    from crane_spark.operators.layout import zorder_key
-
-    df = spark.range(4).selectExpr(*[f"id as c{i}" for i in range(8)])
-    with pytest.raises(ValueError, match="62"):
-        zorder_key(df, [f"c{i}" for i in range(8)], bits=8)

@@ -15,7 +15,7 @@ from crane_spark.llm import (
     ngram_jaccard_pairs,
     simhash_groups,
 )
-from crane_spark.llm.multimodal import asset_stats, extract_features, sample_frames
+from crane_spark.llm.multimodal import extract_features
 
 BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
 NEAR = BASE.replace("today", "tonight")  # one-token edit: near-dup
@@ -198,22 +198,6 @@ def test_multimodal_undecodable_assets_quarantine_not_crash(spark):
         extract_features(_assets(spark), fake=False, on_error="raise").collect()
 
 
-def test_multimodal_frame_sampling(spark):
-    frames = sample_frames(_assets(spark), every_n_bytes=16, fake=True).collect()
-    per_asset = {}
-    for r in frames:
-        per_asset.setdefault(r["asset_id"], []).append(r["offset"])
-    assert sorted(per_asset[0]) == [0, 16, 32]  # 40 bytes -> 3 frames
-    assert 2 not in per_asset  # empty asset -> no frames
-
-
-def test_multimodal_asset_stats(spark):
-    stats = {r["mime"]: r for r in asset_stats(_assets(spark)).collect()}
-    assert stats["image/png"]["n_assets"] == 2
-    assert stats["image/png"]["total_bytes"] == 40
-    assert stats["audio/wav"]["max_bytes"] == 5
-
-
 def test_chunks_cover_document_with_stride_overlap(spark, sf_dir):
     """Every token appears in at least one chunk; consecutive chunks
     overlap by chunk-stride tokens; reassembling the stride-aligned
@@ -330,28 +314,6 @@ def test_multimodal_features_feed_ann_store(spark):
     nearest = {r["query_id"]: r["neighbor_id"] for r in top1}
     assert nearest[0] == 1 and nearest[1] == 0
     assert nearest[2] == 3 and nearest[3] == 2
-
-
-def test_multimodal_resize_roundtrip(spark):
-    """Resize plumbing: binary in -> smaller binary out with typed
-    before/after metadata; small assets pass through untouched;
-    distinct inputs stay distinct. (fake=True byte-stride path; the
-    real codec path is covered in test_codecs.py.)"""
-    from crane_spark.llm.multimodal import resize_assets
-
-    rows = [
-        (1, "image/png", bytes(range(256)) * 8),   # 2048 B -> shrinks
-        (2, "image/png", b"tiny"),                  # under target -> kept
-        (3, "audio/wav", bytes([7]) * 2048),        # constant stream
-    ]
-    assets = spark.createDataFrame(rows, "asset_id long, mime string, data binary")
-    out = {r["asset_id"]: r for r in resize_assets(assets, 256, fake=True).collect()}
-    assert out[1]["orig_bytes"] == 2048 and out[1]["resized_bytes"] <= 256
-    assert bytes(out[2]["data"]) == b"tiny" and out[2]["resized_bytes"] == 4
-    assert bytes(out[1]["data"]) != bytes(out[3]["data"])
-    # real path: undecodable bytes pass through UNCHANGED (quarantine)
-    real = {r["asset_id"]: r for r in resize_assets(assets, 256, fake=False).collect()}
-    assert bytes(real[1]["data"]) == bytes(range(256)) * 8
 
 
 def test_kmeans_train_reduces_inertia(spark, sf_dir):

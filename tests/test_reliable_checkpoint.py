@@ -55,23 +55,6 @@ def test_pagerank_bit_identical_with_reliable_cadence(spark):
     assert base == rel  # exact float equality: identical plans, rows
 
 
-def test_cc_alternating_bit_identical_with_reliable_cadence(spark):
-    from crane_spark.operators.graph import connected_components_alternating
-
-    e = _edges(spark).withColumnRenamed("src", "doc_a").withColumnRenamed(
-        "dst", "doc_b"
-    )
-    base = sorted(
-        (r["v"], r["component_id"])
-        for r in connected_components_alternating(e).collect()
-    )
-    rel = sorted(
-        (r["v"], r["component_id"])
-        for r in connected_components_alternating(e, reliable_every=1).collect()
-    )
-    assert base == rel
-
-
 def test_kmeans_bit_identical_with_reliable_cadence(spark):
     from crane_spark.llm.similarity import kmeans_train
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crane_spark.functions.sketches import CMS_WIDTH, cms_build, cms_estimate, cms_merge
+from crane_spark.functions.sketches import CMS_WIDTH, cms_build, cms_estimate
 from crane_spark.functions.text import tokens
 from crane_spark.llm.dedup import drop_duplicate_spans
 from crane_spark.operators.bloom import build_bloom, filter_might_contain
@@ -59,24 +59,6 @@ def test_cms_estimate_bounds(spark, sf_dir):
     for row in joined:
         assert row["est_count"] >= row["exact"], row
         assert row["est_count"] <= row["exact"] + bound, row
-
-
-def test_cms_merge_equals_single_build(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-    whole = cms_build(tok, "token")
-    half_a = cms_build(tok.filter(F.col("doc_id") % 2 == 0), "token")
-    half_b = cms_build(tok.filter(F.col("doc_id") % 2 == 1), "token")
-    merged = cms_merge(half_a, half_b)
-    diff = (
-        whole.withColumnRenamed("cnt", "w")
-        .join(merged.withColumnRenamed("cnt", "m"), ["row", "bucket"], "full")
-        .filter(
-            F.coalesce(F.col("w"), F.lit(0)) != F.coalesce(F.col("m"), F.lit(0))
-        )
-        .count()
-    )
-    assert diff == 0
 
 
 def _mkdocs(spark, rows):

@@ -1,37 +1,12 @@
-"""Salted skew aggregation, applyInPandasWithState running totals,
-foreachBatch upsert sink, IVF-bucketed cosine near-dup."""
+"""applyInPandasWithState running totals, foreachBatch upsert sink,
+IVF-bucketed cosine near-dup."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from crane_spark.operators.skew import dsum_by, salted_groupby_sum, skewed_key_report
 from crane_spark.streaming.pipelines import stream_upsert_parquet
 from crane_spark.streaming.stateful import running_totals
-
-
-def _skewed(spark):
-    # 90% of rows share one key — the shape that melts a naive shuffle.
-    hot = [("hot", float(i % 7)) for i in range(900)]
-    cold = [(f"k{i % 37}", float(i % 5)) for i in range(100)]
-    return spark.createDataFrame(hot + cold, "key string, val double").repartition(8)
-
-
-def test_salted_groupby_equals_direct(spark):
-    df = _skewed(spark)
-    direct = {r["key"]: (r["value_sum"], r["n_rows"]) for r in dsum_by(df, "key", "val").collect()}
-    salted = {
-        r["key"]: (r["value_sum"], r["n_rows"])
-        for r in salted_groupby_sum(df, "key", "val").collect()
-    }
-    assert salted == direct
-    assert direct["hot"][1] == 900
-
-
-def test_skewed_key_report_flags_hot_key(spark):
-    top = skewed_key_report(_skewed(spark), "key", top=3).collect()
-    assert top[0]["key"] == "hot"
-    assert top[0]["share"] == 0.9
 
 
 def test_stateful_running_totals_across_batches(spark, tmp_path):
@@ -217,36 +192,3 @@ def test_cosine_near_dup_finds_planted_dups(spark):
     ).collect()
     assert {(r["vec_a"], r["vec_b"]) for r in pairs} == {(10, 11)}
     assert pairs[0]["cosine"] > 0.99
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 arbitrary-state API twin of running_totals. The TWS
-    protobuf runtime isn't installed here, so this exercises the
-    gate; with protobuf present the body matches the
-    applyInPandasWithState test above."""
-    import pytest
-
-    from crane_spark.streaming.stateful import _has_tws_runtime, running_totals_tws
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame([("a", 1.0)], "k string, v double").write.parquet(src)
-    stream = spark.readStream.schema("k string, v double").parquet(src)
-    if not _has_tws_runtime():
-        with pytest.raises(NotImplementedError):
-            running_totals_tws(stream, "k", "v")
-        # the r7 idle-TTL knob goes through the same gate
-        with pytest.raises(NotImplementedError):
-            running_totals_tws(stream, "k", "v", idle_ttl_sec=60)
-        return
-    out = running_totals_tws(stream, "k", "v")
-    q = (
-        out.writeStream.format("memory").queryName("tws_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r["key"]: (r["running_count"], r["running_sum"])
-            for r in spark.sql("select * from tws_totals").collect()}
-    assert rows["a"] == (1, 1.0)

@@ -88,63 +88,6 @@ def test_xml_roundtrip(spark, sf_dir, tmp_path):
     assert got == orig
 
 
-def test_binary_asset_source(spark, tmp_path):
-    """binaryFile ingestion -> asset schema -> stubbed multimodal
-    feature extraction end-to-end (SURVEY.md §2.2 multimodal edge)."""
-    from crane_spark.llm.multimodal import extract_features
-    from crane_spark.sources.files import read_binary_assets
-
-    payloads = {
-        "a.png": b"\x89PNG fake" * 40,
-        "b.jpg": b"\xff\xd8 fake jpeg" * 30,
-        "notes.txt": b"not media",
-    }
-    for name, data in payloads.items():
-        (tmp_path / name).write_bytes(data)
-
-    assets = read_binary_assets(spark, str(tmp_path), glob="*.{png,jpg}")
-    rows = {r["mime"]: r for r in assets.collect()}
-    assert set(rows) == {"image/png", "image/jpeg"}
-    assert rows["image/png"]["data"] == payloads["a.png"]
-    assert rows["image/png"]["length"] == len(payloads["a.png"])
-    assert all(r["asset_id"] is not None for r in rows.values())
-
-    # metadata-only projection must not read blob contents: the scan's
-    # ReadSchema should exclude `content`.
-    meta = read_binary_assets(spark, str(tmp_path)).select("path", "length")
-    scan_line = [
-        line
-        for line in meta._jdf.queryExecution().executedPlan().toString().splitlines()
-        if "FileScan" in line
-    ][0]
-    assert "content" not in scan_line
-
-    feats = extract_features(
-        assets.select("asset_id", "data", "mime"), fake=True
-    ).collect()
-    assert len(feats) == 2 and all(len(f["feature"]) == 4 for f in feats)
-    by_mime = {f["mime"]: f for f in feats}
-    assert by_mime["image/png"]["n_bytes"] == len(payloads["a.png"])
-
-
-def test_binary_asset_source_streaming(spark, tmp_path):
-    """The same binaryFile edge as an availableNow stream."""
-    from crane_spark.sources.files import read_binary_assets
-
-    (tmp_path / "x.wav").write_bytes(b"RIFF fake wav" * 10)
-    stream = read_binary_assets(spark, str(tmp_path), streaming=True)
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("bin_assets")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = spark.sql("select mime, length from bin_assets").collect()
-    assert [(r["mime"], r["length"]) for r in got] == [("audio/wav", 130)]
-
-
 def test_input_file_provenance(spark, tmp_path):
     """Ingest-time provenance tagging with input_file_name(): every
     row records which physical file produced it — the lineage column a
@@ -166,63 +109,6 @@ def test_input_file_provenance(spark, tmp_path):
     assert got == {"x": "src_a", "y": "src_a", "z": "src_b"}
     counts = {r["source"]: r["n"] for r in df.groupBy("source").agg(F.count("*").alias("n")).collect()}
     assert counts == {"src_a": 2, "src_b": 1}
-
-
-def test_parquet_schema_evolution_merge_and_union(spark, tmp_path):
-    """Additive schema evolution: later files add columns; mergeSchema
-    reads the union schema with nulls for pre-evolution files, and
-    union_evolved aligns separately-read frames by name."""
-    from crane_spark.sources.files import read_parquet_evolved, union_evolved
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], "id long, s string").write.parquet(p + "/d=1")
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, s string, score double"
-    ).write.parquet(p + "/d=2")
-    # reordered columns in a third writer: must align by name, not position
-    spark.createDataFrame(
-        [("c", 3, 1.5)], "s string, id long, score double"
-    ).write.parquet(p + "/d=3")
-
-    df = read_parquet_evolved(spark, p + "/d=1", p + "/d=2", p + "/d=3")
-    assert set(df.columns) == {"id", "s", "score"}
-    rows = {(r["id"], r["s"], r["score"]) for r in df.collect()}
-    assert rows == {(1, "a", None), (2, "b", 9.5), (3, "c", 1.5)}
-
-    # filter on an evolved column still prunes to a pushed filter
-    plan = df.filter("score > 2")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(score), GreaterThan(score,2.0)" in plan
-
-    a = spark.read.parquet(p + "/d=1")
-    b = spark.read.parquet(p + "/d=3")
-    u = union_evolved(a, b)
-    assert u.columns[:2] == ["id", "s"]  # first frame dictates prefix order
-    got = {(r["id"], r["s"], r["score"]) for r in u.collect()}
-    assert got == {(1, "a", None), (3, "c", 1.5)}
-
-
-def test_parquet_schema_evolution_streaming_twin(spark, tmp_path):
-    from crane_spark.sources.files import read_parquet_evolved
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], "id long, s string").write.parquet(p)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, s string, score double"
-    ).write.mode("append").parquet(p)
-    stream = read_parquet_evolved(spark, p, streaming=True)
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("evolved_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = {
-        (r["id"], r["s"], r["score"])
-        for r in spark.sql("select * from evolved_stream").collect()
-    }
-    assert rows == {(1, "a", None), (2, "b", 9.5)}
 
 
 def test_ignore_corrupt_parquet_files(spark, tmp_path):
@@ -284,18 +170,3 @@ def test_json_corrupt_record_capture(spark, tmp_path):
         assert bad == ["{this is not json}"]
     finally:
         df.unpersist()
-
-
-def test_evolved_streaming_read_rejects_multiple_paths(spark, tmp_path):
-    """readStream.parquet takes one directory; a multi-path streaming
-    request must fail loudly instead of silently reading only the
-    first path (the silent-truncation bug fixed in round 2)."""
-    import pytest
-
-    from crane_spark.sources.files import read_parquet_evolved
-
-    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-    spark.range(3).write.parquet(p1)
-    spark.range(3).write.parquet(p2)
-    with pytest.raises(ValueError, match="exactly one"):
-        read_parquet_evolved(spark, p1, p2, streaming=True)

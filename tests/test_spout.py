@@ -3,6 +3,8 @@ of a line file with 500-line micro-batches (reference ops A+B)."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -164,3 +166,69 @@ def test_crane_sink_stream_write(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert read_crane_sink(out) == {"alpha": "1", "beta": "2"}
+
+
+def test_crane_sink_replays_manifests_in_batch_order(spark, tmp_path):
+    """Twelve complete-mode micro-batches through crane_sink must read
+    back as the recount of all input: manifests apply in numeric
+    batch order, so batch 10 and 11 land after batch 2..9 (name order
+    would leave every key the last two batches touched stale)."""
+    from collections import Counter
+
+    from crane_spark.sources.sink_ds import CraneSinkDataSource, read_crane_sink
+    from crane_spark.streaming.pipelines import stream_wordcount
+
+    spark.dataSource.register(CraneSinkDataSource)
+    src = tmp_path / "src"
+    src.mkdir()
+    expected: Counter = Counter()
+    for i in range(12):
+        lines = ["common shared", f"only{i} common"] + ["shared"] * i
+        (src / f"part-{i:02d}.txt").write_text("\n".join(lines) + "\n")
+        expected.update(w for line in lines for w in line.split(" "))
+    out = str(tmp_path / "sink")
+    stream = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
+    q = (
+        stream_wordcount(stream)
+        .writeStream.format("crane_sink")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert not q.isActive
+    committed = [n for n in os.listdir(out) if n.startswith("_MANIFEST-")]
+    assert len(committed) == 12
+    assert read_crane_sink(out) == {k: str(v) for k, v in expected.items()}
+
+
+def test_crane_sink_ignores_torn_temporary_manifest(tmp_path, monkeypatch):
+    """A commit that dies between writing its manifest and renaming it
+    into place leaves only a temporary file; readers must skip it (and
+    any other non-manifest name) and return the committed batches."""
+    from crane_spark.sources import sink_ds
+
+    out = tmp_path / "sink"
+    out.mkdir()
+    (out / "part-a.txt").write_text("alpha --- 1\n")
+    (out / "part-b.txt").write_text("alpha --- 2\nbeta --- 1\n")
+    (out / "part-c.txt").write_text("alpha --- 99\n")
+    sink_ds._commit_manifest(str(out), "_MANIFEST-0.json", [sink_ds._FileDone("part-a.txt", 1)])
+    sink_ds._commit_manifest(str(out), "_MANIFEST-1.json", [sink_ds._FileDone("part-b.txt", 2)])
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    monkeypatch.setattr(sink_ds.os, "replace", crash)
+    with pytest.raises(OSError, match="crash before rename"):
+        sink_ds._commit_manifest(
+            str(out), "_MANIFEST-2.json", [sink_ds._FileDone("part-c.txt", 1)]
+        )
+    monkeypatch.undo()
+    (torn,) = [n for n in os.listdir(out) if n.endswith(".tmp")]
+    (out / torn).write_text('{"files": ["part-c')
+    (out / "_MANIFEST-3.json.tmp").write_text('{"files": ["part-c')
+    assert not (out / "_MANIFEST-2.json").exists()
+    assert sink_ds.read_crane_sink(str(out)) == {"alpha": "2", "beta": "1"}

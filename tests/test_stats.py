@@ -1,9 +1,6 @@
-"""Accuracy and maintenance-op tests: approx percentiles vs the exact
-type-7 twin, and small-file compaction."""
+"""Accuracy tests: approx percentiles vs the exact type-7 twin."""
 
 from __future__ import annotations
-
-import glob
 
 from crane_spark.queries import REGISTRY
 
@@ -91,22 +88,6 @@ def test_hll_rollup_bounds(spark, sf_dir):
         assert n_nations == 5
         # lgK=14 keeps relative error well under 2% at these cardinalities
         assert abs(est - exact[rk]) / exact[rk] < 0.02
-
-
-def test_compact_rewrites_to_target_file_count(spark, sf_dir, tmp_path):
-    from crane_spark.sources.sinks import compact
-    from crane_spark.tables import table
-
-    frag = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    orders = table(spark, sf_dir, "orders")
-    orders.repartition(16).write.parquet(frag)  # simulate streaming appends
-    assert len(glob.glob(f"{frag}/*.parquet")) == 16
-
-    compact(spark.read.parquet(frag), out, target_files=2)
-    files = glob.glob(f"{out}/*.parquet")
-    assert len(files) == 2
-    assert spark.read.parquet(out).count() == orders.count()
 
 
 def test_rolling_hll_tracks_exact_wau(spark, sf_dir):

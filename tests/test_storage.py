@@ -28,33 +28,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert clicks.count() == events.filter(F.col("event_type") == "click").count()
 
 
-def test_write_partitioned_layout(spark, sf_dir, tmp_path):
-    """write_partitioned controls partition dirs AND file counts (the
-    small-files guard), and the result round-trips with pruning."""
-    import glob
-
-    from crane_spark.sources.sinks import write_partitioned
-
-    out = str(tmp_path / "orders_by_status")
-    orders = table(spark, sf_dir, "orders")
-    write_partitioned(
-        orders, out, partition_by=["o_orderstatus"], sort_within=["o_orderdate"]
-    )
-    dirs = sorted(
-        p.split("=")[-1] for p in glob.glob(f"{out}/o_orderstatus=*")
-    )
-    assert dirs == ["F", "O", "P"]
-    for d in dirs:
-        files = glob.glob(f"{out}/o_orderstatus={d}/*.parquet")
-        assert len(files) == 1  # one task per partition: no file slivers
-    back = spark.read.parquet(out)
-    assert back.count() == orders.count()
-    assert (
-        back.filter(F.col("o_orderstatus") == "O").count()
-        == orders.filter(F.col("o_orderstatus") == "O").count()
-    )
-
-
 def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path):
     """Two tables bucketed+sorted on the join key: the sort-merge join
     consumes bucket layout directly — no Exchange on either side."""
@@ -90,60 +63,6 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS cust_b")
         spark.sql("DROP TABLE IF EXISTS orders_b")
-
-
-def test_zorder_layout_tightens_both_dimensions(spark, sf_dir, tmp_path):
-    """Single-column sort gives tight files on that column only; the
-    z-order layout must bound per-file spans on BOTH columns, which is
-    what lets parquet min/max stats skip files for either predicate."""
-    import glob as _glob
-
-    import duckdb
-
-    from crane_spark.sources.sinks import write_zordered
-    from crane_spark.tables import table
-
-    orders = table(spark, sf_dir, "orders").select(
-        "o_custkey", F.col("o_totalprice").cast("long").alias("price")
-    )
-    plain = str(tmp_path / "plain")
-    zord = str(tmp_path / "zord")
-    (
-        orders.repartitionByRange(8, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.parquet(plain)
-    )
-    write_zordered(orders, zord, ["o_custkey", "price"], n_files=8)
-
-    def spans(path):
-        con = duckdb.connect()
-        lo = con.execute(
-            f"SELECT min(o_custkey), max(o_custkey), min(price), max(price) "
-            f"FROM read_parquet('{path}/*.parquet')"
-        ).fetchone()
-        out = []
-        for f in _glob.glob(f"{path}/*.parquet"):
-            r = con.execute(
-                f"SELECT min(o_custkey), max(o_custkey), min(price), max(price) "
-                f"FROM read_parquet('{f}')"
-            ).fetchone()
-            out.append(
-                (
-                    (r[1] - r[0]) / (lo[1] - lo[0]),
-                    (r[3] - r[2]) / (lo[3] - lo[2]),
-                )
-            )
-        return out
-
-    plain_spans = spans(plain)
-    z_spans = spans(zord)
-    # plain: second dimension is unclustered -> every file spans ~all of it
-    assert sum(s[1] for s in plain_spans) / len(plain_spans) > 0.9
-    # z-order: BOTH dimensions bounded well below the full range
-    assert sum(s[0] for s in z_spans) / len(z_spans) < 0.6
-    assert sum(s[1] for s in z_spans) / len(z_spans) < 0.6
-    # and no rows lost in the rewrite
-    assert spark.read.parquet(zord).count() == orders.count()
 
 
 def test_analyze_table_records_cbo_statistics(spark, sf_dir, tmp_path):

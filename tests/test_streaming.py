@@ -222,79 +222,6 @@ def test_stream_static_enrich(spark, sf_dir, tmp_path):
     assert all(name is not None for name in rows.values())
 
 
-def test_stream_stream_left_outer_join_emits_nulls(spark, tmp_path):
-    """A left row with no match emits with nulls — but only once the
-    watermark passes its join bound; a later batch's events advance
-    the watermark and flush it."""
-    from crane_spark.streaming.pipelines import stream_stream_outer_join
-
-    clicks_src = str(tmp_path / "oclicks")
-    buys_src = str(tmp_path / "obuys")
-    _write_events(
-        spark,
-        clicks_src,
-        [
-            (1, "2024-01-01 10:00:00", 1, "click", 0.0),  # matched
-            (2, "2024-01-01 10:00:00", 2, "click", 0.0),  # never matched
-        ],
-    )
-    _write_events(
-        spark, buys_src, [(10, "2024-01-01 10:10:00", 1, "purchase", 5.0)]
-    )
-    # Second files: far-future rows whose only job is to advance the
-    # watermark in a later micro-batch so batch-1 unmatched state flushes.
-    _write_events(
-        spark, clicks_src, [(99, "2024-01-02 10:00:00", 9, "click", 0.0)]
-    )
-    _write_events(
-        spark, buys_src, [(98, "2024-01-02 10:00:00", 8, "purchase", 0.0)]
-    )
-    clicks = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(clicks_src)
-        .selectExpr("event_id AS click_id", "user_id AS cu", "ts AS click_ts")
-    )
-    buys = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(buys_src)
-        .selectExpr("event_id AS buy_id", "user_id AS cu", "ts AS buy_ts", "value")
-    )
-    out = stream_stream_outer_join(
-        clicks, buys, key="cu", left_ts="click_ts", right_ts="buy_ts",
-        watermark="10 minutes", within="30 minutes",
-    ).select("click_id", "buy_id")
-    run_available_now(out, "ss_outer_sink", output_mode="append")
-    rows = {(r["click_id"], r["buy_id"]) for r in spark.table("ss_outer_sink").collect()}
-    assert (1, 10) in rows          # matched pair
-    assert (2, None) in rows        # unmatched left flushed by watermark
-    assert (99, None) not in rows   # flusher's own bound never passed
-
-
-def test_stream_dedup_within_watermark_collapses_retries(spark, tmp_path):
-    """dropDuplicatesWithinWatermark dedups on business keys alone:
-    a replayed event whose retry carries a DIFFERENT timestamp still
-    collapses (plain dropDuplicates on keys+ts would keep both)."""
-    from crane_spark.streaming.pipelines import stream_dedup_within_watermark
-
-    src = str(tmp_path / "retries")
-    _write_events(
-        spark,
-        src,
-        [
-            (1, "2024-01-01 01:00:00", 1, "click", 1.0),
-            (1, "2024-01-01 01:00:07", 1, "click", 1.0),  # retry, ts drifted
-            (2, "2024-01-01 01:02:00", 2, "view", 2.0),
-        ],
-    )
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-    deduped = stream_dedup_within_watermark(stream, ["event_id"], watermark="1 hour")
-    run_available_now(deduped.select("event_id", "user_id"), "ddww_sink", output_mode="append")
-    got = sorted(r["event_id"] for r in spark.table("ddww_sink").collect())
-    assert got == [1, 2]
-
-
 def test_incremental_ingest_dedups_across_runs(spark, tmp_path):
     """Two ingestion runs over one store: run 2 re-delivers a document
     whose text already landed in run 1 plus an in-batch duplicate pair;
@@ -356,105 +283,6 @@ def test_statestore_reader_exposes_streaming_state(spark, tmp_path):
     # every state row carries its owning shuffle partition — the handle
     # for locating skewed state at scale
     assert all(r["partition_id"] >= 0 for r in state.collect())
-
-
-def test_timer_finalized_sessions(spark, tmp_path):
-    """Event-time timeout timers: sessions are emitted exactly once,
-    only after the watermark passes last_event + gap, then their state
-    is removed. Run 1 accumulates open sessions (nothing emitted);
-    run 2's far-future event advances the watermark, firing the
-    timeout handler for both idle sessions."""
-    from crane_spark.streaming.stateful import finalized_sessions
-    from crane_spark.streaming.pipelines import stream_to_parquet
-
-    src = str(tmp_path / "events")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(rows):
-        spark.createDataFrame(rows, "user string, ts timestamp").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def run():
-        stream = (
-            spark.readStream.schema("user string, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stream_to_parquet(
-            finalized_sessions(stream, "user", "ts", gap_minutes=30), sink, ckpt
-        )
-        q.awaitTermination(120)
-
-    import datetime as dt
-
-    t = lambda s: dt.datetime.fromisoformat(s)  # noqa: E731
-    write(
-        [
-            ("a", t("2024-01-01 01:00:00")),
-            ("a", t("2024-01-01 01:10:00")),
-            ("b", t("2024-01-01 01:05:00")),
-        ]
-    )
-    run()
-    write([("c", t("2024-01-01 09:00:00"))])
-    run()
-    got = {
-        r["key"]: (str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got["a"] == ("2024-01-01 01:00:00", "2024-01-01 01:10:00", 2)
-    assert got["b"] == ("2024-01-01 01:05:00", "2024-01-01 01:05:00", 1)
-    assert "c" not in got  # still open: watermark has not passed 09:30
-
-
-def test_stream_stream_full_outer_join(spark, tmp_path):
-    """fullOuter adds the symmetric right-side null emission: an
-    unmatched BUY also flushes once the watermark passes its bound."""
-    from crane_spark.streaming.pipelines import stream_stream_outer_join
-
-    clicks_src = str(tmp_path / "foclicks")
-    buys_src = str(tmp_path / "fobuys")
-    _write_events(
-        spark,
-        clicks_src,
-        [
-            (1, "2024-01-01 10:00:00", 1, "click", 0.0),  # matched
-            (2, "2024-01-01 10:00:00", 2, "click", 0.0),  # unmatched left
-        ],
-    )
-    _write_events(
-        spark,
-        buys_src,
-        [
-            (10, "2024-01-01 10:10:00", 1, "purchase", 5.0),  # matched
-            (20, "2024-01-01 10:10:00", 7, "purchase", 9.0),  # unmatched right
-        ],
-    )
-    _write_events(spark, clicks_src, [(99, "2024-01-02 10:00:00", 9, "click", 0.0)])
-    _write_events(spark, buys_src, [(98, "2024-01-02 10:00:00", 8, "purchase", 0.0)])
-    clicks = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(clicks_src)
-        .selectExpr("event_id AS click_id", "user_id AS cu", "ts AS click_ts")
-    )
-    buys = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(buys_src)
-        .selectExpr("event_id AS buy_id", "user_id AS cu", "ts AS buy_ts", "value")
-    )
-    out = stream_stream_outer_join(
-        clicks, buys, key="cu", left_ts="click_ts", right_ts="buy_ts",
-        watermark="10 minutes", within="30 minutes", how="fullOuter",
-    ).select("click_id", "buy_id")
-    run_available_now(out, "ss_full_outer_sink", output_mode="append")
-    rows = {(r["click_id"], r["buy_id"]) for r in spark.table("ss_full_outer_sink").collect()}
-    assert (1, 10) in rows          # matched pair
-    assert (2, None) in rows        # unmatched left
-    assert (None, 20) in rows       # unmatched right — fullOuter's addition
 
 
 def test_stream_union_two_sources(spark, tmp_path):

@@ -95,34 +95,3 @@ def test_pagerank_iterations_converges(spark):
     assert set(ranks) == {"1", "2", "3"}
     assert ranks["1"] > ranks["2"] > 0  # hub collects more rank
     assert abs(ranks["2"] - ranks["3"]) < 1e-6  # symmetric spokes
-
-
-def test_label_propagation_two_communities(spark):
-    """Two cliques bridged by one edge: seeds on opposite sides label
-    their own clique; the bridge vertex resolves deterministically
-    (ties -> smaller label)."""
-    import pyspark.sql.functions as F
-
-    from crane_spark.operators.graph import label_propagation
-
-    # clique A: 0-1-2 fully connected; clique B: 10-11-12; bridge 2-10
-    e = [(0, 1), (0, 2), (1, 2), (10, 11), (10, 12), (11, 12), (2, 10)]
-    edges = spark.createDataFrame(e, "src long, dst long")
-    seeds = spark.createDataFrame([(0, 100), (11, 200)], "v long, label long")
-    out = {
-        r["v"]: (r["label"], r["round_assigned"])
-        for r in label_propagation(edges, seeds, n_rounds=4).collect()
-    }
-    assert out[0] == (100, 0) and out[11] == (200, 0)  # seeds fixed
-    assert out[1][0] == 100 and out[2][0] == 100       # clique A
-    assert out[10][0] == 200 and out[12][0] == 200     # clique B
-    assert set(out) == {0, 1, 2, 10, 11, 12}
-    # propagation rounds are recorded and monotone from the seeds
-    assert out[1][1] >= 1 and out[12][1] >= 1
-
-    # determinism across reruns
-    again = {
-        r["v"]: (r["label"], r["round_assigned"])
-        for r in label_propagation(edges, seeds, n_rounds=4).collect()
-    }
-    assert out == again

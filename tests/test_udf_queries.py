@@ -125,44 +125,6 @@ def test_approx_distinct_within_rsd(spark, sf_dir):
         assert got == n and ok is True, status
 
 
-def test_observation_metrics_ride_the_job(spark, sf_dir):
-    from crane_spark.operators.observe import observed_quality
-    from crane_spark.tables import table
-
-    orders = table(spark, sf_dir, "orders")
-    observed, obs = observed_quality(
-        orders, null_cols=["o_orderpriority"], range_cols=["o_totalprice"]
-    )
-    kept = observed.filter(F.col("o_totalprice") > 0).count()
-    m = obs.get
-    assert m["n_rows"] == orders.count() == kept
-    assert m["n_null_o_orderpriority"] == 0
-    assert m["min_o_totalprice"] > 0
-    assert m["max_o_totalprice"] > m["min_o_totalprice"]
-
-
-def test_chunk_document_udtf_lateral(spark):
-    from crane_spark.functions.udtfs import ChunkDocument, register_udtfs
-
-    register_udtfs(spark)
-    spark.sql(
-        "SELECT 0 AS doc_id, 'a b c d e f g h i j' AS text"
-    ).createOrReplaceTempView("one_doc")
-    rows = spark.sql(
-        "SELECT doc_id, c.chunk_id, c.chunk_text, c.n_tokens "
-        "FROM one_doc, LATERAL chunk_document(text, 4, 1) c ORDER BY c.chunk_id"
-    ).collect()
-    # stride 3, window 4 over 10 tokens -> starts 0,3,6; the window
-    # ending at the last token stops the walk (full coverage, no
-    # redundant overlap-only tail)
-    assert [r["chunk_text"] for r in rows] == [
-        "a b c d", "d e f g", "g h i j",
-    ]
-    # consecutive chunks overlap by exactly one token
-    for a, b in zip(rows, rows[1:]):
-        assert a["chunk_text"].split()[-1] == b["chunk_text"].split()[0]
-
-
 def test_map_in_arrow_batch_iterator(spark, sf_dir):
     """mapInArrow: the zero-copy tier below mapInPandas — the UDF sees
     raw pyarrow RecordBatches (no pandas conversion), the right surface

@@ -201,75 +201,6 @@ def test_expire_keeps_newest_versions(spark, root):
         V.get(spark, root, "d", version=2)
 
 
-def test_incremental_join_maintenance_equals_full_rejoin(spark):
-    """Delta-join maintenance must reproduce the full re-join EXACTLY
-    (multiset) when both sides gain and lose rows, including duplicate
-    rows on both sides."""
-    import random
-
-    from crane_spark.operators.incremental import incremental_join
-
-    rng = random.Random(11)
-    a_rows = [(rng.randrange(12), rng.randrange(5)) for _ in range(60)]
-    b_rows = [(rng.randrange(12), rng.randrange(7) + 100) for _ in range(40)]
-    a_old = spark.createDataFrame(a_rows, "k long, av long")
-    b_old = spark.createDataFrame(b_rows, "k long, bv long")
-    # updates touching both sides: deletions (sampled) + additions
-    a_new_rows = [r for r in a_rows if rng.random() > 0.2] + [
-        (rng.randrange(12), rng.randrange(5) + 50) for _ in range(10)
-    ]
-    b_new_rows = [r for r in b_rows if rng.random() > 0.2] + [
-        (rng.randrange(12), rng.randrange(7) + 200) for _ in range(8)
-    ]
-    a_new = spark.createDataFrame(a_new_rows, "k long, av long")
-    b_new = spark.createDataFrame(b_new_rows, "k long, bv long")
-
-    view_old = a_old.join(b_old, ["k"])
-    maintained = incremental_join(view_old, a_old, a_new, b_old, b_new, ["k"])
-    full = a_new.join(b_new, ["k"])
-    assert maintained.exceptAll(full).count() == 0
-    assert full.exceptAll(maintained).count() == 0
-    assert full.count() > 0
-
-
-def test_incremental_join_with_precomputed_deltas(spark):
-    """The CDC-shaped entry point: callers holding row deltas skip the
-    four snapshot scans and must reproduce the full re-join exactly —
-    and the view is subtracted ONCE (the two delete terms union into a
-    single exceptAll)."""
-    import random
-
-    from crane_spark.operators.incremental import (
-        deltas,
-        incremental_join_with_deltas,
-    )
-
-    rng = random.Random(23)
-    a_rows = [(rng.randrange(9), rng.randrange(4)) for _ in range(50)]
-    b_rows = [(rng.randrange(9), rng.randrange(6) + 100) for _ in range(30)]
-    a_old = spark.createDataFrame(a_rows, "k long, av long")
-    b_old = spark.createDataFrame(b_rows, "k long, bv long")
-    a_new = spark.createDataFrame(
-        [r for r in a_rows if rng.random() > 0.3]
-        + [(rng.randrange(9), 77) for _ in range(6)],
-        "k long, av long",
-    )
-    b_new = spark.createDataFrame(
-        [r for r in b_rows if rng.random() > 0.3]
-        + [(rng.randrange(9), 277) for _ in range(5)],
-        "k long, bv long",
-    )
-    da_add, da_del = deltas(a_old, a_new)
-    db_add, db_del = deltas(b_old, b_new)
-    maintained = incremental_join_with_deltas(
-        a_old.join(b_old, ["k"]), a_old, b_old, b_new, ["k"],
-        da_add, da_del, db_add, db_del,
-    )
-    full = a_new.join(b_new, ["k"])
-    assert maintained.exceptAll(full).count() == 0
-    assert full.exceptAll(maintained).count() == 0
-
-
 def test_get_versions_zero_and_negative_return_nothing(spark, root):
     """vs[-0:] slices the WHOLE list — num_versions<=0 must mean none,
     not an accidental full-history read."""
