@@ -3,7 +3,9 @@
 one JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": <sf>}
+     "queries": {name: sec, ...}, "sf": <sf>,
+     "session": {"master": "local[N]", "shuffle_partitions": ...,
+                 "initial_partition_num": ...}}
 
 Each query executes its full physical plan into the noop sink (no
 driver collect — we measure the engine, not result transfer).
@@ -315,6 +317,16 @@ def main() -> int:
         "n_queries": len(best),
         "sec_per_query": round(total / max(len(best), 1), 4),
         "sf": sf_from_dir(sf_dir),
+        # The partition layout that produced the totals above: batch
+        # exchanges start at initialPartitionNum (AQE), stream state
+        # runs shuffle.partitions partitions.
+        "session": {
+            "master": spark.sparkContext.master,
+            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "initial_partition_num": spark.conf.get(
+                "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+            ),
+        },
         "machine_before": state_before,
         "machine_after": {
             "cpu_count": os.cpu_count(),

@@ -13,9 +13,20 @@ local[N] test harness:
   (the correctness oracle runs in DuckDB).
 * Arrow enabled for the pandas interchange used by the vectorized UDF
   extension points (LLM ops); never row-at-a-time Python.
-* Shuffle partition count is a knob: 32 for local runs, and AQE
-  coalesces down from `spark.sql.adaptive.coalescePartitions`; on a
-  real cluster set it ~2-3x total cores via SPARK_GRAFT_SHUFFLE.
+* Two partition counts, because AQE reads one and streaming the other.
+  Batch exchanges start at
+  `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+  (SPARK_GRAFT_SHUFFLE, else 32) and AQE coalesces them down; on a
+  real cluster set it ~2-3x total cores. Structured Streaming turns
+  AQE off, so a stateful stream sizes its state store from
+  `spark.sql.shuffle.partitions`, set to the session's core count
+  (SPARK_GRAFT_CPUS, the N of `local[N]`): one state partition per
+  core, because each micro-batch pays a task and a state-store commit
+  per partition. The stream takes that count when it first starts and
+  its checkpoint's offset log freezes it: resuming an existing
+  checkpoint keeps its old count, and changing the count needs a new
+  checkpoint. Under SPARK_GRAFT_MASTER without SPARK_GRAFT_CPUS the
+  count stays 32.
 
 Reference lineage: the reference hard-codes a 10-node cluster and a
 500-tuple micro-batch (/root/reference/util.py:59-61, dfs/env.py:4-14);
@@ -28,6 +39,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _cpus() -> str:
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
 
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -43,7 +59,10 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": os.environ.get(
+        "SPARK_GRAFT_SHUFFLE", "32"
+    ),
+    "spark.sql.shuffle.partitions": _cpus(),
     # The streaming surface checkpoints for exactly-once. Default is
     # the JVM-heap HDFSBacked provider (right for local runs and small
     # state); set SPARK_GRAFT_STATESTORE=rocksdb for the cluster
@@ -70,8 +89,7 @@ DEFAULT_CONF: dict[str, str] = {
 
 
 def default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{_cpus()}]")
 
 
 def get_spark(

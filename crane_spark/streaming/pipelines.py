@@ -16,10 +16,16 @@ checkpointed Structured Streaming — exactly-once, no custom code:
 * watermarks + windows / dropDuplicates / stream-static joins are the
   gap-fill streaming surface the reference lacks.
 
-State-store sizing note for 100 TB streams: keyed state (windows,
-dedup) lives in the state store partitioned by
-spark.sql.shuffle.partitions; watermarks bound its growth — every
-stateful pipeline here REQUIRES a watermark for that reason.
+State-store sizing: keyed state (windows, dedup, counts) lives in the
+state store, partitioned by spark.sql.shuffle.partitions, which
+session.py sets to the core count (SPARK_GRAFT_CPUS; 32 under
+SPARK_GRAFT_MASTER without it) because each micro-batch pays one task
+and one state-store commit per partition. Batch queries size their
+exchanges from AQE's initial partition count instead. A stream takes
+the count when it first starts and its checkpoint's offset log freezes
+it: resuming an existing checkpoint keeps its old count, and changing
+the count needs a new checkpoint. Watermarks bound state growth —
+every stateful pipeline here REQUIRES a watermark for that reason.
 """
 
 from __future__ import annotations

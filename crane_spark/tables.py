@@ -10,6 +10,7 @@ against literal paths.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlsplit
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +70,7 @@ def table(
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     per_session = _TABLE_CACHE.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), name)
+    key = (_dir_key(sf_dir), name)
     if refresh:
         per_session.pop(key, None)
     df = per_session.get(key)
@@ -82,17 +83,30 @@ def table(
     return df
 
 
+def _dir_key(path: str) -> str:
+    """Handle-cache key of a table directory. Local paths, bare or
+    ``file:``, are made absolute; any other URI (hdfs://, s3a://, ...)
+    is kept as written, because os.path.abspath would prefix it with
+    the working directory and collapse its ``//``."""
+    parts = urlsplit(path)
+    if not parts.scheme:
+        return os.path.abspath(path)
+    if parts.scheme == "file":
+        return os.path.abspath(parts.path)
+    return path.rstrip("/")
+
+
 def invalidate_table_handles(path: str) -> None:
     """Drop every cached reader handle (any session) whose table dir
     lies under ``path`` — the invalidation hook for code that writes
-    into a directory tree previously read through :func:`table`."""
-    root = os.path.abspath(path)
-    for per_session in _TABLE_CACHE.values():
-        stale = [
-            k
-            for k in per_session
-            if k[0] == root or k[0].startswith(root + os.sep)
-        ]
+    into a directory tree previously read through :func:`table`.
+
+    Iterates a snapshot of the sessions: another thread's
+    :func:`table` may add one mid-loop."""
+    root = _dir_key(path)
+    under = root.rstrip("/") + "/"
+    for per_session in list(_TABLE_CACHE.values()):
+        stale = [k for k in per_session if k[0] == root or k[0].startswith(under)]
         for k in stale:
             per_session.pop(k, None)
 

@@ -19,6 +19,7 @@ def spark():
         "crane_spark_tests",
         extra_conf={
             "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "8",
             "spark.default.parallelism": "8",
             "spark.sql.warehouse.dir": "/tmp/crane_spark_test_warehouse",
             # the status REST API is the metrics source for the

@@ -168,3 +168,54 @@ def test_table_handle_refresh_and_invalidation(spark, sf_dir):
     assert table(spark, sf_dir, "orders") is not c
     # rows are served from disk either way
     assert b.count() == table(spark, sf_dir, "lineitem").count()
+
+
+class _Session:
+    """Weak-referenceable stand-in for a SparkSession cache key."""
+
+
+def test_invalidation_survives_a_session_added_mid_loop(monkeypatch):
+    """invalidate_table_handles walks a snapshot of the sessions: a
+    table() call that adds a session while it runs (another thread)
+    must not abort the invalidation with 'dictionary changed size
+    during iteration'."""
+    from weakref import WeakKeyDictionary
+
+    import crane_spark.tables as T
+
+    cache = WeakKeyDictionary()
+    late = _Session()
+
+    class _AddsSessionOnIter(dict):
+        def __iter__(self):
+            cache.setdefault(late, {})
+            return super().__iter__()
+
+    first = _Session()
+    cache[first] = _AddsSessionOnIter({("/data/sf", "orders"): "handle"})
+    monkeypatch.setattr(T, "_TABLE_CACHE", cache)
+    T.invalidate_table_handles("/data")
+    assert cache[first] == {} and late in cache
+
+
+def test_invalidation_keeps_remote_uris_whole(monkeypatch, tmp_path):
+    """hdfs:// and s3a:// roots match handles under the same URI, from
+    any working directory and with or without a trailing slash, and
+    leave sibling prefixes and other buckets alone."""
+    from weakref import WeakKeyDictionary
+
+    import crane_spark.tables as T
+
+    keys = [
+        ("s3a://bucket/wh/sf", "lineitem"),
+        ("s3a://bucket/wh2/sf", "lineitem"),
+        ("s3a://other/wh/sf", "lineitem"),
+        ("hdfs://nn:8020/wh/sf", "orders"),
+    ]
+    session = _Session()
+    cache = WeakKeyDictionary({session: dict.fromkeys(keys, "handle")})
+    monkeypatch.setattr(T, "_TABLE_CACHE", cache)
+    monkeypatch.chdir(tmp_path)
+    T.invalidate_table_handles("s3a://bucket/wh")
+    T.invalidate_table_handles("hdfs://nn:8020/wh/")
+    assert sorted(cache[session]) == [keys[1], keys[2]]

@@ -73,8 +73,9 @@ def test_q2_single_ps_aggregation_with_window_min(spark, sf_dir):
 def test_partition_count_invariance(spark, sf_dir):
     """Scale-correctness: answers must be IDENTICAL under different
     parallelism (the decimal-sum routing exists exactly for this).
-    Rerun representative shuffling queries under 3 shuffle-partition
-    settings and compare full row sets."""
+    Rerun representative shuffling queries under 3 batch exchange
+    widths (AQE's initial partition count, which batch exchanges are
+    planned at) and compare full row sets."""
     names = [
         "q1_pricing_summary",
         "pagerank_contrib",
@@ -82,10 +83,12 @@ def test_partition_count_invariance(spark, sf_dir):
         "twap_user_values",
         "mad_outliers",
     ]
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    found = spark.conf.get(key)
     try:
         baseline = {}
         for parts in ("2", "7", "32"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            spark.conf.set(key, parts)
             for name in names:
                 rows = sorted(
                     map(tuple, REGISTRY[name].fn(spark, sf_dir).collect())
@@ -95,7 +98,7 @@ def test_partition_count_invariance(spark, sf_dir):
                 else:
                     baseline[name] = rows
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set(key, found)
 
 
 def test_bloom_contamination_keeps_broadcast_only_joins(spark, sf_dir):

@@ -153,3 +153,50 @@ def test_rocksdb_neardup_ingest_replay_idempotent(spark, tmp_path):
             for r in spark.read.parquet(store + "/docs").collect()
         )
     assert first == again == [(r[0], r[1]) for r in rows]
+
+
+@pytest.mark.parametrize("provider", [HDFS, ROCKSDB], ids=["hdfs", "rocksdb"])
+def test_resumed_checkpoint_keeps_its_state_partition_count(spark, tmp_path, provider):
+    """The offset log freezes a stream's state partition count: a
+    wordcount checkpointed at 32 partitions, resumed with new input
+    under a core-sized spark.sql.shuffle.partitions, still runs 32
+    state partitions and its counts match a recount of all input."""
+    from collections import Counter
+
+    from crane_spark.sources import read_text_lines
+    from crane_spark.streaming import stream_wordcount
+
+    if provider == ROCKSDB and not _rocksdb_available(spark, tmp_path / "probe"):
+        pytest.skip("RocksDB state store native library unavailable")
+    src, ckpt = tmp_path / "txt", str(tmp_path / "ckpt")
+    src.mkdir()
+    inputs = ["x y x\nz\n", "z w x\ny y\n"]
+
+    def drain(partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        q = (
+            stream_wordcount(read_text_lines(spark, str(src), streaming=True))
+            .writeStream.format("memory")
+            .queryName("resume_sink")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        got = {r["token"]: r["cnt"] for r in spark.table("resume_sink").collect()}
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"], got
+
+    found = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        with _provider(spark, provider):
+            (src / "0.txt").write_text(inputs[0])
+            assert drain("32")[0] == 32
+            (src / "1.txt").write_text(inputs[1])
+            partitions, got = drain("2")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", found)
+    assert partitions == 32
+    assert got == Counter(
+        w for text in inputs for line in text.splitlines() for w in line.split(" ")
+    )

@@ -2088,3 +2088,85 @@ def test_bloom_front_plan_prices_without_allocating():
 
     n_bits, _ = _BloomFront.plan(10_000_000_000, 0.03)
     assert n_bits // 8 > _BLOOM_FRONT_CEILING_BYTES
+
+
+def test_session_sizes_stream_state_to_cores_and_batch_to_aqe():
+    """session.py maps SPARK_GRAFT_CPUS (the N of local[N]) onto
+    spark.sql.shuffle.partitions, which sizes stream state, and
+    SPARK_GRAFT_SHUFFLE onto AQE's initial partition count, which sizes
+    batch exchanges; with a master but no core count, both stay 32."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    probe = (
+        "import json\n"
+        "from crane_spark.session import DEFAULT_CONF as c, default_master\n"
+        "print(json.dumps([default_master(), c['spark.sql.shuffle.partitions'],"
+        " c['spark.sql.adaptive.coalescePartitions.initialPartitionNum']]))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    base = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE")
+    }
+
+    def resolved(**env):
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=repo,
+            env={**base, **env},
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+        return json.loads(out.stdout)
+
+    assert resolved(SPARK_GRAFT_CPUS="3") == ["local[3]", "3", "32"]
+    assert resolved(SPARK_GRAFT_CPUS="3", SPARK_GRAFT_SHUFFLE="11") == [
+        "local[3]",
+        "3",
+        "11",
+    ]
+    assert resolved(SPARK_GRAFT_MASTER="local-cluster[2,1,1024]") == [
+        "local-cluster[2,1,1024]",
+        "32",
+        "32",
+    ]
+
+
+def test_stream_state_and_batch_exchange_take_separate_counts(spark, tmp_path):
+    """With the two settings apart in one session, a fresh-checkpoint
+    stateful aggregate runs spark.sql.shuffle.partitions state
+    partitions (streaming turns AQE off), while a batch groupBy is
+    planned at AQE's initial partition count."""
+    import re
+
+    state_key = "spark.sql.shuffle.partitions"
+    batch_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    found = {k: spark.conf.get(k) for k in (state_key, batch_key)}
+    src = tmp_path / "txt"
+    src.mkdir()
+    (src / "a.txt").write_text("x y x\nz\n")
+    try:
+        spark.conf.set(state_key, "3")
+        spark.conf.set(batch_key, "5")
+        q = (
+            stream_wordcount(read_text_lines(spark, str(src), streaming=True))
+            .writeStream.format("memory")
+            .queryName("split_sink")
+            .outputMode("complete")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+        batch = spark.range(100).withColumn("k", F.col("id") % 7).groupBy("k").count()
+        plan = batch._jdf.queryExecution().executedPlan().toString()
+        assert re.findall(r"hashpartitioning\(k#\d+L, (\d+)\)", plan) == ["5"]
+    finally:
+        for k, v in found.items():
+            spark.conf.set(k, v)

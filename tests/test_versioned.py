@@ -242,3 +242,22 @@ def test_diff_by_key_multiplicity_change_is_updated(spark, root):
         for r in V.diff(spark, root, "m", 1, 2, key_cols=["id"]).collect()
     }
     assert got == {(1, "updated")}
+
+
+def test_put_to_file_uri_invalidates_table_handles(spark, sf_dir, tmp_path):
+    """put() under a ``file://`` root drops the table() handles below
+    it, as a bare path does: the root is parsed as a URI, not run
+    through os.path.abspath."""
+    import os
+    import shutil
+
+    from crane_spark.tables import table
+
+    store = tmp_path / "store"
+    tables_dir = store / "sf"
+    tables_dir.mkdir(parents=True)
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), tables_dir)
+    handle = table(spark, str(tables_dir), "region")
+    assert table(spark, str(tables_dir), "region") is handle
+    assert V.put(spark.range(3), f"file://{store}", "snap") == 1
+    assert table(spark, str(tables_dir), "region") is not handle
