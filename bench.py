@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import platform
 import sys
 import time
 
@@ -322,6 +323,9 @@ def main() -> int:
         # runs shuffle.partitions partitions.
         "session": {
             "master": spark.sparkContext.master,
+            # Python-worker fixed cost depends on the interpreter
+            # (zipimport, TUNING.md "Python worker round trips").
+            "python": platform.python_version(),
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "initial_partition_num": spark.conf.get(
                 "spark.sql.adaptive.coalescePartitions.initialPartitionNum"

@@ -20,6 +20,7 @@ Layout:
                 DataFrame builder and a DuckDB oracle SQL string
 """
 
+import crane_spark._zipimport  # noqa: F401  (gates zipimporter.invalidate_caches)
 from crane_spark.session import get_spark
 from crane_spark.tables import TABLE_NAMES, load_all, register_views, table
 

@@ -85,17 +85,19 @@ def test_running_totals_idle_ttl_evicts_and_restarts(spark, tmp_path):
         except Exception:
             return []
 
-    def run(expect):
+    def run(expect, idle_ttl_sec=1):
         # A query with pending processing-time timers keeps scheduling
         # no-data batches, so availableNow need not self-terminate —
         # poll the sink for the expected condition and stop explicitly.
+        # q.stop() can interrupt a batch's write, and the restart then
+        # replays that batch: each batch overwrites its own batch=<id>
+        # directory, so the replay replaces its partial output instead
+        # of appending a second copy next to it.
         stream = spark.readStream.schema("k string, v double").parquet(src)
         q = (
-            running_totals(stream, "k", "v", idle_ttl_sec=1)
+            running_totals(stream, "k", "v", idle_ttl_sec=idle_ttl_sec)
             .writeStream.foreachBatch(
-                lambda b, i: b.withColumn("batch", F.lit(i))
-                .write.mode("append")
-                .parquet(out)
+                lambda b, i: b.write.mode("overwrite").parquet(f"{out}/batch={i}")
             )
             .outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -131,8 +133,11 @@ def test_running_totals_idle_ttl_evicts_and_restarts(spark, tmp_path):
     run(lambda rows: ("a", 2, 3.0) in finals(rows) and "b" in latest_open(rows))
 
     write([("a", 10.0)])
-    # evicted key reappears: totals restart from zero, not from (2, 3.0)
-    run(lambda rows: latest_open(rows).get("a") == (1, 10.0))
+    # evicted key reappears: totals restart from zero, not from (2, 3.0).
+    # A long TTL for this run: with 1 s, a slow batch lets a's second
+    # life expire before q.stop() and emit a correct final (1, 10.0),
+    # which the count of a's final rows below would take for a replay.
+    run(lambda rows: latest_open(rows).get("a") == (1, 10.0), idle_ttl_sec=600)
     rows = read_rows()
     assert ("a", 2, 3.0) in finals(rows)
     assert latest_open(rows)["b"] == (1, 5.0)

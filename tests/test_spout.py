@@ -232,3 +232,56 @@ def test_crane_sink_ignores_torn_temporary_manifest(tmp_path, monkeypatch):
     (out / "_MANIFEST-3.json.tmp").write_text('{"files": ["part-c')
     assert not (out / "_MANIFEST-2.json").exists()
     assert sink_ds.read_crane_sink(str(out)) == {"alpha": "2", "beta": "1"}
+
+
+def test_python_workers_gate_zip_rereads_and_sink_still_recounts(spark, tmp_path):
+    """Python workers that load crane_spark code run with the zipimport
+    gate (crane_spark/_zipimport.py) installed, and a crane_sink stream
+    over several micro-batches still reads back as a Python recount."""
+    import sys
+    from collections import Counter
+
+    import pandas as pd
+
+    from crane_spark.sources.sink_ds import CraneSinkDataSource, read_crane_sink
+    from crane_spark.streaming.pipelines import stream_wordcount
+
+    spark.dataSource.register(CraneSinkDataSource)
+    src = tmp_path / "src"
+    src.mkdir()
+    expected: Counter = Counter()
+    for i in range(4):
+        lines = [f"w{i} common", "common"] * (i + 1)
+        (src / f"part-{i}.txt").write_text("\n".join(lines) + "\n")
+        expected.update(w for line in lines for w in line.split(" "))
+    out = str(tmp_path / "sink")
+    q = (
+        stream_wordcount(spark.readStream.option("maxFilesPerTrigger", 1).text(str(src)))
+        .writeStream.format("crane_sink")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert not q.isActive
+    assert len([n for n in os.listdir(out) if n.startswith("_MANIFEST-")]) == 4
+    assert read_crane_sink(out) == {k: str(v) for k, v in expected.items()}
+
+    def report(frames):
+        import zipimport
+
+        import crane_spark.sources.sink_ds  # noqa: F401
+
+        for _ in frames:
+            yield pd.DataFrame(
+                {"gate": [zipimport.zipimporter.invalidate_caches.__module__]}
+            )
+
+    gated = spark.range(8, numPartitions=4).mapInPandas(report, "gate string")
+    gates = {r["gate"] for r in gated.collect()}
+    if sys.version_info < (3, 13):
+        assert gates == {"crane_spark._zipimport"}
+    else:
+        assert gates == {"zipimport"}
