@@ -202,8 +202,15 @@ def main() -> int:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
-            elapsed = time.perf_counter() - start
+            try:
+                if not q.awaitTermination(300):
+                    raise TimeoutError(
+                        "wordcount stream drain still running after 300s; "
+                        "a lines/s figure from partial input would be wrong"
+                    )
+                elapsed = time.perf_counter() - start
+            finally:
+                q.stop()
             stream_lps = round(len(lines) / elapsed)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)

@@ -22,15 +22,13 @@ Layout:
 
 import crane_spark._zipimport  # noqa: F401  (gates zipimporter.invalidate_caches)
 from crane_spark.session import get_spark
-from crane_spark.tables import TABLE_NAMES, load_all, register_views, table
+from crane_spark.tables import TABLE_NAMES, table
 
 __version__ = "0.1.0"
 
 __all__ = [
     "get_spark",
     "table",
-    "load_all",
-    "register_views",
     "TABLE_NAMES",
     "__version__",
 ]

@@ -1,6 +1,6 @@
 """Column-expression helpers shared by operators and the query registry."""
 
-from crane_spark.functions.aggregates import davg, dsum, sql_davg, sql_dsum
+from crane_spark.functions.aggregates import dsum, sql_dsum
 from crane_spark.functions.text import (
     STOPWORDS,
     shingles,
@@ -8,13 +8,11 @@ from crane_spark.functions.text import (
     token_fingerprint,
     tokens,
 )
-from crane_spark.functions.vectors import cosine_similarity, dot, to_double_vec, vec_norm
+from crane_spark.functions.vectors import dot, to_double_vec, vec_norm
 
 __all__ = [
     "dsum",
-    "davg",
     "sql_dsum",
-    "sql_davg",
     "tokens",
     "shingles",
     "token_fingerprint",
@@ -23,5 +21,4 @@ __all__ = [
     "to_double_vec",
     "dot",
     "vec_norm",
-    "cosine_similarity",
 ]

@@ -37,19 +37,9 @@ def dsum(col: Column | str, scale: int = 2) -> Column:
     return F.sum(col.cast(T.DecimalType(PRECISION, scale))).cast("double")
 
 
-def davg(col: Column | str, scale: int = 6) -> Column:
-    """Exact-sum average: decimal sum cast to double, over count."""
-    col = F.col(col) if isinstance(col, str) else col
-    return dsum(col, scale) / F.count(F.lit(1))
-
-
 def sql_dsum(expr: str, scale: int = 2) -> str:
     """DuckDB-side twin of :func:`dsum` (same arithmetic, same result)."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL({PRECISION},{scale}))) AS DOUBLE)"
-
-
-def sql_davg(expr: str, scale: int = 6) -> str:
-    return f"{sql_dsum(expr, scale)} / COUNT(*)"
 
 
 # --------------------------------------------------------------------

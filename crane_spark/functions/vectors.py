@@ -61,8 +61,3 @@ def vec_norm(a: Column | str) -> Column:
     if n is not None:
         return F.expr(f"sqrt(aggregate({n}, 0.0D, (acc, v) -> acc + v * v))")
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """cos(a, b); both inputs must already be array<double>."""
-    return dot(a, b) / (vec_norm(a) * vec_norm(b))

@@ -149,9 +149,6 @@ def stream_training_corpus(
     gram_n: int = 8,
     n_shards: int = N_SHARDS,
     reliable_every: int = 0,
-    bloom_front: bool = False,
-    bloom_fpp: float = 0.03,
-    bloom_stats: dict | None = None,
 ):
     """INCREMENTAL twin of `build_training_corpus`: the same funnel
     applied per micro-batch over a documents stream, so the daily
@@ -190,19 +187,6 @@ def stream_training_corpus(
     gram set is eval-suite-sized and broadcasts; all other stages are
     per-batch local.
 
-    ``bloom_front=True`` (r10 — the hash-ledger twin of
-    `stream_neardup_ingest`'s front) fronts the persisted-index
-    anti-join with a per-RUN driver Bloom filter over the stored
-    `_h` values: when NO batch hash can be in the ledger (the common
-    case for novel-heavy streams) the recursive ledger read and the
-    anti-join are skipped outright. Same contract as the neardup
-    front: false positives cost one wasted probe; false negatives
-    impossible under the single-writer rule (seeded from the full
-    ledger at first use, keys collected BEFORE the appends and added
-    with pure numpy after commit, front reset to re-seed on any
-    update failure); size-gated by `_BLOOM_FRONT_CEILING_BYTES` with
-    auto-disable recorded in ``bloom_stats``.
-
     ``reliable_every`` forwards :func:`loop_checkpoint`'s durability
     cadence to the three per-batch materialized stages (stage index =
     round number within each batch): durable checkpoint files instead
@@ -218,11 +202,6 @@ def stream_training_corpus(
     hashes_dir = out_root + "/hashes"
     report_dir = out_root + "/report"
     counts_dir = out_root + "/lang_counts"
-    _front: dict = {"bloom": None, "disabled": False}
-    if bloom_stats is not None:
-        bloom_stats.setdefault("probes_skipped", 0)
-        bloom_stats.setdefault("probes_run", 0)
-        bloom_stats.setdefault("keys_tested", 0)
 
     def ingest(batch, batch_id: int) -> None:
         staged = []
@@ -275,36 +254,7 @@ def stream_training_corpus(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        probe_possible = True
-        if os.path.exists(hashes_dir) and bloom_front and not _front["disabled"]:
-            from crane_spark.streaming.pipelines import (
-                _bloom_hash_cols,
-                _seed_bloom_front,
-            )
-
-            if _front["bloom"] is None:
-                _front["bloom"] = _seed_bloom_front(
-                    spark, hashes_dir, bloom_fpp, key_col="_h", recursive=True
-                )
-                if _front["bloom"] is None:
-                    _front["disabled"] = True  # size-gated; run un-fronted
-                    if bloom_stats is not None:
-                        bloom_stats["disabled"] = "bitmap over ceiling"
-            if _front["bloom"] is not None:
-                keys = (
-                    deduped.select("_h")
-                    .distinct()
-                    .select(*_bloom_hash_cols("_h"))
-                    .toPandas()
-                )
-                probe_possible = _front["bloom"].might_contain_any(
-                    keys["h1"].to_numpy(), keys["h2"].to_numpy()
-                )
-                if bloom_stats is not None:
-                    bloom_stats["keys_tested"] += len(keys)
-                    key = "probes_run" if probe_possible else "probes_skipped"
-                    bloom_stats[key] += 1
-        if os.path.exists(hashes_dir) and probe_possible:
+        if os.path.exists(hashes_dir):
             # The hash store is keyed by (query_id, batch_id) so a crashed
             # attempt's own hashes/<qid>/batch-N (already on disk when the
             # batch replays under the same checkpoint) is excluded — otherwise
@@ -381,20 +331,6 @@ def stream_training_corpus(
             "source",
             (hash_bucket("doc_id", "shard") % n_shards).cast("int").alias("shard"),
         )
-        # Front-update keys collected BEFORE any write commits (the
-        # ADVICE r9 ordering, shared with stream_neardup_ingest): a
-        # Spark failure here aborts the batch pre-commit, and after
-        # the writes only a pure-numpy add() remains.
-        kb = None
-        if bloom_front and _front["bloom"] is not None:
-            from crane_spark.streaming.pipelines import _bloom_hash_cols
-
-            kb = (
-                deduped.select("_h")
-                .distinct()
-                .select(*_bloom_hash_cols("_h"))
-                .toPandas()
-            )
         # per-(query, batch) overwrite directories: replay-idempotent
         sharded.write.mode("overwrite").parquet(os.path.join(corpus_dir, sub))
         deduped.select(
@@ -412,11 +348,6 @@ def stream_training_corpus(
             [(qid, batch_id, k, v) for k, v in sorted(counts.items())],
             "query_id string, batch_id long, stage string, n_docs long",
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(report_dir, sub))
-        if kb is not None:
-            try:
-                _front["bloom"].add(kb["h1"].to_numpy(), kb["h2"].to_numpy())
-            except Exception:
-                _front["bloom"] = None  # re-seed from the ledger
 
     return (
         docs.writeStream.foreachBatch(ingest)
@@ -430,16 +361,14 @@ def compact_corpus_ledger(
     spark: SparkSession, out_root: str, target_files: int = 4
 ) -> dict[str, int]:
     """Periodic compaction for `stream_training_corpus`'s ledger
-    state (TUNING.md state-growth audit row — the near-dup index got
-    retention + compaction in r8; this is the corpus twin). A
-    year-long stream writes one small per-(query, batch) directory
-    set per micro-batch into hashes/, lang_counts/ and report/; the
-    per-batch probe and the cumulative-count read then pay an
-    ever-growing FILE LISTING — that listing, not the narrow rows, is
-    the real scale cost. Compaction rewrites each store as a full-row
-    dedup into ``target_files`` files through the same crash-safe
-    two-rename swap as `compact_neardup_store` (stranded .old/.merged
-    recovery included). Rows and their (query_id, batch_id) keys are
+    state (TUNING.md state-growth audit row). A year-long stream
+    writes one small per-(query, batch) directory set per micro-batch
+    into hashes/, lang_counts/ and report/; the per-batch probe and
+    the cumulative-count read then pay an ever-growing FILE LISTING —
+    that listing, not the narrow rows, is the real scale cost.
+    Compaction rewrites each store as a full-row dedup into
+    ``target_files`` files through `_crash_safe_rewrite`'s two-rename
+    swap (stranded .old/.merged recovery included). Rows and their (query_id, batch_id) keys are
     PRESERVED for all three stores.
 
     A groupBy fold of lang_counts/report (one row per lang/stage) was

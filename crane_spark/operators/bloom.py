@@ -11,8 +11,8 @@ lossless.
 
 This is the same idea Spark's own runtime row-level filtering uses for
 join pruning; building it explicitly makes it available to any
-operator (semi-join contamination checks, incremental-dedup probes)
-and keeps the filter reusable across queries.
+operator (semi-join contamination checks, blocklist filters) and
+keeps the filter reusable across queries.
 
 Representation: ``m_words`` 64-bit longs = ``64 * m_words`` bits;
 ``k`` probe positions per key from ``xxhash64(key, seed)``.

@@ -5,7 +5,6 @@ from crane_spark.sources.files import (
     TWITTER_SCHEMA,
     pagerank_edges_from_tsv,
     read_csv,
-    read_json,
     read_orc,
     read_text_lines,
     twitter_rows_from_csv,
@@ -14,7 +13,6 @@ from crane_spark.sources.files import (
 __all__ = [
     "read_text_lines",
     "read_csv",
-    "read_json",
     "read_orc",
     "twitter_rows_from_csv",
     "pagerank_edges_from_tsv",

@@ -58,19 +58,6 @@ def read_csv(
     )
 
 
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    streaming: bool = False,
-) -> DataFrame:
-    if streaming:
-        if schema is None:
-            raise ValueError("streaming JSON requires an explicit schema")
-        return spark.readStream.schema(schema).json(path)
-    return spark.read.json(path) if schema is None else spark.read.schema(schema).json(path)
-
-
 def read_orc(
     spark: SparkSession,
     path: str,

@@ -3,7 +3,6 @@
 from crane_spark.streaming.pipelines import (
     run_available_now,
     stream_dedup_with_watermark,
-    stream_global_filter_count,
     stream_static_enrich,
     stream_to_parquet,
     stream_wordcount,
@@ -12,7 +11,6 @@ from crane_spark.streaming.pipelines import (
 
 __all__ = [
     "stream_wordcount",
-    "stream_global_filter_count",
     "windowed_event_stats",
     "stream_dedup_with_watermark",
     "stream_static_enrich",

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from crane_spark.functions.aggregates import dsum
-from crane_spark.operators.topology import global_filter_count, wordcount
+from crane_spark.operators.topology import wordcount
 
 
 def stream_wordcount(lines: DataFrame) -> DataFrame:
@@ -43,11 +43,6 @@ def stream_wordcount(lines: DataFrame) -> DataFrame:
     stateful streaming aggregation; use outputMode('complete') to a
     memory/console sink, matching the master's final print)."""
     return wordcount(lines)
-
-
-def stream_global_filter_count(df: DataFrame, predicate) -> DataFrame:
-    """Streaming TwitterUserFilter (ops E-F)."""
-    return global_filter_count(df, predicate)
 
 
 def windowed_event_stats(
@@ -144,7 +139,7 @@ def stream_upsert_parquet(
     surface from SURVEY §2.2 that plain append sinks can't express.
 
     Crash-safety is the same rename discipline as
-    :func:`compact_neardup_store`: the merged store is written ONCE to
+    :func:`_crash_safe_rewrite`: the merged store is written ONCE to
     a staging dir and installed via two metadata-only renames
     (live -> .old, staging -> live), so the live store is never a
     half-written overwrite target — a crash at any point leaves either
@@ -228,213 +223,6 @@ def run_available_now(
             query.stop()
 
 
-def stream_incremental_ingest(
-    docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-) -> StreamingQuery:
-    """Incremental corpus ingestion (the daily-crawl append): each
-    micro-batch is deduped WITHIN itself and against everything already
-    ingested (content hash anti-join), and only novel documents append
-    to the store — dedup holds across batches AND across runs, with
-    exactly-once delivery from the checkpoint.
-
-    At 100 TB the `known` side becomes a bucketed hash-only table (one
-    narrow column, pruned scan) fronted by a Bloom filter
-    (operators/bloom.py) so the per-batch probe never rescans the
-    corpus; the foreachBatch body is unchanged."""
-    import os
-
-    from pyspark.sql import functions as F  # noqa: F811 (local for closure)
-
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        hashed = batch.withColumn("text_hash", F.sha2(F.col(text_col), 256))
-        hashed = hashed.dropDuplicates(["text_hash"])
-        if os.path.exists(store_path):
-            # NULL-SAFE anti-join: sha2(NULL) is NULL, and a plain
-            # equality anti-join never matches NULL keys — a null-text
-            # doc would re-append on EVERY batch and on every replay,
-            # breaking the cross-run dedup contract (dropDuplicates
-            # above already treats NULLs as equal; the probe must too).
-            known = spark.read.parquet(store_path).select(
-                F.col("text_hash").alias("_known_hash")
-            )
-            hashed = hashed.join(
-                known,
-                F.col("text_hash").eqNullSafe(F.col("_known_hash")),
-                "left_anti",
-            )
-        hashed.write.mode("append").parquet(store_path)
-
-    return (
-        docs.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-class _BloomFront:
-    """Driver-side Bloom filter over the STORED band keys — the
-    optional probe front for `stream_neardup_ingest(bloom_front=True)`.
-
-    Direction of error: a false POSITIVE costs one unnecessary index
-    probe (the exact join then finds nothing); a false NEGATIVE would
-    skip a probe that had a real collision and re-admit a duplicate —
-    so the filter must contain every stored key. It does, given the
-    store's documented single-writer rule: seeded from the full index
-    at run start (one distributed pass over the narrow band_key
-    column, partial bitmaps OR-folded on the driver) and updated with
-    each batch's appended keys after their append commits. A crash
-    re-seeds on restart; there is no persisted filter to drift.
-
-    Hashing is deterministic double hashing over two Spark-side
-    xxhash64 values of the key (h1 + i*h2 mod n_bits), so executors
-    and driver never disagree on a key's bits."""
-
-    @staticmethod
-    def plan(n_items: int, fpp: float) -> tuple[int, int]:
-        """(n_bits, k) for a target item count and fpp — separated
-        from __init__ so the size GATE can price the bitmap BEFORE
-        allocating it (the anchor-broadcast-ceiling pattern,
-        llm/graph_ann.py)."""
-        import math
-
-        n = max(1024, int(n_items))
-        ideal = int(-n * math.log(fpp) / (math.log(2) ** 2))
-        n_bits = max(8192, 1 << (ideal - 1).bit_length())
-        k = max(1, round(n_bits / n * math.log(2)))
-        return n_bits, k
-
-    def __init__(self, n_items: int, fpp: float):
-        import numpy as np
-
-        self.n_bits, self.k = self.plan(n_items, fpp)
-        self.bits = np.zeros(self.n_bits // 8, dtype=np.uint8)
-
-    @staticmethod
-    def fill(buf, h1, h2, n_bits: int, k: int) -> None:
-        """Set the bits for hash-pair arrays into ``buf`` (uint8
-        bitmap) — shared by driver add() and the executor-side
-        seeding partials so both use one bit layout."""
-        import numpy as np
-
-        h1 = h1.astype(np.uint64)
-        h2 = h2.astype(np.uint64)
-        for i in range(k):
-            idx = ((h1 + np.uint64(i) * h2) % np.uint64(n_bits)).astype(
-                np.int64
-            )
-            np.bitwise_or.at(
-                buf, idx >> 3, np.left_shift(np.uint8(1), (idx & 7).astype(np.uint8))
-            )
-
-    def add(self, h1, h2) -> None:
-        self.fill(self.bits, h1, h2, self.n_bits, self.k)
-
-    def might_contain_any(self, h1, h2) -> bool:
-        import numpy as np
-
-        if len(h1) == 0:
-            return False
-        h1 = h1.astype(np.uint64)
-        h2 = h2.astype(np.uint64)
-        alive = np.ones(len(h1), dtype=bool)
-        for i in range(self.k):
-            idx = ((h1 + np.uint64(i) * h2) % np.uint64(self.n_bits)).astype(
-                np.int64
-            )
-            alive &= (
-                (self.bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
-            ).astype(bool)
-            if not alive.any():
-                return False
-        return True
-
-
-def _bloom_hash_cols(key_col: str = "band_key"):
-    """The two deterministic 64-bit key hashes the front is built on;
-    computed Spark-side so seeding partials and driver tests agree."""
-    return [
-        F.xxhash64(key_col).alias("h1"),
-        F.xxhash64(F.lit(1), F.col(key_col)).alias("h2"),
-    ]
-
-
-# Hard ceiling on the bloom front's bitmap (driver copy AND each
-# seeding task's partial are this size). Past it the front is
-# AUTO-DISABLED with a logged reason — the front is purely a probe
-# short-circuit, so correctness is identical without it; silently
-# allocating a multi-GB bitmap per 10^10-key store (~9 GB at fpp
-# 0.03) would instead fail as an opaque OOM inside mapInPandas.
-# Remedies past the ceiling: raise bloom_fpp (fewer bits/key), expire
-# the index (`expire_neardup_index` shrinks the keyed set), or accept
-# the un-fronted probe path. Env override for tests/operators.
-_BLOOM_FRONT_CEILING_BYTES = int(
-    __import__("os").environ.get("CRANE_BLOOM_FRONT_CEILING_BYTES", 256 << 20)
-)
-
-
-def _seed_bloom_front(
-    spark,
-    index_store: str,
-    fpp: float,
-    key_col: str = "band_key",
-    recursive: bool = False,
-) -> _BloomFront | None:
-    """Build the run's front from the persisted index: one count + one
-    distributed pass over the narrow ``key_col`` column, each partition
-    emitting a partial bitmap, OR-folded driver-side via
-    toLocalIterator (driver peak = the front + ONE partial, never all
-    partials at once). Returns None — front disabled — when the
-    planned bitmap exceeds `_BLOOM_FRONT_CEILING_BYTES`.
-
-    ``recursive`` reads per-(query, batch) subdirectory stores (the
-    corpus hash ledger's layout)."""
-    import logging
-
-    import numpy as np
-
-    reader = spark.read.option("mergeSchema", "true")
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    idx = reader.parquet(index_store)
-    n = idx.count()
-    n_bits, k = _BloomFront.plan(4 * n + 100_000, fpp)
-    if n_bits // 8 > _BLOOM_FRONT_CEILING_BYTES:
-        logging.getLogger(__name__).warning(
-            "bloom front DISABLED: planned bitmap %d MB for %d stored "
-            "band keys at fpp=%g exceeds the %d MB ceiling "
-            "(CRANE_BLOOM_FRONT_CEILING_BYTES). Remedies: raise "
-            "bloom_fpp, expire the index, or run un-fronted.",
-            n_bits // 8 >> 20,
-            n,
-            fpp,
-            _BLOOM_FRONT_CEILING_BYTES >> 20,
-        )
-        return None
-    front = _BloomFront(4 * n + 100_000, fpp)
-    hashed = idx.select(*_bloom_hash_cols(key_col))
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        part = np.zeros(n_bits // 8, dtype=np.uint8)
-        for pdf in batches:
-            if len(pdf):
-                _BloomFront.fill(
-                    part, pdf["h1"].to_numpy(), pdf["h2"].to_numpy(), n_bits, k
-                )
-        yield pd.DataFrame({"bits": [part.tobytes()]})
-
-    for r in hashed.mapInPandas(gen, "bits binary").toLocalIterator():
-        front.bits |= np.frombuffer(r["bits"], dtype=np.uint8)
-    return front
-
-
 def stream_neardup_ingest(
     docs: DataFrame,
     store_path: str,
@@ -444,13 +232,9 @@ def stream_neardup_ingest(
     shingle_n: int = 3,
     t_num: int = 1,
     t_den: int = 2,
-    bloom_front: bool = False,
-    bloom_fpp: float = 0.03,
-    bloom_stats: dict | None = None,
 ) -> StreamingQuery:
-    """Incremental NEAR-duplicate-free corpus ingestion: the streaming
-    MinHash-LSH twin of `stream_incremental_ingest`'s exact-hash
-    dedup. Each micro-batch:
+    """Incremental NEAR-duplicate-free corpus ingestion (streaming
+    MinHash-LSH). Each micro-batch:
 
     1. computes LSH band keys for its documents (llm/dedup.py: one
        codegen'd hash-agg, #bands short rows per doc);
@@ -490,20 +274,6 @@ def stream_neardup_ingest(
     At 100 TB: the band index is (band, band_key, id) — narrow rows,
     bucketable on band_key so the per-batch probe is a pruned scan;
     verification reads only candidate-matched documents.
-
-    ``bloom_front=True`` (TUNING.md state-growth audit: the
-    novel-heavy-stream knob) fronts step 3 with a per-RUN driver-side
-    Bloom filter over the stored band keys (`_BloomFront`): each
-    batch's candidate keys (batch-bounded, collected as two 64-bit
-    hashes per key) are tested first, and when NONE can be in the
-    index — the common case when arrivals are mostly novel — the
-    stored-index read, probe join, and verify round-trip are skipped
-    outright. False positives cost one wasted probe; false negatives
-    cannot occur under the store's single-writer rule (seeded from
-    the full index at run start, updated after each batch's append,
-    re-seeded on restart). ``bloom_stats`` (optional dict) receives
-    probes_skipped / probes_run / keys_tested counters for
-    observability and the TUNING.md measurement.
     """
     from crane_spark.llm.dedup import (
         minhash_bands,
@@ -514,13 +284,6 @@ def stream_neardup_ingest(
 
     docs_store = store_path + "/docs"
     index_store = store_path + "/bands"
-    # per-run bloom front state (lazily seeded at the first batch so a
-    # store created mid-run still seeds correctly) and its counters
-    _front: dict = {"bloom": None, "disabled": False}
-    if bloom_stats is not None:
-        bloom_stats.setdefault("probes_skipped", 0)
-        bloom_stats.setdefault("probes_run", 0)
-        bloom_stats.setdefault("keys_tested", 0)
 
     def _verified_pairs(spark, pairs, sets_a, sets_b):
         """Exact Jaccard >= t_num/t_den check for candidate id pairs;
@@ -600,40 +363,7 @@ def stream_neardup_ingest(
         # while the doc store does not (crash between the appends) —
         # an absent doc store means nothing is truly ingested and
         # every index hit must resolve to "not stored, keep".
-        store_live = os.path.exists(index_store) and os.path.exists(docs_store)
-        probe_possible = True
-        if bloom_front and store_live and not _front["disabled"]:
-            if _front["bloom"] is None:
-                _front["bloom"] = _seed_bloom_front(spark, index_store, bloom_fpp)
-                if _front["bloom"] is None:
-                    # size-gated: the store's key count prices the
-                    # bitmap past the ceiling — run un-fronted for the
-                    # rest of this run (the store only grows)
-                    _front["disabled"] = True
-                    if bloom_stats is not None:
-                        bloom_stats["disabled"] = "bitmap over ceiling"
-        if (
-            bloom_front
-            and store_live
-            and not _front["disabled"]
-            and _front["bloom"] is not None
-        ):
-            keys = (
-                bands.join(keep.select(id_col), id_col, "left_semi")
-                .select("band_key")
-                .union(keep_short.select(F.col("_h").alias("band_key")))
-                .distinct()
-                .select(*_bloom_hash_cols())
-                .toPandas()
-            )
-            probe_possible = _front["bloom"].might_contain_any(
-                keys["h1"].to_numpy(), keys["h2"].to_numpy()
-            )
-            if bloom_stats is not None:
-                bloom_stats["keys_tested"] += len(keys)
-                key = "probes_run" if probe_possible else "probes_skipped"
-                bloom_stats[key] += 1
-        if store_live and probe_possible:
+        if os.path.exists(index_store) and os.path.exists(docs_store):
             idx = spark.read.parquet(index_store)
             hits = (
                 bands.join(keep.select(id_col), id_col, "left_semi")
@@ -693,42 +423,10 @@ def stream_neardup_ingest(
                     F.col("_h").alias("band_key"),
                 )
             )
-            # ingest_ts (epoch seconds, stamped driver-side per batch)
-            # is operational metadata for `expire_neardup_index`'s
-            # dedup-horizon retention; nothing on the probe path reads
-            # it, and pre-stamp stores (rows where it reads back NULL)
-            # are treated as keep-forever by expire.
-            import time as _time
-
-            new_bands = new_bands.withColumn(
-                "ingest_ts", F.lit(int(_time.time()))
-            )
-            # Front-update key collection runs BEFORE the appends
-            # (ADVICE r9): a Spark failure HERE aborts the batch before
-            # anything commits, so the front can never lag a committed
-            # append. After the appends only a pure-numpy add() remains
-            # — and if even that fails, the front resets to None so the
-            # next batch re-seeds from the store (superset restored)
-            # instead of silently carrying false negatives.
-            kb = None
-            if bloom_front and _front["bloom"] is not None:
-                kb = (
-                    new_bands.select("band_key")
-                    .distinct()
-                    .select(*_bloom_hash_cols())
-                    .toPandas()
-                )
             new_bands.write.mode("append").parquet(index_store)
             keep.unionByName(keep_short.drop("_h")).write.mode("append").parquet(
                 docs_store
             )
-            if kb is not None:
-                try:
-                    _front["bloom"].add(
-                        kb["h1"].to_numpy(), kb["h2"].to_numpy()
-                    )
-                except Exception:
-                    _front["bloom"] = None  # re-seed from the store
         finally:
             # free this batch's staged copies whether or not the sinks
             # succeeded — a failed write is retried by foreachBatch
@@ -892,42 +590,6 @@ def read_vector_index(
     )
 
 
-def compact_neardup_store(
-    spark: SparkSession,
-    store_path: str,
-    target_files: int = 4,
-    id_col: str = "doc_id",
-) -> dict[str, int]:
-    """Periodic maintenance for `stream_neardup_ingest`'s two stores:
-    the band index accretes duplicate rows across crash replays (bands
-    are written BEFORE docs, so a replayed batch re-appends its band
-    rows — harmless for dedup semantics, pure bloat), and both stores
-    accumulate one small file per micro-batch. Rewrite each as
-    `target_files` files with the index row-deduplicated. `id_col`
-    must match the ingest's id column (default ``doc_id``).
-
-    Crash-safe swap: the compacted copy is staged, then installed via
-    two renames (live -> .old, staging -> live) before the old copy is
-    deleted — the store is always present under its own name except
-    during the metadata-only renames, so a crash at any point leaves
-    either the old or the new version readable (a stranded ``.old`` /
-    ``.compact`` dir is cleaned up on the next run). Returns row
-    counts per store; safe to run between ingest runs."""
-    import os
-
-    out: dict[str, int] = {}
-    for name, dedup_cols in (("bands", ["band", "band_key", id_col]), ("docs", None)):
-        path = os.path.join(store_path, name)
-
-        def rewrite(df: DataFrame, cols=dedup_cols) -> DataFrame:
-            return df.dropDuplicates(cols) if cols else df
-
-        n = _crash_safe_rewrite(spark, path, rewrite, target_files)
-        if n is not None:
-            out[name] = n
-    return out
-
-
 def _crash_safe_rewrite(
     spark: SparkSession,
     path: str,
@@ -945,15 +607,15 @@ def _crash_safe_rewrite(
 
     Two recovery/read hardenings (ADVICE r8):
 
-    * Reads use ``mergeSchema`` — these stores gain operational columns
-      over time (``ingest_ts`` landed in r8), so a store appended to
-      across versions holds mixed parquet schemas. A plain read may
-      infer the schema from an OLD footer, which would make
-      `expire_neardup_index` silently keep everything and — worse —
-      let a subsequent compaction rewrite the store WITHOUT the column,
-      permanently stripping stamps from rows that had them. With
-      mergeSchema the union schema wins and pre-stamp rows read back
-      NULL, exactly the documented retention contract.
+    * Reads use ``mergeSchema`` — a store appended to across versions
+      holds mixed parquet schemas: the corpus hash ledger
+      (`compact_corpus_ledger`) keeps pre-ledger files that carry only
+      ``_h`` beside files with ``_h, query_id, batch_id``. A plain read
+      may infer the schema from an OLD footer, which would let the
+      compaction rewrite the store WITHOUT the newer columns,
+      permanently stripping the ledger keys from rows that had them.
+      With mergeSchema the union schema wins and pre-ledger rows read
+      back NULL, which the ingest's replay filter treats as known.
     * If BOTH the live dir and ``.old`` exist, a crash landed between
       the two renames and a restarted ingest recreated the live dir
       (its appends only) before this maintenance ran. Deleting ``.old``
@@ -963,7 +625,7 @@ def _crash_safe_rewrite(
       same row seen pre- AND post-crash) are the merge's own artifact,
       so the merged input is full-row deduplicated before the
       transform — every store routed through here treats identical
-      rows as one (band bloat rows, id-unique docs/vectors).
+      rows as one (ledger rows, id-unique vectors).
 
     Crucially (ADVICE r9), the folded ``.old`` is never deleted before
     the new store is installed: recovery unconditionally deletes
@@ -1023,50 +685,6 @@ def _crash_safe_rewrite(
     for d in merged_dirs:
         shutil.rmtree(d)
     return n
-
-
-def expire_neardup_index(
-    spark: SparkSession,
-    store_path: str,
-    older_than_sec: int,
-    now_sec: int | None = None,
-    target_files: int = 4,
-) -> dict[str, int]:
-    """Dedup-HORIZON retention for `stream_neardup_ingest`'s band
-    index (TUNING.md state-growth audit): evict index entries whose
-    ``ingest_ts`` is older than ``older_than_sec``, so future arrivals
-    are near-dup-checked only against the last horizon's worth of
-    corpus — the production policy for crawl pipelines where a
-    re-appearing year-old page should be re-admitted. The DOC store is
-    untouched (the admitted corpus is the product; the horizon governs
-    what future arrivals are compared against).
-
-    Pre-stamp rows (NULL ``ingest_ts``, from stores written before the
-    stamp existed) are KEPT — retention must never silently widen the
-    admit set for an index that can't prove its age. Same crash-safe
-    swap and single-writer rule as `compact_neardup_store`; run while
-    the stream is quiescent. Returns kept/evicted counts."""
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    cutoff = (now_sec if now_sec is not None else int(_time.time())) - older_than_sec
-    path = os.path.join(store_path, "bands")
-    before: list[int] = []
-
-    def rewrite(df: DataFrame) -> DataFrame:
-        before.append(df.count())
-        if "ingest_ts" not in df.columns:
-            return df
-        return df.filter(
-            F.col("ingest_ts").isNull() | (F.col("ingest_ts") >= F.lit(cutoff))
-        )
-
-    kept = _crash_safe_rewrite(spark, path, rewrite, target_files)
-    if kept is None:
-        return {"kept": 0, "evicted": 0}
-    return {"kept": kept, "evicted": before[0] - kept}
 
 
 def compact_vector_index(

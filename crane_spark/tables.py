@@ -258,15 +258,3 @@ def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     if n_parts < max(1, int(target * min_ratio)):
         return df.repartition(target)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the spark.sql surface)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -222,41 +222,6 @@ def test_stream_static_enrich(spark, sf_dir, tmp_path):
     assert all(name is not None for name in rows.values())
 
 
-def test_incremental_ingest_dedups_across_runs(spark, tmp_path):
-    """Two ingestion runs over one store: run 2 re-delivers a document
-    whose text already landed in run 1 plus an in-batch duplicate pair;
-    only genuinely novel texts append."""
-    from crane_spark.streaming.pipelines import stream_incremental_ingest
-
-    src = str(tmp_path / "crawl")
-    store = str(tmp_path / "corpus_store")
-    ck = str(tmp_path / "ingest_ck")
-    schema = "doc_id long, text string"
-
-    spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = stream_incremental_ingest(
-        spark.readStream.schema(schema).parquet(src), store, ck
-    )
-    q.awaitTermination(60)
-
-    spark.createDataFrame(
-        [(3, "gamma delta"),   # cross-run duplicate text
-         (4, "epsilon zeta"),
-         (5, "epsilon zeta")],  # in-batch duplicate pair
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = stream_incremental_ingest(
-        spark.readStream.schema(schema).parquet(src), store, ck
-    )
-    q.awaitTermination(60)
-
-    stored = spark.read.parquet(store)
-    texts = sorted(r["text"] for r in stored.collect())
-    assert texts == ["alpha beta", "epsilon zeta", "gamma delta"]
-
-
 def test_statestore_reader_exposes_streaming_state(spark, tmp_path):
     """Spark 4 state-store data source: the persisted state of a
     stateful streaming query is itself queryable as a DataFrame from
@@ -829,64 +794,6 @@ def test_compact_corpus_ledger_crash_matrix(
         assert glob.glob(f"{store}/{name}.merged*") == []
 
 
-def test_corpus_bloom_front_skips_probe_and_preserves_semantics(
-    spark, sf_dir, tmp_path
-):
-    """bloom_front=True on the corpus stream must admit exactly what
-    the un-fronted stream admits: an all-novel batch skips the ledger
-    probe (probes_skipped), a repeat batch hits the front, runs the
-    probe and drops the duplicates, and the final corpus + report
-    equal the un-fronted twin's."""
-    import pyspark.sql.functions as F
-
-    from crane_spark.llm.run_pipeline import (
-        read_stream_corpus,
-        stream_training_corpus,
-    )
-    from crane_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents")
-    eval_docs = docs.filter(F.col("doc_id") < 20)
-    batches = [
-        docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 120)),
-        docs.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 220)),  # novel
-        docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 220)),  # repeats
-    ]
-
-    def run(tag, front, stats):
-        src = str(tmp_path / f"src_{tag}")
-        root = str(tmp_path / f"store_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-        for b in batches:
-            b.coalesce(1).write.mode("append").parquet(src)
-            q = stream_training_corpus(
-                spark.readStream.schema(docs.schema).parquet(src),
-                eval_docs,
-                root,
-                ckpt,
-                bloom_front=front,
-                bloom_stats=stats,
-            )
-            q.awaitTermination(180)
-        return root
-
-    plain = run("plain", False, None)
-    stats: dict = {}
-    fronted = run("fronted", True, stats)
-
-    # batch 2 is all-novel vs batch 1's ledger -> at least one skip;
-    # batch 3 repeats batch 2's docs -> the front hits, probe runs
-    assert stats["probes_skipped"] >= 1
-    assert stats["probes_run"] >= 1 and stats["keys_tested"] > 0
-
-    c_a, r_a = read_stream_corpus(spark, plain)
-    c_b, r_b = read_stream_corpus(spark, fronted)
-    assert {(r["stage"], r["n_docs"]) for r in r_a.collect()} == {
-        (r["stage"], r["n_docs"]) for r in r_b.collect()
-    }
-    assert c_a.exceptAll(c_b).count() == 0 and c_b.exceptAll(c_a).count() == 0
-
-
 def test_stream_training_corpus_incremental_and_replay(spark, sf_dir, tmp_path):
     """Multi-batch ingestion: later arrivals dedup against the
     persisted hash index, the corpus never holds two docs with the
@@ -1069,63 +976,13 @@ def test_stream_vector_ingest_and_probe(spark, sf_dir, tmp_path):
     assert read_vector_index(spark, store).count() == candidates.count()
 
 
-def test_compact_neardup_store_dedups_index_and_preserves_semantics(spark, tmp_path):
-    """After a crash-replay bloats the band index with duplicate rows,
-    compaction removes them without changing ingest behavior: a
-    post-compaction run still drops repeats and admits novelty."""
+def test_stream_neardup_ingest_custom_columns_replay(spark, tmp_path):
+    """An ingest with text_col='body' and id_col='item_id' keys its
+    band index and doc store on those columns: a full replay after
+    checkpoint loss self-collides and adds nothing."""
     import shutil
 
-    from crane_spark.streaming.pipelines import (
-        compact_neardup_store,
-        stream_neardup_ingest,
-    )
-
-    src = str(tmp_path / "docs")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(30))
-
-    def run():
-        q = stream_neardup_ingest(
-            spark.readStream.schema(schema).parquet(src), store, ckpt
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame([(1, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    shutil.rmtree(ckpt)  # full replay appends duplicate band rows
-    run()
-    n_before = spark.read.parquet(store + "/bands").count()
-    counts = compact_neardup_store(spark, store)
-    n_after = spark.read.parquet(store + "/bands").count()
-    assert counts["bands"] == n_after <= n_before
-    assert spark.read.parquet(store + "/bands").dropDuplicates().count() == n_after
-
-    # semantics preserved: repeat still drops, novel doc still lands
-    spark.createDataFrame(
-        [(5, base), (6, " ".join(f"z{i}" for i in range(30)))], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    got = sorted(r["doc_id"] for r in spark.read.parquet(store + "/docs").collect())
-    assert got == [1, 6]
-
-
-def test_compact_neardup_store_custom_id_col_and_crash_recovery(spark, tmp_path):
-    """Compaction must honor the ingest's id column (a store ingested
-    with id_col='item_id' compacts on that key, not a hard-coded
-    doc_id) and survive a crash mid-swap: if a previous run renamed
-    the live dir aside but died before installing the staging copy,
-    the next run restores it instead of treating the store as empty."""
-    import os
-    import shutil
-
-    from crane_spark.streaming.pipelines import (
-        compact_neardup_store,
-        stream_neardup_ingest,
-    )
+    from crane_spark.streaming.pipelines import stream_neardup_ingest
 
     src = str(tmp_path / "docs")
     store = str(tmp_path / "store")
@@ -1148,21 +1005,9 @@ def test_compact_neardup_store_custom_id_col_and_crash_recovery(spark, tmp_path)
     ).parquet(src)
     run()
     shutil.rmtree(ckpt)
-    run()  # replay bloats the band index
-    counts = compact_neardup_store(spark, store, id_col="item_id")
-    bands = spark.read.parquet(store + "/bands")
-    assert counts["bands"] == bands.count() == bands.dropDuplicates().count()
-
-    # crash mid-swap: live dir renamed aside, staging copy stranded
-    docs_path = os.path.join(store, "docs")
-    os.rename(docs_path, docs_path + ".old")
-    shutil.copytree(docs_path + ".old", docs_path + ".compact")
-    counts2 = compact_neardup_store(spark, store, id_col="item_id")
-    assert os.path.exists(docs_path)
-    assert not os.path.exists(docs_path + ".old")
-    assert not os.path.exists(docs_path + ".compact")
-    assert counts2["docs"] == 1
-    got = sorted(r["item_id"] for r in spark.read.parquet(docs_path).collect())
+    run()
+    assert "item_id" in spark.read.parquet(store + "/bands").columns
+    got = sorted(r["item_id"] for r in spark.read.parquet(store + "/docs").collect())
     assert got == [1]
 
 
@@ -1325,40 +1170,6 @@ def test_stream_distinct_sketches_survive_checkpoint_loss(spark, tmp_path):
     assert after == before
 
 
-def test_incremental_ingest_null_text_dedups_and_is_replay_idempotent(
-    spark, tmp_path
-):
-    """sha2(NULL) is NULL, and a plain-equality anti-join never matches
-    NULL keys — before the null-safe probe, a NULL-text doc re-appended
-    on EVERY batch and every replay. One null-text row must land in the
-    store and stay single across a second run re-delivering another."""
-    from crane_spark.streaming.pipelines import stream_incremental_ingest
-
-    src = str(tmp_path / "crawl")
-    store = str(tmp_path / "store")
-    ck = str(tmp_path / "ck")
-    schema = "doc_id long, text string"
-
-    spark.createDataFrame([(1, None), (2, "alpha")], schema).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    q = stream_incremental_ingest(
-        spark.readStream.schema(schema).parquet(src), store, ck
-    )
-    q.awaitTermination(60)
-    spark.createDataFrame([(3, None), (4, "beta")], schema).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    q = stream_incremental_ingest(
-        spark.readStream.schema(schema).parquet(src), store, ck
-    )
-    q.awaitTermination(60)
-
-    stored = spark.read.parquet(store)
-    assert stored.filter("text IS NULL").count() == 1
-    assert stored.count() == 3  # null + alpha + beta
-
-
 def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
     """The CMS store records its (depth, width); a reader needs no
     params (mismatched defaults would probe the wrong cells and return
@@ -1400,66 +1211,6 @@ def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
     with pytest.raises(Exception, match="refusing to append"):
         q.awaitTermination(60)
         raise AssertionError("query should have failed")
-
-
-def test_expire_neardup_index_dedup_horizon(spark, tmp_path):
-    """The band index carries an ingest_ts stamp; expire_neardup_index
-    evicts entries older than the horizon so a long-expired duplicate
-    is RE-ADMITTED, while in-horizon entries keep suppressing repeats.
-    The doc store is untouched by the expiry."""
-    import time
-
-    from crane_spark.streaming.pipelines import (
-        expire_neardup_index,
-        stream_neardup_ingest,
-    )
-
-    src = str(tmp_path / "docs")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(30))
-    novel = " ".join(f"z{i}" for i in range(30))
-
-    def run():
-        q = stream_neardup_ingest(
-            spark.readStream.schema(schema).parquet(src), store, ckpt
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame([(1, base), (2, novel)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-
-    # horizon of 1 hour, "now" pushed 2 hours into the future: every
-    # index entry ages out; the docs store must survive untouched
-    now = int(time.time())
-    res = expire_neardup_index(spark, store, older_than_sec=3600, now_sec=now + 7200)
-    assert res["kept"] == 0 and res["evicted"] > 0
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(store + "/docs").collect()
-    ) == [1, 2]
-
-    # the expired duplicate re-admits (the horizon semantics)...
-    spark.createDataFrame([(3, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(store + "/docs").collect()
-    ) == [1, 2, 3]
-
-    # ...and an IN-horizon expiry is a no-op that keeps suppressing
-    res2 = expire_neardup_index(spark, store, older_than_sec=3600)
-    assert res2["evicted"] == 0 and res2["kept"] > 0
-    spark.createDataFrame([(4, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(store + "/docs").collect()
-    ) == [1, 2, 3]
 
 
 def test_compact_vector_index_bounds_file_count(spark, sf_dir, tmp_path):
@@ -1692,58 +1443,31 @@ def test_stream_neardup_ingest_crash_matrix(spark, tmp_path, monkeypatch, kill_p
     assert got2 == [1, 3, 10]
 
 
-def test_maintenance_reads_merge_mixed_band_schemas(spark, tmp_path):
-    """A band store appended to across engine versions holds parquet
-    files both WITH and WITHOUT ingest_ts (the stamp landed in r8).
-    Maintenance reads must take the UNION schema: expire still evicts
-    stamped rows and keeps pre-stamp NULL rows even when a plain read
-    would infer the schema from an old stamp-less footer, and
-    compaction must never strip the stamp column from rows that have
-    it (ADVICE r8 medium)."""
-    import time
+def test_compact_corpus_ledger_merges_pre_ledger_hash_schemas(spark, tmp_path):
+    """A hashes/ ledger appended to across versions holds pre-ledger
+    files with only `_h` beside files with `_h, query_id, batch_id`.
+    Compaction must read the UNION schema even when a plain read would
+    infer it from the old footer: the ledger columns survive, ledger
+    rows keep their keys, and pre-ledger rows read back NULL."""
+    from crane_spark.llm.run_pipeline import compact_corpus_ledger
 
-    from crane_spark.streaming.pipelines import (
-        compact_neardup_store,
-        expire_neardup_index,
+    root = str(tmp_path / "store")
+    hashes = root + "/hashes"
+    # pre-ledger file FIRST so footer-order inference would plausibly
+    # pick the key-less schema
+    spark.createDataFrame([("h1",)], "_h string").coalesce(1).write.parquet(
+        hashes + "/pre"
     )
+    spark.createDataFrame(
+        [("h2", "q1", 0), ("h3", "q1", 1)],
+        "_h string, query_id string, batch_id long",
+    ).coalesce(1).write.parquet(hashes + "/q1/batch-0")
 
-    now = int(time.time())
-
-    def mk_mixed_store(root: str) -> None:
-        bands = root + "/bands"
-        # old-schema file FIRST so footer-order inference would
-        # plausibly pick the stamp-less schema
-        spark.createDataFrame(
-            [(1, 0, 111)], "doc_id long, band int, band_key long"
-        ).coalesce(1).write.mode("append").parquet(bands)
-        spark.createDataFrame(
-            [(2, 0, 222, now - 10_000), (3, 0, 333, now)],
-            "doc_id long, band int, band_key long, ingest_ts long",
-        ).coalesce(1).write.mode("append").parquet(bands)
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
-        ).write.parquet(root + "/docs")
-
-    # expire on a mixed store: stamped-old evicted, stamped-new kept,
-    # pre-stamp NULL row kept forever
-    store_a = str(tmp_path / "store_a")
-    mk_mixed_store(store_a)
-    res = expire_neardup_index(spark, store_a, older_than_sec=3600, now_sec=now)
-    assert res == {"kept": 2, "evicted": 1}
-    kept = spark.read.option("mergeSchema", "true").parquet(store_a + "/bands")
-    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
-    assert "ingest_ts" in kept.columns
-
-    # compaction on a mixed store: stamp column survives, pre-stamp
-    # rows read back NULL (the documented keep-forever contract)
-    store_b = str(tmp_path / "store_b")
-    mk_mixed_store(store_b)
-    compact_neardup_store(spark, store_b)
-    after = spark.read.parquet(store_b + "/bands")
-    assert "ingest_ts" in after.columns
-    stamps = {r["doc_id"]: r["ingest_ts"] for r in after.collect()}
-    assert stamps[1] is None
-    assert stamps[2] == now - 10_000 and stamps[3] == now
+    assert compact_corpus_ledger(spark, root) == {"hashes": 3}
+    after = spark.read.parquet(hashes)
+    assert {"_h", "query_id", "batch_id"} <= set(after.columns)
+    keys = {r["_h"]: (r["query_id"], r["batch_id"]) for r in after.collect()}
+    assert keys == {"h1": (None, None), "h2": ("q1", 0), "h3": ("q1", 1)}
 
 
 def test_crash_safe_swap_merges_old_when_live_recreated(spark, tmp_path):
@@ -1780,70 +1504,39 @@ def test_crash_safe_swap_merges_old_when_live_recreated(spark, tmp_path):
     assert not os.path.exists(store + ".compact")
 
 
-@pytest.mark.parametrize("op", ["expire", "compact_vec"])
 @pytest.mark.parametrize("kill_point", [0, 1, 2])
-def test_store_maintenance_swap_crash_matrix(
-    spark, tmp_path, monkeypatch, op, kill_point
-):
-    """Crash-injection matrix for the r8 maintenance ops' two-rename
-    swap (r8 verdict #7): kill once in every gap — before live->.old,
+def test_store_maintenance_swap_crash_matrix(spark, tmp_path, monkeypatch, kill_point):
+    """Crash-injection matrix for the two-rename swap of
+    compact_vector_index: kill once in every gap — before live->.old,
     between the two renames, and after staging->live but before the
-    .old cleanup — for BOTH expire_neardup_index and
-    compact_vector_index. A recovery rerun must land the store exactly
-    on the never-crashed run's post-maintenance content, with no
-    stranded .old/.compact dirs."""
+    .old cleanup. A recovery rerun must land the store exactly on the
+    never-crashed run's post-maintenance content, with no stranded
+    .old/.compact dirs."""
     import os
     import shutil
-    import time
 
-    from crane_spark.streaming.pipelines import (
-        compact_vector_index,
-        expire_neardup_index,
-    )
+    from crane_spark.streaming.pipelines import compact_vector_index
 
-    now = int(time.time())
     store = str(tmp_path / "store")
     ref = str(tmp_path / "ref")
+    schema = "vec_id long, centroid_id long, embedding array<double>"
+    b0 = [(i, i % 2, [float(i)]) for i in range(6)]
+    b1 = [(i, i % 2, [float(i)]) for i in range(4, 9)]  # overlaps b0
+    for root in (store, ref):
+        spark.createDataFrame(b0, schema).write.parquet(root + "/q/batch-0")
+        spark.createDataFrame(b1, schema).write.parquet(root + "/q/batch-1")
 
-    if op == "expire":
-        bands_schema = "doc_id long, band int, band_key long, ingest_ts long"
-        rows = [
-            (1, 0, 111, now - 10_000),  # expired
-            (2, 0, 222, now),  # live
-            (3, 1, 333, None),  # pre-stamp: kept forever
-        ]
-        for root in (store, ref):
-            spark.createDataFrame(rows, bands_schema).coalesce(1).write.parquet(
-                root + "/bands"
-            )
+    def run(root):
+        compact_vector_index(spark, root, target_files=2)
 
-        def run(root):
-            expire_neardup_index(spark, root, older_than_sec=3600, now_sec=now)
-
-        def content(root):
-            return sorted(
-                (r["doc_id"], r["ingest_ts"])
-                for r in spark.read.parquet(root + "/bands").collect()
-            )
-    else:
-        schema = "vec_id long, centroid_id long, embedding array<double>"
-        b0 = [(i, i % 2, [float(i)]) for i in range(6)]
-        b1 = [(i, i % 2, [float(i)]) for i in range(4, 9)]  # overlaps b0
-        for root in (store, ref):
-            spark.createDataFrame(b0, schema).write.parquet(root + "/q/batch-0")
-            spark.createDataFrame(b1, schema).write.parquet(root + "/q/batch-1")
-
-        def run(root):
-            compact_vector_index(spark, root, target_files=2)
-
-        def content(root):
-            return sorted(
-                (r["vec_id"], r["centroid_id"])
-                for r in spark.read.option("recursiveFileLookup", "true")
-                .parquet(root)
-                .dropDuplicates(["vec_id"])
-                .collect()
-            )
+    def content(root):
+        return sorted(
+            (r["vec_id"], r["centroid_id"])
+            for r in spark.read.option("recursiveFileLookup", "true")
+            .parquet(root)
+            .dropDuplicates(["vec_id"])
+            .collect()
+        )
 
     run(ref)  # the never-crashed reference
 
@@ -1956,138 +1649,6 @@ def test_store_maintenance_merge_swap_crash_matrix(
     assert not os.path.exists(store + ".old")
     assert not os.path.exists(store + ".compact")
     assert glob.glob(store + ".merged*") == []
-
-
-def test_neardup_bloom_front_skips_probes_and_preserves_semantics(spark, tmp_path):
-    """bloom_front=True must admit exactly the docs the un-fronted
-    ingest admits: a novel-only batch short-circuits the stored-index
-    probe (probes_skipped), an exact-duplicate batch hits the front
-    and runs the probe (dropped as before), and a forced full replay
-    self-collides through the front, so nothing re-appends."""
-    import shutil
-
-    from crane_spark.streaming.pipelines import stream_neardup_ingest
-
-    src = str(tmp_path / "docs")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(30))
-    novel = " ".join(f"z{i}" for i in range(30))
-    novel2 = " ".join(f"y{i}" for i in range(30))
-
-    stats: dict = {}
-
-    def run():
-        q = stream_neardup_ingest(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src),
-            store,
-            ckpt,
-            bloom_front=True,
-            bloom_stats=stats,
-        )
-        q.awaitTermination(180)
-
-    # run 1: two batches; the second's docs are all-novel, so once the
-    # front seeds (index exists after batch 1) it must skip the probe
-    spark.createDataFrame([(1, base), (2, novel)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    spark.createDataFrame([(6, novel2)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    assert stats["probes_skipped"] >= 1 and stats["keys_tested"] > 0
-
-    # run 2: an exact duplicate — identical band keys, so the front
-    # HITS, the probe runs, and the arrival drops
-    before_runs = stats["probes_run"]
-    spark.createDataFrame([(9, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    assert stats["probes_run"] > before_runs
-    got = sorted(r["doc_id"] for r in spark.read.parquet(store + "/docs").collect())
-    assert got == [1, 2, 6]
-
-    # forced replay: every replayed doc self-collides through the
-    # front; the store must not change
-    shutil.rmtree(ckpt)
-    run()
-    got2 = sorted(r["doc_id"] for r in spark.read.parquet(store + "/docs").collect())
-    assert got2 == [1, 2, 6]
-
-
-def test_bloom_front_size_gate_disables_past_ceiling(spark, tmp_path, monkeypatch):
-    """Forced-tiny-ceiling exercise of the bloom front's size gate
-    (r9 verdict #1): when the planned bitmap prices past
-    _BLOOM_FRONT_CEILING_BYTES, the front must AUTO-DISABLE with the
-    reason recorded in bloom_stats — never allocate — and the ingest
-    must keep exact un-fronted semantics: probes run (none skipped)
-    and duplicates are still dropped."""
-    from crane_spark.streaming import pipelines as P
-    from crane_spark.streaming.pipelines import stream_neardup_ingest
-
-    # smallest possible bitmap is 8192 bits = 1024 bytes; a 512-byte
-    # ceiling forces the gate for ANY store size
-    monkeypatch.setattr(P, "_BLOOM_FRONT_CEILING_BYTES", 512)
-
-    src = str(tmp_path / "docs")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(30))
-    novel = " ".join(f"z{i}" for i in range(30))
-
-    stats: dict = {}
-
-    def run():
-        q = stream_neardup_ingest(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src),
-            store,
-            ckpt,
-            bloom_front=True,
-            bloom_stats=stats,
-        )
-        q.awaitTermination(180)
-
-    spark.createDataFrame([(1, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    # batch 2: one novel + one exact duplicate; the gated run must
-    # probe (not skip) and drop the duplicate exactly like un-fronted
-    spark.createDataFrame([(2, novel), (3, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-
-    assert stats.get("disabled") == "bitmap over ceiling"
-    assert stats["probes_skipped"] == 0
-    got = sorted(r["doc_id"] for r in spark.read.parquet(store + "/docs").collect())
-    assert got == [1, 2]
-
-
-def test_bloom_front_plan_prices_without_allocating():
-    """_BloomFront.plan must agree with __init__'s actual layout so
-    the gate's price is the real allocation, and the 10B-key case the
-    r9 verdict named must price past the default 256 MB ceiling."""
-    from crane_spark.streaming.pipelines import (
-        _BLOOM_FRONT_CEILING_BYTES,
-        _BloomFront,
-    )
-
-    for n, fpp in ((1, 0.03), (10_000, 0.03), (5_000_000, 0.01)):
-        front = _BloomFront(n, fpp)
-        assert (front.n_bits, front.k) == _BloomFront.plan(n, fpp)
-
-    n_bits, _ = _BloomFront.plan(10_000_000_000, 0.03)
-    assert n_bits // 8 > _BLOOM_FRONT_CEILING_BYTES
 
 
 def test_session_sizes_stream_state_to_cores_and_batch_to_aqe():

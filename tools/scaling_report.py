@@ -635,8 +635,15 @@ def llm_corpus_scaling(spark) -> list[str]:
                 store,
                 ckpt,
             )
-            q.awaitTermination(1800)
-            secs = time.perf_counter() - t0
+            try:
+                if not q.awaitTermination(1800):
+                    raise TimeoutError(
+                        f"{label} near-dup ingest still running after 1800s; "
+                        "the store holds a partial drain"
+                    )
+                secs = time.perf_counter() - t0
+            finally:
+                q.stop()
             kept = spark.read.parquet(store + "/docs").count()
             rates.append(n / secs)
             out.append(
