@@ -5,7 +5,7 @@ one JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>,
      "session": {"master": "local[N]", "shuffle_partitions": ...,
-                 "initial_partition_num": ...}}
+                 "checkpoint_file_manager": ..., "initial_partition_num": ...}}
 
 Each query executes its full physical plan into the noop sink (no
 driver collect — we measure the engine, not result transfer).
@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import platform
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -78,6 +80,20 @@ def machine_state(sf_dir: str) -> dict:
     except (OSError, ValueError):
         state["cache_warm"] = None
     return state
+
+
+def checkpoint_file_manager(spark) -> str:
+    """Simple name of the CheckpointFileManager Spark builds for a
+    local checkpoint under this session's conf (session.py explains
+    the choice)."""
+    jvm = spark._jvm
+    factory = getattr(
+        jvm,
+        "org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager",
+    )
+    path = jvm.org.apache.hadoop.fs.Path(pathlib.Path(tempfile.gettempdir()).as_uri())
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return factory.create(path, conf).getClass().getSimpleName()
 
 
 def loadavg_1m():
@@ -334,6 +350,7 @@ def main() -> int:
             # (zipimport, TUNING.md "Python worker round trips").
             "python": platform.python_version(),
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "checkpoint_file_manager": checkpoint_file_manager(spark),
             "initial_partition_num": spark.conf.get(
                 "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
             ),

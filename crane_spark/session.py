@@ -27,6 +27,25 @@ local[N] test harness:
   checkpoint keeps its old count, and changing the count needs a new
   checkpoint. Under SPARK_GRAFT_MASTER without SPARK_GRAFT_CPUS the
   count stays 32.
+* Streaming checkpoints (offset, commit and file-source logs, state
+  store deltas and their checksum files) are written through Spark's
+  `FileSystemBasedCheckpointFileManager`, not the FileContext one
+  Spark picks by default. On a local `file:` path, every FileContext
+  rename asks `RawLocalFileSystem.getFileLinkStatus`, which forks a
+  `readlink` process; a state commit of a few thousand keys then
+  spends ~100 ms per partition in process starts. `FileSystem.rename`
+  is one `rename(2)`. The no-overwrite contract that concurrent-writer
+  detection relies on stays: locally both managers check the target
+  and then rename, and on HDFS `DistributedFileSystem.rename` refuses
+  to overwrite atomically and the manager raises
+  `FileAlreadyExistsException` on its `false`. Spark's best-effort
+  `overwriteIfPossible` (state deltas and snapshots) differs: that
+  same refusal, also made by the Hive `ProxyLocalFileSystem` that
+  serves `file:` in pyspark, keeps the existing file, so a replayed
+  batch keeps the delta its first attempt wrote for the same offsets.
+  The files on disk are the same under both. Pass `extra_conf` with
+  `FileContextBasedCheckpointFileManager` for a filesystem whose
+  `FileSystem.rename` is not atomic.
 
 Reference lineage: the reference hard-codes a 10-node cluster and a
 500-tuple micro-batch (/root/reference/util.py:59-61, dfs/env.py:4-14);
@@ -77,6 +96,12 @@ DEFAULT_CONF: dict[str, str] = {
             if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb"
             else "HDFSBackedStateStoreProvider"
         )
+    ),
+    # One rename(2) per checkpoint file instead of a forked readlink
+    # (see the module docstring).
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
     ),
     "spark.ui.enabled": "false",
     # Local-mode driver IS the executor: long many-query sessions

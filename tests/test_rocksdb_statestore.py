@@ -18,6 +18,11 @@ EVENT_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, va
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 HDFS = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 def _write_events(spark, path, rows):
@@ -32,20 +37,25 @@ def _write_events(spark, path, rows):
     )
 
 
-class _provider:
-    """Set the state-store provider for queries started in the block,
-    restoring the session default afterwards (the provider is read per
-    streaming query at start, so this is safely scoped)."""
+class _scoped_conf:
+    """Set a SQL conf for queries started in the block, restoring the
+    session value afterwards (the state-store provider and the
+    checkpoint file manager are read per streaming query at start, so
+    this is safely scoped)."""
 
-    def __init__(self, spark, cls):
-        self.spark, self.cls = spark, cls
+    def __init__(self, spark, key, value):
+        self.spark, self.key, self.value = spark, key, value
 
     def __enter__(self):
-        self.prev = self.spark.conf.get(_PROVIDER_KEY)
-        self.spark.conf.set(_PROVIDER_KEY, self.cls)
+        self.prev = self.spark.conf.get(self.key)
+        self.spark.conf.set(self.key, self.value)
 
     def __exit__(self, *exc):
-        self.spark.conf.set(_PROVIDER_KEY, self.prev)
+        self.spark.conf.set(self.key, self.prev)
+
+
+def _provider(spark, cls):
+    return _scoped_conf(spark, _PROVIDER_KEY, cls)
 
 
 def _rocksdb_available(spark, tmp_path) -> bool:
@@ -200,3 +210,62 @@ def test_resumed_checkpoint_keeps_its_state_partition_count(spark, tmp_path, pro
     assert got == Counter(
         w for text in inputs for line in text.splitlines() for w in line.split(" ")
     )
+
+
+@pytest.mark.parametrize("provider", [HDFS, ROCKSDB], ids=["hdfs", "rocksdb"])
+def test_checkpoint_resumes_across_checkpoint_file_managers(spark, tmp_path, provider):
+    """A stateful wordcount checkpointed under Spark's FileContext
+    manager resumes under the session's FileSystem manager, and the
+    reverse, so existing checkpoints survive this default and its
+    rollback. Counts match a recount of all input, and both managers
+    write the same checkpoint file set (RocksDB names its state files
+    by uuid, so there only the logs outside state/ are compared)."""
+    import os
+    from collections import Counter
+
+    from crane_spark.sources import read_text_lines
+    from crane_spark.streaming import stream_wordcount
+
+    if provider == ROCKSDB and not _rocksdb_available(spark, tmp_path / "probe"):
+        pytest.skip("RocksDB state store native library unavailable")
+    inputs = ["x y x\nz\n", "z w x\ny y\n"]
+    expected = Counter(
+        w for text in inputs for line in text.splitlines() for w in line.split(" ")
+    )
+    default = spark.conf.get(_MANAGER_KEY)
+
+    def drain(src, ckpt, manager):
+        with _scoped_conf(spark, _MANAGER_KEY, manager):
+            q = (
+                stream_wordcount(read_text_lines(spark, str(src), streaming=True))
+                .writeStream.format("memory")
+                .queryName("cross_manager_sink")
+                .outputMode("complete")
+                .option("checkpointLocation", str(ckpt))
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(120)
+        rows = spark.table("cross_manager_sink").collect()
+        return {r["token"]: r["cnt"] for r in rows}
+
+    def files(ckpt):
+        found = set()
+        for root, _, names in os.walk(ckpt):
+            rel = os.path.relpath(root, ckpt)
+            if provider == HDFS or rel.split(os.sep)[0] != "state":
+                found.update(os.path.join(rel, n) for n in names)
+        return found
+
+    directions = {"forward": (FILE_CONTEXT, default), "back": (default, FILE_CONTEXT)}
+    snapshots = {}
+    with _provider(spark, provider):
+        for name, (first, then) in directions.items():
+            src, ckpt = tmp_path / name / "txt", tmp_path / name / "ckpt"
+            src.mkdir(parents=True)
+            (src / "0.txt").write_text(inputs[0])
+            drain(src, ckpt, first)
+            snapshots[name] = files(ckpt)
+            (src / "1.txt").write_text(inputs[1])
+            assert drain(src, ckpt, then) == expected, name
+    assert snapshots["forward"] == snapshots["back"]

@@ -544,6 +544,46 @@ def test_idempotent_append_sink_checkpoint_loss_is_at_least_once(spark, tmp_path
     assert got == sorted(list(range(10)) * 2 + list(range(10, 15)))
 
 
+def test_idempotent_append_sink_stopped_after_a_batch_resumes_exactly_once(
+    spark, tmp_path
+):
+    """q.stop() as soon as lastProgress shows a committed batch, then a
+    restart on the same checkpoint: every input row lands exactly once,
+    whether the stop fell between batches or inside the next one."""
+    import time
+
+    from crane_spark.streaming.pipelines import (
+        read_idempotent_sink,
+        stream_append_idempotent,
+    )
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    for i in range(4):
+        spark.range(10 * i, 10 * (i + 1)).coalesce(1).write.mode("append").parquet(src)
+
+    def start():
+        stream = (
+            spark.readStream.schema("id bigint")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        return stream_append_idempotent(stream, out, ckpt)
+
+    q = start()
+    deadline = time.time() + 120
+    while q.lastProgress is None and time.time() < deadline:
+        time.sleep(0.05)
+    assert q.lastProgress is not None, "no batch committed"
+    q.stop()
+    assert q.awaitTermination(60)
+
+    start().awaitTermination(120)
+    got = sorted(r["id"] for r in read_idempotent_sink(spark, out).collect())
+    assert got == list(range(40))
+
+
 def test_stream_neardup_ingest_short_docs(spark, tmp_path):
     """Documents with fewer than shingle_n tokens have no bands; the
     exact-hash path must still dedup them within-batch, across runs,
@@ -1665,7 +1705,8 @@ def test_session_sizes_stream_state_to_cores_and_batch_to_aqe():
         "import json\n"
         "from crane_spark.session import DEFAULT_CONF as c, default_master\n"
         "print(json.dumps([default_master(), c['spark.sql.shuffle.partitions'],"
-        " c['spark.sql.adaptive.coalescePartitions.initialPartitionNum']]))\n"
+        " c['spark.sql.adaptive.coalescePartitions.initialPartitionNum'],"
+        " c['spark.sql.streaming.checkpointFileManagerClass'].rsplit('.', 1)[1]]))\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     base = {
@@ -1685,17 +1726,90 @@ def test_session_sizes_stream_state_to_cores_and_batch_to_aqe():
         )
         return json.loads(out.stdout)
 
-    assert resolved(SPARK_GRAFT_CPUS="3") == ["local[3]", "3", "32"]
+    manager = "FileSystemBasedCheckpointFileManager"
+    assert resolved(SPARK_GRAFT_CPUS="3") == ["local[3]", "3", "32", manager]
     assert resolved(SPARK_GRAFT_CPUS="3", SPARK_GRAFT_SHUFFLE="11") == [
         "local[3]",
         "3",
         "11",
+        manager,
     ]
     assert resolved(SPARK_GRAFT_MASTER="local-cluster[2,1,1024]") == [
         "local-cluster[2,1,1024]",
         "32",
         "32",
+        manager,
     ]
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_file_manager(spark, path, cls=None):
+    """The CheckpointFileManager Spark builds for `path` from the
+    session's Hadoop conf, with `cls` (a simple class name) set in
+    that conf when given."""
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if cls:
+        conf.set(_MANAGER_KEY, _CHECKPOINTING + cls)
+    factory = getattr(spark._jvm, _CHECKPOINTING + "CheckpointFileManager")
+    return factory.create(spark._jvm.org.apache.hadoop.fs.Path(path.as_uri()), conf)
+
+
+def test_session_writes_checkpoints_through_the_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoints of a crane_spark session go through
+    FileSystemBasedCheckpointFileManager (one rename(2) per file, no
+    forked readlink). A Spark upgrade that moves the class fails here
+    instead of falling back to the FileContext manager."""
+    manager = _checkpoint_file_manager(spark, tmp_path)
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+@pytest.mark.parametrize(
+    "manager",
+    ["FileContextBasedCheckpointFileManager", "FileSystemBasedCheckpointFileManager"],
+    ids=["filecontext", "filesystem"],
+)
+def test_checkpoint_manager_keeps_the_no_overwrite_contract(spark, tmp_path, manager):
+    """createAtomic(overwriteIfPossible=False) onto an existing file
+    raises FileAlreadyExistsException at close and keeps the old
+    bytes: offset-log and commit-log concurrent-writer detection rests
+    on it. overwriteIfPossible=True never raises; Spark documents it
+    as best effort. FileContext replaces the file. FileSystem.rename
+    refuses an existing target (HDFS, and Hive's ProxyLocalFileSystem
+    that serves file: in this Spark build), so the first file
+    written stays. cancel() leaves nothing behind."""
+    from py4j.protocol import Py4JJavaError
+
+    fm = _checkpoint_file_manager(spark, tmp_path, manager)
+    assert fm.getClass().getSimpleName() == manager
+    jvm = spark._jvm
+
+    def write(name, data, overwrite):
+        path = jvm.org.apache.hadoop.fs.Path((tmp_path / name).as_uri())
+        out = fm.createAtomic(path, overwrite)
+        out.write(bytearray(data))
+        return out
+
+    target = tmp_path / "0"
+    target.write_bytes(b"old")
+    out = write("0", b"new", False)
+    with pytest.raises(Py4JJavaError) as raised:
+        out.close()
+    exists_error = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert exists_error.isInstance(raised.value.java_exception)
+    assert target.read_bytes() == b"old"
+
+    write("0", b"new", True).close()
+    replaced = manager == "FileContextBasedCheckpointFileManager"
+    assert target.read_bytes() == (b"new" if replaced else b"old")
+
+    (tmp_path / "cancelled").mkdir()
+    write("cancelled/1", b"partial", False).cancel()
+    assert list((tmp_path / "cancelled").iterdir()) == []
 
 
 def test_stream_state_and_batch_exchange_take_separate_counts(spark, tmp_path):
