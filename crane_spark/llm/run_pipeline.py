@@ -38,6 +38,7 @@ from crane_spark.llm.sampling import HASH_SPACE, hash_bucket
 from crane_spark.operators.caching import loop_checkpoint
 from crane_spark.queries.corpus import N_SHARDS
 from crane_spark.sources import versioned as V
+from crane_spark.streaming.pipelines import _read_batches, _start_batch_store
 from crane_spark.tables import table
 
 
@@ -176,12 +177,13 @@ def stream_training_corpus(
                           stage counts MATCH it exactly (tested)
       5 shard             stateless hash deal
 
-    Exactly-once: batch N's survivors write `mode("overwrite")` into
-    per-(queryId, batch) subdirectories of corpus/ and hashes/ (the
-    same idempotence construction as `stream_append_idempotent`), and
-    a stage-count ledger row per batch appends to report/ keyed by
-    (query_id, batch_id) so replays overwrite rather than double-count.
-    Read the corpus with `read_stream_corpus`.
+    Exactly-once: corpus/, hashes/, lang_counts/ and report/ are
+    written in that order through the per-(queryId, batch) overwrite
+    protocol (`streaming.pipelines._start_batch_store`), so a replayed
+    batch overwrites its own directories rather than double-counting.
+    hashes/, lang_counts/ and report/ rows carry their (query_id,
+    batch_id), which lets a replay exclude its own earlier rows from
+    the cross-batch probes. Read the corpus with `read_stream_corpus`.
 
     At 100 TB: the md5 index is one narrow column (bucketable); the
     gram set is eval-suite-sized and broadcasts; all other stages are
@@ -196,17 +198,15 @@ def stream_training_corpus(
     """
     import os
 
-    from crane_spark.streaming.pipelines import _streaming_query_id
-
     corpus_dir = out_root + "/corpus"
     hashes_dir = out_root + "/hashes"
     report_dir = out_root + "/report"
     counts_dir = out_root + "/lang_counts"
 
-    def ingest(batch, batch_id: int) -> None:
+    def ingest(batch, write, qid: str, batch_id: int) -> None:
         staged = []
         try:
-            _ingest_body(batch, batch_id, staged)
+            _ingest_body(batch, write, qid, batch_id, staged)
         finally:
             # free whatever stages this attempt materialized — even on
             # a failed sink write, since foreachBatch retries the batch
@@ -227,10 +227,8 @@ def stream_training_corpus(
                 release_reliable_checkpoint(frame)
                 release_local_checkpoint(frame)
 
-    def _ingest_body(batch, batch_id: int, staged: list) -> None:
+    def _ingest_body(batch, write, qid: str, batch_id: int, staged: list) -> None:
         spark = batch.sparkSession
-        qid = _streaming_query_id(checkpoint)
-        sub = os.path.join(qid, f"batch-{batch_id}")
 
         bench = (
             exploded_word_grams(eval_docs, gram_n, [], out="g")
@@ -260,21 +258,11 @@ def stream_training_corpus(
             # batch replays under the same checkpoint) is excluded — otherwise
             # the replay would anti-join against itself, dedup to zero rows,
             # and overwrite corpus/<qid>/batch-N with an empty frame.
-            # mergeSchema tolerates pre-ledger stores whose files carry only
-            # `_h`; their null query_id/batch_id never match and stay known.
             known = (
-                spark.read.option("recursiveFileLookup", "true")
-                .option("mergeSchema", "true")
-                .parquet(hashes_dir)
+                _read_batches(spark, hashes_dir)
+                .filter(~((F.col("query_id") == qid) & (F.col("batch_id") == batch_id)))
+                .select("_h")
             )
-            if "query_id" in known.columns:
-                known = known.filter(
-                    ~(
-                        F.col("query_id").eqNullSafe(F.lit(qid))
-                        & F.col("batch_id").eqNullSafe(F.lit(batch_id))
-                    )
-                )
-            known = known.select("_h")
             deduped = deduped.join(known, "_h", "left_anti")
         deduped = loop_checkpoint(deduped, 2, reliable_every)
         staged.append(deduped)
@@ -295,18 +283,11 @@ def stream_training_corpus(
         staged.append(clean)
         counts["3_decontaminated"] = clean.count()
 
-        # cumulative language counts = prior batches' ledger + this
-        # one. Full-row dropDuplicates first: after a ledger
-        # compaction a replayed batch's rows can exist in BOTH the
-        # compacted files and its rewritten subdir (identical rows —
-        # the funnel is deterministic); without the dedup they would
-        # double-count (compact_corpus_ledger's contract).
+        # cumulative language counts = prior batches' ledger + this one
         batch_counts = clean.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
         if os.path.exists(counts_dir):
             prior = (
-                spark.read.option("recursiveFileLookup", "true")
-                .parquet(counts_dir)
-                .dropDuplicates()
+                _read_batches(spark, counts_dir)
                 .filter(
                     ~((F.col("query_id") == qid) & (F.col("batch_id") == batch_id))
                 )
@@ -331,88 +312,41 @@ def stream_training_corpus(
             "source",
             (hash_bucket("doc_id", "shard") % n_shards).cast("int").alias("shard"),
         )
-        # per-(query, batch) overwrite directories: replay-idempotent
-        sharded.write.mode("overwrite").parquet(os.path.join(corpus_dir, sub))
-        deduped.select(
-            "_h",
-            F.lit(qid).alias("query_id"),
-            F.lit(batch_id).alias("batch_id"),
-        ).write.mode("overwrite").parquet(os.path.join(hashes_dir, sub))
-        batch_counts.select(
-            F.lit(qid).alias("query_id"),
-            F.lit(batch_id).alias("batch_id"),
-            "lang",
-            "n",
-        ).write.mode("overwrite").parquet(os.path.join(counts_dir, sub))
-        spark.createDataFrame(
-            [(qid, batch_id, k, v) for k, v in sorted(counts.items())],
-            "query_id string, batch_id long, stage string, n_docs long",
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(report_dir, sub))
-
-    return (
-        docs.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_corpus_ledger(
-    spark: SparkSession, out_root: str, target_files: int = 4
-) -> dict[str, int]:
-    """Periodic compaction for `stream_training_corpus`'s ledger
-    state (TUNING.md state-growth audit row). A year-long stream
-    writes one small per-(query, batch) directory set per micro-batch
-    into hashes/, lang_counts/ and report/; the per-batch probe and
-    the cumulative-count read then pay an ever-growing FILE LISTING —
-    that listing, not the narrow rows, is the real scale cost.
-    Compaction rewrites each store as a full-row dedup into
-    ``target_files`` files through `_crash_safe_rewrite`'s two-rename
-    swap (stranded .old/.merged recovery included). Rows and their (query_id, batch_id) keys are
-    PRESERVED for all three stores.
-
-    A groupBy fold of lang_counts/report (one row per lang/stage) was
-    REJECTED by this module's own crash matrix: summing aggregates is
-    not idempotent under `_crash_safe_rewrite`'s .old-fold recovery —
-    a crash between install and .old cleanup re-folds rows whose
-    totals the installed store already contains (measured: en=14
-    where the never-crashed run says 7). Full-row dedup IS idempotent
-    there, and keeping per-batch keys also keeps the ingest's
-    replayed-batch exclusion filter exact. Replay-after-compaction
-    duplicate copies (a batch's rows in both the compacted files and
-    its rewritten subdir) are absorbed by the read paths' full-row
-    dropDuplicates (deterministic funnel => identical rows).
-
-    Same single-writer rule as the other maintenance ops: run while
-    no stream is appending. Returns per-store rewritten row counts."""
-    from crane_spark.streaming.pipelines import _crash_safe_rewrite
-
-    out: dict[str, int] = {}
-    for name in ("hashes", "lang_counts", "report"):
-        n = _crash_safe_rewrite(
-            spark,
-            out_root + "/" + name,
-            lambda df: df.dropDuplicates(),
-            target_files,
-            recursive=True,
+        write(sharded, corpus_dir)
+        write(
+            deduped.select(
+                "_h",
+                F.lit(qid).alias("query_id"),
+                F.lit(batch_id).alias("batch_id"),
+            ),
+            hashes_dir,
         )
-        if n is not None:
-            out[name] = n
-    return out
+        write(
+            batch_counts.select(
+                F.lit(qid).alias("query_id"),
+                F.lit(batch_id).alias("batch_id"),
+                "lang",
+                "n",
+            ),
+            counts_dir,
+        )
+        write(
+            spark.createDataFrame(
+                [(qid, batch_id, k, v) for k, v in sorted(counts.items())],
+                "query_id string, batch_id long, stage string, n_docs long",
+            ).coalesce(1),
+            report_dir,
+        )
+
+    return _start_batch_store(docs, checkpoint, ingest)
 
 
 def read_stream_corpus(spark: SparkSession, out_root: str):
     """(corpus, per-stage report) accumulated by `stream_training_corpus`
     across every batch and run."""
-    corpus = spark.read.option("recursiveFileLookup", "true").parquet(
-        out_root + "/corpus"
-    )
+    corpus = _read_batches(spark, out_root + "/corpus")
     report = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_root + "/report")
-        # replay-after-compaction can leave identical copies of a
-        # batch's rows in two file sets; see compact_corpus_ledger
-        .dropDuplicates()
+        _read_batches(spark, out_root + "/report")
         .groupBy("stage")
         .agg(F.sum("n_docs").alias("n_docs"))
     )

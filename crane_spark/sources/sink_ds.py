@@ -15,7 +15,6 @@ checkpoint, replacing the XOR-ack machinery).
 
 Usage:
     spark.dataSource.register(CraneSinkDataSource)
-    df.write.format("crane_sink").option("path", out).mode("append").save()
     df.writeStream.format("crane_sink").option("path", out)...
 """
 
@@ -29,34 +28,18 @@ import uuid
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamWriter,
-    DataSourceWriter,
     WriterCommitMessage,
 )
 
 
-# Committed manifests only: the batch write's ``_MANIFEST.json`` and one
-# ``_MANIFEST-{batchId}.json`` per micro-batch.
-_MANIFEST_RE = re.compile(r"_MANIFEST(?:-(\d+))?\.json")
+# Committed manifests only: one ``_MANIFEST-{batchId}.json`` per micro-batch.
+_MANIFEST_RE = re.compile(r"_MANIFEST-(\d+)\.json")
 
 
 class _FileDone(WriterCommitMessage):
     def __init__(self, rel_path: str, n_rows: int):
         self.rel_path = rel_path
         self.n_rows = n_rows
-
-
-def _write_partition(path: str, prefix: str, iterator) -> _FileDone:
-    from pyspark import TaskContext
-
-    pid = TaskContext.get().partitionId()
-    rel = f"{prefix}part-{pid:05d}-{uuid.uuid4().hex[:8]}.txt"
-    os.makedirs(path, exist_ok=True)
-    n = 0
-    with open(os.path.join(path, rel), "w", encoding="utf-8") as fh:
-        for row in iterator:
-            fh.write(f"{row[0]} --- {row[1]}\n")
-            n += 1
-    return _FileDone(rel, n)
 
 
 def _commit_manifest(path: str, name: str, messages) -> None:
@@ -73,26 +56,22 @@ def _commit_manifest(path: str, name: str, messages) -> None:
     os.replace(tmp, os.path.join(path, name))
 
 
-class CraneSinkWriter(DataSourceWriter):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-
-    def write(self, iterator) -> _FileDone:
-        return _write_partition(self.path, "", iterator)
-
-    def commit(self, messages) -> None:
-        _commit_manifest(self.path, "_MANIFEST.json", messages)
-
-    def abort(self, messages) -> None:  # uncommitted files are ignorable
-        pass
-
-
 class CraneSinkStreamWriter(DataSourceStreamWriter):
     def __init__(self, options: dict):
         self.path = options["path"]
 
     def write(self, iterator) -> _FileDone:
-        return _write_partition(self.path, "", iterator)
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        rel = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.txt"
+        os.makedirs(self.path, exist_ok=True)
+        n = 0
+        with open(os.path.join(self.path, rel), "w", encoding="utf-8") as fh:
+            for row in iterator:
+                fh.write(f"{row[0]} --- {row[1]}\n")
+                n += 1
+        return _FileDone(rel, n)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
         _commit_manifest(self.path, f"_MANIFEST-{batchId}.json", messages)
@@ -106,9 +85,6 @@ class CraneSinkDataSource(DataSource):
     def name(cls) -> str:
         return "crane_sink"
 
-    def writer(self, schema, overwrite: bool) -> CraneSinkWriter:  # noqa: ARG002
-        return CraneSinkWriter(self.options)
-
     def streamWriter(self, schema, overwrite: bool) -> CraneSinkStreamWriter:  # noqa: ARG002
         return CraneSinkStreamWriter(self.options)
 
@@ -116,15 +92,14 @@ class CraneSinkDataSource(DataSource):
 def read_crane_sink(path: str) -> dict[str, str]:
     """Read back committed ``key --- value`` output (manifest-gated).
 
-    Manifests apply in commit order — the batch-write ``_MANIFEST.json``
-    first, then ``_MANIFEST-{batchId}.json`` by NUMERIC batch id — so a
-    key rewritten by a later micro-batch ends at its latest value
-    (name order would put batch 10 before batch 2)."""
+    Manifests apply in commit order — ``_MANIFEST-{batchId}.json`` by
+    NUMERIC batch id — so a key rewritten by a later micro-batch ends at
+    its latest value (name order would put batch 10 before batch 2)."""
     manifests = []
     for name in os.listdir(path):
         m = _MANIFEST_RE.fullmatch(name)
         if m:
-            manifests.append((int(m.group(1) or -1), name))
+            manifests.append((int(m.group(1)), name))
     out: dict[str, str] = {}
     for _, name in sorted(manifests):
         with open(os.path.join(path, name), encoding="utf-8") as fh:

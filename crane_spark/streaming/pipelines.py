@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from crane_spark.functions.aggregates import dsum
 from crane_spark.operators.topology import wordcount
@@ -138,8 +138,7 @@ def stream_upsert_parquet(
     targets Delta/Iceberg MERGE). This is the 'iterative/merge sink'
     surface from SURVEY §2.2 that plain append sinks can't express.
 
-    Crash-safety is the same rename discipline as
-    :func:`_crash_safe_rewrite`: the merged store is written ONCE to
+    Crash-safety is a rename swap: the merged store is written ONCE to
     a staging dir and installed via two metadata-only renames
     (live -> .old, staging -> live), so the live store is never a
     half-written overwrite target — a crash at any point leaves either
@@ -179,13 +178,7 @@ def stream_upsert_parquet(
         if os.path.exists(old):
             shutil.rmtree(old)
 
-    return (
-        df.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(df, checkpoint, upsert).outputMode("update").start()
 
 
 def run_available_now(
@@ -438,11 +431,17 @@ def stream_neardup_ingest(
             for staged in (keep, keep_short, bands, sets, short, ball):
                 release_local_checkpoint(staged)
 
+    return _foreach_batch(docs, checkpoint, ingest).start()
+
+
+def _foreach_batch(df: DataFrame, checkpoint: str, fn) -> DataStreamWriter:
+    """The start every foreachBatch sink here shares: ``fn(batch,
+    batch_id)`` per micro-batch, checkpointed at ``checkpoint``, under
+    ``availableNow`` (drain what is there, then stop)."""
     return (
-        docs.writeStream.foreachBatch(ingest)
+        df.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -459,67 +458,70 @@ def _streaming_query_id(checkpoint: str) -> str:
         return _json.load(fh)["id"]
 
 
+def _start_batch_store(df: DataFrame, checkpoint: str, ingest) -> StreamingQuery:
+    """The per-(queryId, batch) overwrite protocol of every foreachBatch
+    store below. Per micro-batch, ``ingest(batch, write, qid,
+    batch_id)`` runs, and each ``write(frame, store)`` it makes writes
+    ``frame`` with ``mode("overwrite")`` into ``<store>/<qid>/batch-N``.
+
+    A replayed batch (a crash between the data writes and the
+    checkpoint commit re-runs it under the same query id) REPLACES its
+    own directories instead of appending next to them: idempotence by
+    construction, with no ledger on the correctness path. Scoping by
+    queryId (from the checkpoint metadata, the id Delta calls
+    txnAppId) means a REBUILT checkpoint, whose batch ids restart at 0
+    but whose batch 0 may hold different data, never overwrites stale
+    output: it writes under a fresh queryId. The failure direction
+    after checkpoint loss is therefore at-least-once (re-delivery,
+    visible across queryIds), never silent data loss. Each store keeps
+    one directory per batch; read it with `_read_batches`."""
+    import os
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        qid = _streaming_query_id(checkpoint)
+
+        def write(frame: DataFrame, store: str) -> None:
+            frame.write.mode("overwrite").parquet(
+                os.path.join(store, qid, f"batch-{batch_id}")
+            )
+
+        ingest(batch, write, qid, batch_id)
+
+    return _foreach_batch(df, checkpoint, run).start()
+
+
+def _read_batches(spark: SparkSession, store: str) -> DataFrame:
+    """Every batch `_start_batch_store` wrote into ``store``, across
+    query ids: per-batch subdirectories need a recursive file listing,
+    which stays a planning-time metadata operation."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(store)
+
+
 def stream_append_idempotent(
     df: DataFrame, path: str, checkpoint: str
 ) -> StreamingQuery:
     """foreachBatch parquet sink with EXACTLY-ONCE batch application:
-    micro-batch N writes `mode("overwrite")` into its own directory
-    `data/<queryId>/batch-N`, so a replayed batch (crash between the
-    data write and the checkpoint commit re-runs it) REPLACES its own
-    previous output instead of appending next to it — idempotence by
-    construction, with no atomicity gap between a data append and a
-    ledger append (there is no ledger on the correctness path).
-
-    A marker file `ledger/<queryId>-N.done` (tmp + atomic rename) is
-    written after the commit purely as a FAST-PATH: a replayed batch
-    whose marker exists skips recompute entirely. The check is one
-    O(1) filesystem stat — never a scan of committed-batch history —
-    so a year-long stream pays the same per-batch cost as batch 0.
-
-    Scoping by queryId (read from the checkpoint metadata, the id
-    Delta calls txnAppId) means a REBUILT checkpoint — whose batch ids
-    restart at 0 but whose batch 0 may now contain different data —
-    never trusts stale state: it writes under a fresh queryId subdir.
-    The failure direction after checkpoint loss is therefore
-    at-least-once (re-delivery, visible duplicates across queryIds),
-    never silent data loss. Read the sink with
-    `read_idempotent_sink`, which recurses into the per-batch dirs.
+    micro-batch N overwrites its own directory `data/<queryId>/batch-N`
+    (`_start_batch_store`), so a replay replaces the batch's output
+    instead of duplicating it, and a rebuilt checkpoint re-delivers
+    under a fresh queryId rather than losing data. Read the sink with
+    `read_idempotent_sink`.
 
     Contrast with `stream_to_parquet` (Spark's parquet sink has its
     own WAL/manifest) — this pattern is for destinations Spark doesn't
     manage itself."""
-    import os
-
     data_dir = path + "/data"
-    ledger_dir = path + "/ledger"
 
-    def append_once(batch: DataFrame, batch_id: int) -> None:
-        qid = _streaming_query_id(checkpoint)
-        marker = os.path.join(ledger_dir, f"{qid}-{batch_id}.done")
-        if os.path.exists(marker):
-            return  # replayed batch: already fully applied
-        batch.write.mode("overwrite").parquet(
-            os.path.join(data_dir, qid, f"batch-{batch_id}")
-        )
-        os.makedirs(ledger_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("")
-        os.rename(tmp, marker)  # atomic on POSIX
+    def append_once(batch: DataFrame, write, _qid: str, _batch_id: int) -> None:
+        write(batch, data_dir)
 
-    return (
-        df.writeStream.foreachBatch(append_once)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batch_store(df, checkpoint, append_once)
 
 
 def read_idempotent_sink(spark: SparkSession, path: str) -> DataFrame:
     """Read everything `stream_append_idempotent` committed (all query
-    ids, all batches): per-batch subdirectories need a recursive file
-    listing, which stays a planning-time metadata operation."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(path + "/data")
+    ids, all batches)."""
+    return _read_batches(spark, path + "/data")
 
 
 def stream_vector_ingest(
@@ -540,41 +542,32 @@ def stream_vector_ingest(
     batch's assignment is consistent with every other's.
 
     Exactly-once by construction: batch N overwrites its own
-    `<queryId>/batch-N` subdirectory (the `stream_append_idempotent`
-    pattern), and `read_vector_index` dedups on id as a final guard
-    for the cross-queryId re-delivery after checkpoint loss.
+    `<queryId>/batch-N` subdirectory (`_start_batch_store`), and
+    `read_vector_index` dedups on id as a final guard for the
+    cross-queryId re-delivery after checkpoint loss.
 
     Serving is `ivf_probe_topk(..., assigned=...)` over the read-back
     store — the assignment computed at ingest is REUSED, so query
     time pays only centroid-probe + in-cell re-rank. At 100 TB the
     store becomes a table partitioned/bucketed by centroid_id; the
     foreachBatch body is unchanged."""
-    import os
-
     from crane_spark.llm.similarity import ivf_assign
 
     cents = centroids.localCheckpoint(eager=True)
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        qid = _streaming_query_id(checkpoint)
+    def ingest(batch: DataFrame, write, _qid: str, _batch_id: int) -> None:
         b = batch.dropDuplicates([id_col])
         assigned = ivf_assign(b, cents, vec_col, id_col).select(
             id_col, "centroid_id"
         )
-        (
+        write(
             b.join(assigned, id_col)
             .select(id_col, "centroid_id", vec_col)
-            .sortWithinPartitions("centroid_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_path, qid, f"batch-{batch_id}"))
+            .sortWithinPartitions("centroid_id"),
+            store_path,
         )
 
-    return (
-        vectors.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batch_store(vectors, checkpoint, ingest)
 
 
 def read_vector_index(
@@ -583,147 +576,7 @@ def read_vector_index(
     """The accumulated (id, centroid_id, vector) index across every
     ingest batch and run; id-deduped so re-delivery after checkpoint
     loss can never double-count a vector."""
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store_path)
-        .dropDuplicates([id_col])
-    )
-
-
-def _crash_safe_rewrite(
-    spark: SparkSession,
-    path: str,
-    transform,
-    target_files: int,
-    recursive: bool = False,
-) -> int | None:
-    """Rewrite the parquet dir at ``path`` as ``transform(df)`` in
-    ``target_files`` files, installed via the two-rename swap (live ->
-    .old, staging -> live) so the dir is always readable except during
-    the metadata-only renames. Recovers a previous crashed swap
-    (stranded ``.old``/``.compact``) first. Returns the rewritten row
-    count, or None if the dir does not exist. Single-writer: run only
-    while no stream is appending to ``path``.
-
-    Two recovery/read hardenings (ADVICE r8):
-
-    * Reads use ``mergeSchema`` — a store appended to across versions
-      holds mixed parquet schemas: the corpus hash ledger
-      (`compact_corpus_ledger`) keeps pre-ledger files that carry only
-      ``_h`` beside files with ``_h, query_id, batch_id``. A plain read
-      may infer the schema from an OLD footer, which would let the
-      compaction rewrite the store WITHOUT the newer columns,
-      permanently stripping the ledger keys from rows that had them.
-      With mergeSchema the union schema wins and pre-ledger rows read
-      back NULL, which the ingest's replay filter treats as known.
-    * If BOTH the live dir and ``.old`` exist, a crash landed between
-      the two renames and a restarted ingest recreated the live dir
-      (its appends only) before this maintenance ran. Deleting ``.old``
-      then — the pre-crash behavior — would discard the entire
-      pre-maintenance store. Instead ``.old`` is FOLDED into the
-      rewrite input; exact-duplicate rows across the two dirs (the
-      same row seen pre- AND post-crash) are the merge's own artifact,
-      so the merged input is full-row deduplicated before the
-      transform — every store routed through here treats identical
-      rows as one (ledger rows, id-unique vectors).
-
-    Crucially (ADVICE r9), the folded ``.old`` is never deleted before
-    the new store is installed: recovery unconditionally deletes
-    staging, so between "rmtree(.old)" and "rename(staging, live)" the
-    staging dir would hold the ONLY copy of .old's rows and a crash
-    there loses them. Instead ``.old`` is renamed aside to
-    ``.merged*`` (glob-numbered: a crash-after-install leftover can
-    coexist with a fresh fold) and deleted only after
-    ``rename(staging, live)`` lands; recovery folds any stranded
-    ``.merged*`` dir into the inputs exactly like ``.old``."""
-    import glob as _glob
-    import os
-    import shutil
-
-    old = path + ".old"
-    staging = path + ".compact"
-    merged_dirs = sorted(_glob.glob(_glob.escape(path) + ".merged*"))
-    if os.path.exists(staging):
-        shutil.rmtree(staging)  # disposable: side dirs outlive install
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    if not os.path.exists(path) and merged_dirs:
-        os.rename(merged_dirs[0], path)
-        merged_dirs = merged_dirs[1:]
-    if not os.path.exists(path):
-        return None
-    inputs = [path]
-    if os.path.exists(old):
-        inputs.append(old)  # mid-swap crash + restarted writer: merge
-    inputs.extend(merged_dirs)  # stranded fold-asides from a crash
-    reader = spark.read.option("mergeSchema", "true")
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    df_in = reader.parquet(*inputs)
-    if len(inputs) > 1:
-        df_in = df_in.dropDuplicates()
-    df = transform(df_in)
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    aside = None
-    if os.path.exists(old):
-        # set the folded .old ASIDE — its rows exist only in staging
-        # until the install rename; deletion waits until after it
-        aside = next(
-            p
-            for i in range(len(merged_dirs) + 2)
-            if not os.path.exists(
-                p := path + ".merged" + ("" if i == 0 else str(i))
-            )
-        )
-        os.rename(old, aside)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    if aside is not None:
-        shutil.rmtree(aside)
-    for d in merged_dirs:
-        shutil.rmtree(d)
-    return n
-
-
-def compact_vector_index(
-    spark: SparkSession,
-    store_path: str,
-    target_files: int = 4,
-    id_col: str = "vec_id",
-) -> int:
-    """Periodic maintenance for `stream_vector_ingest`'s store
-    (TUNING.md state-growth audit): the exactly-once layout accretes
-    one ``<queryId>/batch-N`` directory per micro-batch, so file count
-    — and with it probe-time listing cost — grows with stream
-    LIFETIME even when the vector count doesn't. Fold every batch dir
-    into one id-deduplicated snapshot, re-sorted by ``centroid_id`` so
-    in-cell probes prune on row-group stats again (per-batch files
-    sort only within themselves).
-
-    The compacted layout (plain part files under the store root) reads
-    identically through `read_vector_index`'s recursive lookup, and
-    subsequent batches append new ``batch-N`` dirs beside it. A batch
-    written but not yet checkpoint-committed at compaction time gets
-    folded in AND replayed — the id-dedup on read absorbs that, same
-    as cross-queryId re-delivery; still, run between ingest runs
-    (single-writer), like every store maintenance op here. Crash-safe
-    via the same two-rename swap. Returns the compacted row count."""
-    # repartition BY centroid_id before the in-partition sort (the
-    # helper's trailing coalesce to the same count is then a no-op):
-    # coalescing independently-sorted partitions would interleave
-    # cells across row groups and lose the pruning this exists for.
-    n = _crash_safe_rewrite(
-        spark,
-        store_path,
-        lambda df: df.dropDuplicates([id_col])
-        .repartition(target_files, "centroid_id")
-        .sortWithinPartitions("centroid_id"),
-        target_files,
-        recursive=True,
-    )
-    return n or 0
+    return _read_batches(spark, store_path).dropDuplicates([id_col])
 
 
 def stream_heavy_hitters(
@@ -750,8 +603,8 @@ def stream_heavy_hitters(
     some batch (a key below the per-batch track threshold in EVERY
     batch is bounded by track-rank frequency per batch), so true heavy
     hitters surface; the sketch then gives their (always >= true)
-    count estimate. Exactly-once: both stores use the per-(queryId,
-    batch) overwrite layout, so replays rewrite instead of
+    count estimate. Exactly-once: meta/, sketch/ and cands/ are written
+    through `_start_batch_store`, so replays rewrite instead of
     double-counting.
 
     TOTAL checkpoint loss is the one residual at-least-once window:
@@ -780,10 +633,8 @@ def stream_heavy_hitters(
     # construction.
     geometry_ok: list[bool] = []
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
+    def ingest(batch: DataFrame, write, _qid: str, _batch_id: int) -> None:
         spark = batch.sparkSession
-        qid = _streaming_query_id(checkpoint)
-        sub = os.path.join(qid, f"batch-{batch_id}")
         # The store is SELF-DESCRIBING: each batch writes its sketch
         # geometry to meta/, and ingest refuses to append into a store
         # built with a different (depth, width) — cell-wise sums of
@@ -799,14 +650,13 @@ def stream_heavy_hitters(
                     f"depth={depth}, width={width}"
                 )
             geometry_ok.append(True)
-        spark.createDataFrame(
-            [(depth, width)], "depth int, width int"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_path, "meta", sub)
+        write(
+            spark.createDataFrame([(depth, width)], "depth int, width int").coalesce(1),
+            os.path.join(store_path, "meta"),
         )
-        sketch = cms_build(batch, col, depth, width)
-        sketch.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_path, "sketch", sub)
+        write(
+            cms_build(batch, col, depth, width).coalesce(1),
+            os.path.join(store_path, "sketch"),
         )
         cands = (
             batch.groupBy(col)
@@ -815,16 +665,9 @@ def stream_heavy_hitters(
             .limit(track_per_batch)
             .select(col)
         )
-        cands.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_path, "cands", sub)
-        )
+        write(cands.coalesce(1), os.path.join(store_path, "cands"))
 
-    return (
-        items.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batch_store(items, checkpoint, ingest)
 
 
 def _cms_store_geometry(
@@ -839,8 +682,7 @@ def _cms_store_geometry(
     if not os.path.exists(meta_dir):
         return None
     rows = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(meta_dir)
+        _read_batches(spark, meta_dir)
         .select("depth", "width")
         .distinct()
         .collect()
@@ -892,16 +734,11 @@ def read_heavy_hitters(
         width = 2048 if width is None else width
 
     sketch = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store_path + "/sketch")
+        _read_batches(spark, store_path + "/sketch")
         .groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    cands = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store_path + "/cands")
-        .dropDuplicates([col])
-    )
+    cands = _read_batches(spark, store_path + "/cands").dropDuplicates([col])
     return (
         cms_estimate(cands, sketch, col, depth, width)
         .orderBy(F.desc("est_count"), F.asc(col))
@@ -920,7 +757,7 @@ def stream_distinct_sketches(
     """Streaming cardinality with bounded state: each micro-batch
     aggregates its keys into native HLL sketch blobs
     (`hll_sketch_agg`, one ~2^lg_k-byte blob per group) persisted in
-    replay-idempotent per-(queryId, batch) overwrite directories —
+    replay-idempotent `_start_batch_store` directories —
     the distinct-count sibling of `stream_heavy_hitters`'s frequency
     sketches. `read_distinct_counts` answers "distinct keys so far,
     per group" by `hll_union_agg` over the stored blobs: sketch-count
@@ -930,26 +767,17 @@ def stream_distinct_sketches(
     is exactly-once under every failure mode. Exact per-key state
     (what dropDuplicates-based counting would keep) grows with
     cardinality; this state grows with #groups x #batches only."""
-    import os
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        qid = _streaming_query_id(checkpoint)
-        sub = os.path.join(qid, f"batch-{batch_id}")
+    def ingest(batch: DataFrame, write, _qid: str, _batch_id: int) -> None:
         g = [group_col] if group_col else []
-        (
+        write(
             batch.groupBy(*g)
             .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sk"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_path, sub))
+            .coalesce(1),
+            store_path,
         )
 
-    return (
-        keyed.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batch_store(keyed, checkpoint, ingest)
 
 
 def read_distinct_counts(
@@ -957,7 +785,7 @@ def read_distinct_counts(
 ) -> DataFrame:
     """Distinct-count estimates from the accumulated sketch store:
     union the blobs per group and estimate."""
-    df = spark.read.option("recursiveFileLookup", "true").parquet(store_path)
+    df = _read_batches(spark, store_path)
     g = [group_col] if group_col else []
     agg = df.groupBy(*g).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_distinct")

@@ -33,7 +33,6 @@ ROOT_TOOLS = (
 
 _STARTED_PIPELINE = "started-query streaming pipeline (a root: runs as its own query)"
 _READER = "reads a started pipeline's sink back"
-_FLAKY = "its flaky tier-1 test is a correctness item; deleting it would hide the bug"
 
 # "module:name" -> why it stays although no root reaches it.
 KEEP = {
@@ -57,10 +56,8 @@ KEEP = {
     "crane_spark.llm.run_pipeline:build_training_corpus": "llm/run_pipeline: the executable corpus build",
     "crane_spark.llm.run_pipeline:stream_training_corpus": "llm/run_pipeline: " + _STARTED_PIPELINE,
     "crane_spark.llm.run_pipeline:read_stream_corpus": _READER,
-    "crane_spark.llm.run_pipeline:compact_corpus_ledger": "llm/run_pipeline: ledger maintenance for the streaming corpus",
-    "crane_spark.streaming.pipelines:compact_vector_index": "the _crash_safe_rewrite crash-matrix tests run through it",
-    "crane_spark.streaming.stateful:running_totals": _FLAKY,
-    "crane_spark.streaming.pipelines:stream_upsert_parquet": _FLAKY,
+    "crane_spark.streaming.stateful:running_totals": "per-key running totals with opt-in idle-state eviction",
+    "crane_spark.streaming.pipelines:stream_upsert_parquet": _STARTED_PIPELINE,
     "crane_spark.operators.topology:pagerank_iterations": "carries the reliable_every fault-recovery checkpoint path",
     "crane_spark.sources.sink_ds:read_crane_sink": "reads crane_sink output back in commit order",
     "crane_spark.sources.versioned:get_versions": "versioned-snapshot API (the reference DFS client's get-versions)",

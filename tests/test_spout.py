@@ -130,20 +130,6 @@ def test_spout_stream_microbatches(registered, tmp_path):
     assert got.select("line_no").distinct().count() == 1100
 
 
-def test_crane_sink_batch_write(spark, tmp_path):
-    """Python DataSource WRITER: wordcount results land as the
-    reference master's `key --- value` console format, atomically
-    committed via a driver-side manifest (the 'all acked -> print'
-    analog, crane_master.py:166-169)."""
-    from crane_spark.sources.sink_ds import CraneSinkDataSource, read_crane_sink
-
-    spark.dataSource.register(CraneSinkDataSource)
-    out = str(tmp_path / "sink")
-    df = spark.createDataFrame([("spark", 3), ("crane", 2)], "word string, n long")
-    df.write.format("crane_sink").option("path", out).mode("append").save()
-    assert read_crane_sink(out) == {"spark": "3", "crane": "2"}
-
-
 def test_crane_sink_stream_write(spark, tmp_path):
     """Streaming side of the custom sink: each micro-batch commits its
     own manifest; an availableNow drain of a 2-row source produces

@@ -460,8 +460,7 @@ def test_idempotent_append_sink_survives_replay(spark, tmp_path):
     """Replay of a batch on the SAME checkpoint (the crash-between-
     write-and-commit case, simulated by deleting the commit record so
     Spark re-runs batch 0 under the same query id) must not duplicate
-    a row — once via the marker fast path, once via the per-batch
-    overwrite with the marker gone (the crashed-before-marker case)."""
+    a row: the per-batch overwrite replaces the batch's own directory."""
     import os
 
     from crane_spark.streaming.pipelines import (
@@ -491,22 +490,12 @@ def test_idempotent_append_sink_survives_replay(spark, tmp_path):
     run()
     assert read_idempotent_sink(spark, out).count() == 10
 
-    # replay with the marker present: fast-path skip
+    # the overwrite replaces the batch's own directory instead of
+    # appending next to it
     uncommit()
     run()
     got = sorted(r["id"] for r in read_idempotent_sink(spark, out).collect())
     assert got == list(range(10))
-
-    # replay with the marker ALSO lost: overwrite path replaces the
-    # batch's own directory instead of appending next to it
-    uncommit()
-    for m in os.listdir(out + "/ledger"):
-        os.remove(os.path.join(out, "ledger", m))
-    run()
-    got = sorted(r["id"] for r in read_idempotent_sink(spark, out).collect())
-    assert got == list(range(10))
-    markers = os.listdir(out + "/ledger")
-    assert len(markers) == 1 and markers[0].endswith("-0.done")
 
 
 def test_idempotent_append_sink_checkpoint_loss_is_at_least_once(spark, tmp_path):
@@ -670,168 +659,6 @@ def test_stream_training_corpus_single_drain_matches_batch_funnel(
     batch_corpus = V.get(spark, batch_root, "corpus")
     assert corpus.exceptAll(batch_corpus).count() == 0
     assert batch_corpus.exceptAll(corpus).count() == 0
-
-
-def test_compact_corpus_ledger_preserves_semantics(spark, sf_dir, tmp_path):
-    """Compacting the corpus ledger between batches (r9 verdict #7)
-    must change NOTHING observable: the report totals, cumulative
-    lang counts (and therefore the mixing thresholds of later
-    batches), the admitted corpus, and the exact-dedup probe must all
-    match a never-compacted twin run fed identical batches."""
-    import pyspark.sql.functions as F
-
-    from crane_spark.llm.run_pipeline import (
-        compact_corpus_ledger,
-        read_stream_corpus,
-        stream_training_corpus,
-    )
-    from crane_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents")
-    eval_docs = docs.filter(F.col("doc_id") < 20)
-    batches = [
-        docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 120)),
-        docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 220)),  # overlap
-        docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 320)),  # overlap
-    ]
-
-    def feed_and_run(tag: str, compact_after: int | None):
-        src = str(tmp_path / f"src_{tag}")
-        root = str(tmp_path / f"store_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-        for i, b in enumerate(batches):
-            b.coalesce(1).write.mode("append").parquet(src)
-            q = stream_training_corpus(
-                spark.readStream.schema(docs.schema).parquet(src),
-                eval_docs,
-                root,
-                ckpt,
-            )
-            q.awaitTermination(180)
-            if compact_after is not None and i == compact_after:
-                out = compact_corpus_ledger(spark, root)
-                assert set(out) == {"hashes", "lang_counts", "report"}
-        return root
-
-    plain = feed_and_run("plain", None)
-    compacted = feed_and_run("compacted", 1)  # compact between batch 2 and 3
-
-    c_a, r_a = read_stream_corpus(spark, plain)
-    c_b, r_b = read_stream_corpus(spark, compacted)
-    assert {(r["stage"], r["n_docs"]) for r in r_a.collect()} == {
-        (r["stage"], r["n_docs"]) for r in r_b.collect()
-    }
-    assert c_a.exceptAll(c_b).count() == 0 and c_b.exceptAll(c_a).count() == 0
-    # probe state intact: the full hash sets agree
-    ha = {
-        r["_h"]
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(plain + "/hashes")
-        .collect()
-    }
-    hb = {
-        r["_h"]
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(compacted + "/hashes")
-        .collect()
-    }
-    assert ha == hb
-
-
-@pytest.mark.parametrize("killed_store", ["hashes", "lang_counts", "report"])
-@pytest.mark.parametrize("kill_point", [0, 1, 2])
-def test_compact_corpus_ledger_crash_matrix(
-    spark, tmp_path, monkeypatch, killed_store, kill_point
-):
-    """Crash-injection matrix for compact_corpus_ledger's three store
-    rewrites (r9 verdict #7, the same discipline as
-    test_store_maintenance_swap_crash_matrix): kill once in every gap
-    of each store's two-rename swap; a recovery rerun must land all
-    three stores exactly on the never-crashed result with no stranded
-    side dirs."""
-    import glob
-    import os
-    import shutil
-
-    from crane_spark.llm.run_pipeline import compact_corpus_ledger
-
-    store = str(tmp_path / "store")
-    ref = str(tmp_path / "ref")
-    h_schema = "_h string, query_id string, batch_id long"
-    c_schema = "query_id string, batch_id long, lang string, n long"
-    r_schema = "query_id string, batch_id long, stage string, n_docs long"
-    for root in (store, ref):
-        for b in (0, 1):
-            spark.createDataFrame(
-                [(f"h{b}{i}", "q", b) for i in range(4)], h_schema
-            ).coalesce(1).write.parquet(f"{root}/hashes/q/batch-{b}")
-            spark.createDataFrame(
-                [("q", b, "en", 3 + b), ("q", b, "de", 1)], c_schema
-            ).coalesce(1).write.parquet(f"{root}/lang_counts/q/batch-{b}")
-            spark.createDataFrame(
-                [("q", b, "0_raw", 4), ("q", b, "4_mixed", 3 + b)], r_schema
-            ).coalesce(1).write.parquet(f"{root}/report/q/batch-{b}")
-
-    def content(root):
-        rep = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(root + "/report")
-            .groupBy("stage")
-            .agg(F.sum("n_docs").alias("n_docs"))
-        )
-        langs = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(root + "/lang_counts")
-            .groupBy("lang")
-            .agg(F.sum("n").alias("n"))
-        )
-        hashes = (
-            spark.read.option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true")
-            .parquet(root + "/hashes")
-        )
-        return (
-            sorted((r["stage"], r["n_docs"]) for r in rep.collect()),
-            sorted((r["lang"], r["n"]) for r in langs.collect()),
-            sorted(r["_h"] for r in hashes.collect()),
-        )
-
-    compact_corpus_ledger(spark, ref)
-    want = content(ref)
-
-    real_rename, real_rmtree = os.rename, shutil.rmtree
-    state = {"step": 0, "armed": True}
-    target = store + "/" + killed_store
-
-    def guard():
-        if state["step"] == kill_point:
-            raise RuntimeError("injected crash in ledger compact")
-        state["step"] += 1
-
-    def rename(src, dst, **kw):
-        if state["armed"] and target in str(src):
-            guard()
-        return real_rename(src, dst, **kw)
-
-    def rmtree(path, *a, **kw):
-        if state["armed"] and target in str(path):
-            guard()
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(os, "rename", rename)
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        compact_corpus_ledger(spark, store)
-    state["armed"] = False
-
-    compact_corpus_ledger(spark, store)  # recovery rerun
-    assert content(store) == want
-    for name in ("hashes", "lang_counts", "report"):
-        for suffix in (".old", ".compact"):
-            assert not os.path.exists(f"{store}/{name}{suffix}")
-        assert glob.glob(f"{store}/{name}.merged*") == []
 
 
 def test_stream_training_corpus_incremental_and_replay(spark, sf_dir, tmp_path):
@@ -1210,6 +1037,59 @@ def test_stream_distinct_sketches_survive_checkpoint_loss(spark, tmp_path):
     assert after == before
 
 
+@pytest.mark.parametrize("store_kind", ["vector_index", "distinct_sketches"])
+def test_per_batch_store_replay_keeps_one_copy_on_disk(
+    spark, sf_dir, tmp_path, store_kind
+):
+    """A same-checkpoint replay (the commit record deleted, so Spark
+    re-runs the batch under the same query id) must replace the batch's
+    directory, not add a second copy beside it. These two stores' readers
+    would hide a second copy (id dedup, HLL set union), so the check
+    reads the raw files."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from crane_spark.streaming.pipelines import (
+        stream_distinct_sketches,
+        stream_vector_ingest,
+    )
+    from crane_spark.tables import table
+
+    src = str(tmp_path / "src")
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    emb = table(spark, sf_dir, "embeddings")
+    emb.filter(F.col("vec_id") >= 10).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(emb.schema).parquet(src)
+    if store_kind == "vector_index":
+        centroids = emb.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("centroid_id"), "embedding"
+        )
+
+        def start():
+            return stream_vector_ingest(stream, store, ckpt, centroids)
+
+    else:
+
+        def start():
+            return stream_distinct_sketches(stream, store, ckpt, key_col="vec_id")
+
+    def on_disk():
+        rows = spark.read.option("recursiveFileLookup", "true").parquet(store).collect()
+        return sorted(map(tuple, rows))
+
+    start().awaitTermination(120)
+    before = on_disk()
+    assert before
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    crc = os.path.join(ckpt, "commits", ".0.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    start().awaitTermination(120)
+    assert on_disk() == before
+
+
 def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
     """The CMS store records its (depth, width); a reader needs no
     params (mismatched defaults would probe the wrong cells and return
@@ -1251,77 +1131,6 @@ def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
     with pytest.raises(Exception, match="refusing to append"):
         q.awaitTermination(60)
         raise AssertionError("query should have failed")
-
-
-def test_compact_vector_index_bounds_file_count(spark, sf_dir, tmp_path):
-    """stream_vector_ingest accretes one batch dir per micro-batch;
-    compact_vector_index folds them into target_files id-deduped,
-    cell-sorted files with identical read-back content, and recovers
-    from a crash mid-swap."""
-    import os
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from crane_spark.streaming.pipelines import (
-        compact_vector_index,
-        read_vector_index,
-        stream_vector_ingest,
-    )
-    from crane_spark.tables import table
-
-    vecs = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = vecs.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    src = str(tmp_path / "vecs")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    # three source files -> maxFilesPerTrigger=1 gives three batch dirs
-    vecs.limit(30).repartition(3).write.parquet(src)
-
-    q = stream_vector_ingest(
-        spark.readStream.option("maxFilesPerTrigger", "1").schema(
-            spark.read.parquet(src).schema
-        ).parquet(src),
-        store,
-        ckpt,
-        cents,
-    )
-    q.awaitTermination(120)
-
-    before = {
-        (r["vec_id"], r["centroid_id"])
-        for r in read_vector_index(spark, store).select(
-            "vec_id", "centroid_id"
-        ).collect()
-    }
-    n_files_before = sum(
-        f.endswith(".parquet") for _, _, fs in os.walk(store) for f in fs
-    )
-    n = compact_vector_index(spark, store, target_files=2)
-    after = {
-        (r["vec_id"], r["centroid_id"])
-        for r in read_vector_index(spark, store).select(
-            "vec_id", "centroid_id"
-        ).collect()
-    }
-    n_files_after = sum(
-        f.endswith(".parquet") for _, _, fs in os.walk(store) for f in fs
-    )
-    assert after == before and n == len(before)
-    assert n_files_after <= 2 < n_files_before
-
-    # crash mid-swap: live store renamed aside, staging stranded
-    os.rename(store, store + ".old")
-    shutil.copytree(store + ".old", store + ".compact")
-    n2 = compact_vector_index(spark, store, target_files=2)
-    assert os.path.exists(store)
-    assert not os.path.exists(store + ".old")
-    assert not os.path.exists(store + ".compact")
-    assert n2 == len(before)
-
-
 
 
 @pytest.mark.parametrize("kill_point", [0, 1, 2, 3, 4])
@@ -1481,214 +1290,6 @@ def test_stream_neardup_ingest_crash_matrix(spark, tmp_path, monkeypatch, kill_p
     assert run() is None
     got2 = sorted(r["doc_id"] for r in spark.read.parquet(store + "/docs").collect())
     assert got2 == [1, 3, 10]
-
-
-def test_compact_corpus_ledger_merges_pre_ledger_hash_schemas(spark, tmp_path):
-    """A hashes/ ledger appended to across versions holds pre-ledger
-    files with only `_h` beside files with `_h, query_id, batch_id`.
-    Compaction must read the UNION schema even when a plain read would
-    infer it from the old footer: the ledger columns survive, ledger
-    rows keep their keys, and pre-ledger rows read back NULL."""
-    from crane_spark.llm.run_pipeline import compact_corpus_ledger
-
-    root = str(tmp_path / "store")
-    hashes = root + "/hashes"
-    # pre-ledger file FIRST so footer-order inference would plausibly
-    # pick the key-less schema
-    spark.createDataFrame([("h1",)], "_h string").coalesce(1).write.parquet(
-        hashes + "/pre"
-    )
-    spark.createDataFrame(
-        [("h2", "q1", 0), ("h3", "q1", 1)],
-        "_h string, query_id string, batch_id long",
-    ).coalesce(1).write.parquet(hashes + "/q1/batch-0")
-
-    assert compact_corpus_ledger(spark, root) == {"hashes": 3}
-    after = spark.read.parquet(hashes)
-    assert {"_h", "query_id", "batch_id"} <= set(after.columns)
-    keys = {r["_h"]: (r["query_id"], r["batch_id"]) for r in after.collect()}
-    assert keys == {"h1": (None, None), "h2": ("q1", 0), "h3": ("q1", 1)}
-
-
-def test_crash_safe_swap_merges_old_when_live_recreated(spark, tmp_path):
-    """Mid-swap crash (live renamed to .old, staging never installed)
-    followed by an ingest RESTART that recreates the live dir with new
-    appends before maintenance runs again: the next maintenance must
-    fold .old back into the rewrite instead of deleting it — the old
-    recovery rmtree'd the entire pre-compaction store (ADVICE r8)."""
-    import os
-
-    from crane_spark.streaming.pipelines import (
-        compact_vector_index,
-        read_vector_index,
-    )
-
-    store = str(tmp_path / "store")
-    schema = "vec_id long, centroid_id long, embedding array<double>"
-    pre = [(i, i % 3, [float(i), 1.0]) for i in range(10)]
-    spark.createDataFrame(pre, schema).write.parquet(store + "/q1/batch-0")
-
-    # crash window: live -> .old done, then death; the restarted
-    # stream's next batch recreates the live root with only its rows
-    os.rename(store, store + ".old")
-    post = [(i, i % 3, [float(i), 2.0]) for i in range(10, 14)]
-    spark.createDataFrame(post, schema).write.parquet(store + "/q1/batch-1")
-
-    n = compact_vector_index(spark, store, target_files=2)
-    assert n == 14  # union, not just the recreated live dir
-    got = sorted(
-        r["vec_id"] for r in read_vector_index(spark, store).collect()
-    )
-    assert got == list(range(14))
-    assert not os.path.exists(store + ".old")
-    assert not os.path.exists(store + ".compact")
-
-
-@pytest.mark.parametrize("kill_point", [0, 1, 2])
-def test_store_maintenance_swap_crash_matrix(spark, tmp_path, monkeypatch, kill_point):
-    """Crash-injection matrix for the two-rename swap of
-    compact_vector_index: kill once in every gap — before live->.old,
-    between the two renames, and after staging->live but before the
-    .old cleanup. A recovery rerun must land the store exactly on the
-    never-crashed run's post-maintenance content, with no stranded
-    .old/.compact dirs."""
-    import os
-    import shutil
-
-    from crane_spark.streaming.pipelines import compact_vector_index
-
-    store = str(tmp_path / "store")
-    ref = str(tmp_path / "ref")
-    schema = "vec_id long, centroid_id long, embedding array<double>"
-    b0 = [(i, i % 2, [float(i)]) for i in range(6)]
-    b1 = [(i, i % 2, [float(i)]) for i in range(4, 9)]  # overlaps b0
-    for root in (store, ref):
-        spark.createDataFrame(b0, schema).write.parquet(root + "/q/batch-0")
-        spark.createDataFrame(b1, schema).write.parquet(root + "/q/batch-1")
-
-    def run(root):
-        compact_vector_index(spark, root, target_files=2)
-
-    def content(root):
-        return sorted(
-            (r["vec_id"], r["centroid_id"])
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(root)
-            .dropDuplicates(["vec_id"])
-            .collect()
-        )
-
-    run(ref)  # the never-crashed reference
-
-    # swap-step injection: step 0 = rename(live, .old), step 1 =
-    # rename(staging, live), step 2 = rmtree(.old). Arm only for paths
-    # under this test's store.
-    real_rename, real_rmtree = os.rename, shutil.rmtree
-    state = {"step": 0, "armed": True}
-
-    def guard(kind):
-        if state["armed"]:
-            if state["step"] == kill_point:
-                raise RuntimeError(f"injected crash before swap {kind}")
-            state["step"] += 1
-
-    def rename(src, dst, **kw):
-        if state["armed"] and store in str(src):
-            guard("rename")
-        return real_rename(src, dst, **kw)
-
-    def rmtree(path, *a, **kw):
-        if state["armed"] and store in str(path):
-            guard("rmtree")
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(os, "rename", rename)
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run(store)
-    state["armed"] = False
-
-    run(store)  # recovery rerun
-    assert content(store) == content(ref)
-    assert not os.path.exists(store + ".old")
-    assert not os.path.exists(store + ".compact")
-
-
-@pytest.mark.parametrize("kill_point", [0, 1, 2, 3, 4])
-def test_store_maintenance_merge_swap_crash_matrix(
-    spark, tmp_path, monkeypatch, kill_point
-):
-    """Crash-injection matrix for the MERGE path of the crash-safe
-    swap (ADVICE r9): when maintenance starts with a stranded ``.old``
-    beside a writer-recreated live dir, the fold run performs five
-    os-ops — rename(.old, .merged), rename(live, .old),
-    rename(.compact, live), rmtree(.old), rmtree(.merged) — and a
-    crash in ANY gap must not lose the stranded .old's rows. The old
-    protocol rmtree'd .old before installing staging, so a crash
-    there left .old's only copy in .compact, which recovery deletes.
-    A recovery rerun must land exactly on the never-crashed result
-    with no stranded side dirs."""
-    import glob
-    import os
-    import shutil
-
-    from crane_spark.streaming.pipelines import (
-        compact_vector_index,
-        read_vector_index,
-    )
-
-    store = str(tmp_path / "store")
-    ref = str(tmp_path / "ref")
-    schema = "vec_id long, centroid_id long, embedding array<double>"
-    pre = [(i, i % 3, [float(i), 1.0]) for i in range(10)]
-    post = [(i, i % 3, [float(i), 2.0]) for i in range(10, 14)]
-    for root in (store, ref):
-        # mid-swap crash of an EARLIER maintenance: live went to .old,
-        # staging never installed; the restarted stream then recreated
-        # the live root with only its new batch
-        spark.createDataFrame(pre, schema).write.parquet(root + ".old/q/batch-0")
-        spark.createDataFrame(post, schema).write.parquet(root + "/q/batch-1")
-
-    def run(root):
-        compact_vector_index(spark, root, target_files=2)
-
-    def content(root):
-        return sorted(
-            r["vec_id"] for r in read_vector_index(spark, root).collect()
-        )
-
-    run(ref)
-    assert content(ref) == list(range(14))
-
-    real_rename, real_rmtree = os.rename, shutil.rmtree
-    state = {"step": 0, "armed": True}
-
-    def guard():
-        if state["step"] == kill_point:
-            raise RuntimeError("injected crash in merge swap")
-        state["step"] += 1
-
-    def rename(src, dst, **kw):
-        if state["armed"] and store in str(src):
-            guard()
-        return real_rename(src, dst, **kw)
-
-    def rmtree(path, *a, **kw):
-        if state["armed"] and store in str(path):
-            guard()
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(os, "rename", rename)
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run(store)
-    state["armed"] = False
-
-    run(store)  # recovery rerun: folds .old/.merged leftovers
-    assert content(store) == content(ref)
-    assert not os.path.exists(store + ".old")
-    assert not os.path.exists(store + ".compact")
-    assert glob.glob(store + ".merged*") == []
 
 
 def test_session_sizes_stream_state_to_cores_and_batch_to_aqe():
