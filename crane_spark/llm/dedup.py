@@ -716,6 +716,36 @@ def _dense_bitset_pairs(
     )
 
 
+def verify_jaccard_pairs(
+    pairs: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    t_num: int,
+    t_den: int,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    id_col: str = "doc_id",
+    set_col: str = "sh",
+) -> DataFrame:
+    """Exact Jaccard verify of candidate id pairs: join ``pairs``'
+    ``a``/``b`` ids to their sets in ``sets_a``/``sets_b`` ((id_col,
+    set_col) frames of non-empty distinct arrays) and keep the pairs
+    with Jaccard >= t_num/t_den, tested in integers
+    (``t_den*inter >= t_num*union``) so no double rounding can flip a
+    decision at the threshold. Returns (a, b, n_common, jaccard)."""
+    j = pairs.join(
+        sets_a.select(F.col(id_col).alias(a), F.col(set_col).alias("_sa")), a
+    ).join(sets_b.select(F.col(id_col).alias(b), F.col(set_col).alias("_sb")), b)
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    union = F.size("_sa") + F.size("_sb") - inter
+    return j.filter(F.lit(t_den) * inter >= F.lit(t_num) * union).select(
+        a,
+        b,
+        inter.cast("long").alias("n_common"),
+        (inter.cast("double") / union).alias("jaccard"),
+    )
+
+
 def prefix_filter_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -920,23 +950,8 @@ def prefix_filter_jaccard_pairs(
         return _broadcast_verify_pairs(
             cand_ids, ordered, id_col, vocab_size, t_num, t_den
         )
-    cand = cand_ids.join(
-        ordered.select(F.col(id_col).alias("doc_a"), F.col("arr").alias("sh_a")),
-        "doc_a",
-    ).join(
-        ordered.select(F.col(id_col).alias("doc_b"), F.col("arr").alias("sh_b")),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.filter(F.lit(t_den) * inter >= F.lit(t_num) * union)
-        .select(
-            "doc_a",
-            "doc_b",
-            inter.cast("long").alias("n_common"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
+    return verify_jaccard_pairs(
+        cand_ids, ordered, ordered, t_num, t_den, id_col=id_col, set_col="arr"
     )
 
 

@@ -164,7 +164,8 @@ def stream_training_corpus(
                           md5 index (first-arrival-wins across the
                           stream's lifetime)
       3 decontaminate     against the STATIC eval-set gram hashes
-                          (computed once, broadcast per batch)
+                          (materialized once at start, broadcast per
+                          batch)
       4 mixing            equal-share rebalance with the deterministic
                           hash threshold recomputed from CUMULATIVE
                           post-decontamination language counts — the
@@ -202,6 +203,14 @@ def stream_training_corpus(
     hashes_dir = out_root + "/hashes"
     report_dir = out_root + "/report"
     counts_dir = out_root + "/lang_counts"
+    # the eval set is static: its gram hashes are computed ONCE here,
+    # not re-read and re-deduplicated inside every micro-batch
+    bench = (
+        exploded_word_grams(eval_docs, gram_n, [], out="g")
+        .select(F.md5("g").alias("gh"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
     def ingest(batch, write, qid: str, batch_id: int) -> None:
         staged = []
@@ -229,13 +238,6 @@ def stream_training_corpus(
 
     def _ingest_body(batch, write, qid: str, batch_id: int, staged: list) -> None:
         spark = batch.sparkSession
-
-        bench = (
-            exploded_word_grams(eval_docs, gram_n, [], out="g")
-            .select(F.md5("g").alias("gh"))
-            .distinct()
-        )
-
         b = loop_checkpoint(
             batch.dropDuplicates(["doc_id"]), 1, reliable_every
         )

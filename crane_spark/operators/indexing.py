@@ -42,30 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Plan-audit mode (round 6, ADVICE r5): when True, every constructor
-# in this module builds its plan with ZERO Spark jobs at construction
-# time — percentile sketches become fixed literal cuts (cuts only
-# steer load balance, NEVER results), driver-collected offsets become
-# lazy windows over the same bounded aggregate rows, and input
-# checkpoints are skipped. Frames built in this mode remain fully
-# CORRECT if executed (some registry queries run driver-side regime
-# gates at construction); they are merely slower (no materialized
-# input, degenerate bucket balance). The intended user is
-# tools/audit_single_partition.py, which explains the whole registry
-# without paying indexing jobs.
-#
-# CONTRACT (ADVICE r6): this is a process-wide mutable flag consulted
-# at PLAN-BUILD time, not thread-safe, and while set it silently drops
-# checkpoint=True — so a frame whose caller requested checkpointing
-# loses the pinned-materialization guarantee against non-deterministic
-# sources (the raise_error cross-scan guards detect ADDED buckets, not
-# REMOVED rows). Frames built under EXPLAIN_ONLY are for .explain()
-# only: set the flag, build, explain, restore, DISCARD the frames —
-# exactly what audit_single_partition.py does — and never execute a
-# discarded frame later against a source that may have moved. Builders
-# that need audit-plus-execute must rebuild after restoring the flag.
-EXPLAIN_ONLY = False
-
 # dense_index SMALL-regime gate: a caller-counted input at or under
 # this takes one bounded window sort (a ~256k-row single-task sort is
 # tens of ms) instead of the 2-job / 4-5-exchange bucketed
@@ -77,12 +53,8 @@ _SMALL_INDEX_MAX_ROWS = 262_144
 
 def _sketch_cuts(df: DataFrame, key: str, buckets: int, accuracy: int) -> list:
     """``buckets - 1`` approximate cut points of ``key`` (deduplicated,
-    ascending). Fixed integer cuts under EXPLAIN_ONLY — same literal
-    count and therefore identical expression shape, no job; results
-    are unaffected because cut placement only moves rows between
-    parallel cells."""
-    if EXPLAIN_ONLY:
-        return list(range(1, buckets))
+    ascending); cut placement only moves rows between parallel cells,
+    never changes results."""
     fracs = [i / buckets for i in range(1, buckets)]
     # One parsed expression instead of F.percentile_approx(list):
     # the Column form issues several py4j round-trips PER FRACTION
@@ -233,31 +205,9 @@ def exact_rank(
     driver path additionally fails loudly on a count mismatch; see
     :func:`exact_ntile`).
     """
-    # "_gm0" is reserved only on the outer call: the global-path wrap
-    # below re-enters with major="_gm0" legitimately present
     _reserve(df, "_rb", "_off", "_mj", "_sb", "_sn", "_bn")
-    if major != "_gm0":
-        _reserve(df, "_gm0")
-    if major is None and EXPLAIN_ONLY:
-        # zero-job global path: run the (fully lazy) per-major
-        # machinery over an always-zero major. NON-FOLDABLE expression
-        # on purpose: a literal would fold out of the window partition
-        # spec and re-introduce the SinglePartition marker this module
-        # exists to avoid (the rows under it are still <= buckets
-        # aggregate rows either way).
-        return exact_rank(
-            df.withColumn("_gm0", F.pmod(F.xxhash64(F.col(key)), F.lit(1))),
-            key,
-            tiebreaks,
-            out=out,
-            major="_gm0",
-            descending=descending,
-            buckets=buckets,
-            accuracy=accuracy,
-            n_out=n_out,
-        ).drop("_gm0")
     spark = df.sparkSession
-    if checkpoint and not EXPLAIN_ONLY:
+    if checkpoint:
         # lazy (r11): _sketch_cuts' quantile job is the first action
         # and materializes the pinned blocks; every later pass reads
         # the same stored blocks (the pin the flag promises).
@@ -377,25 +327,8 @@ def exact_prefix_sum(
     integer units first (functions/aggregates.units).
     """
     _reserve(df, "_rb", "_off", "_mj", "_sb", "_bn")
-    if major != "_gm0":
-        _reserve(df, "_gm0")
-    if major is None and EXPLAIN_ONLY:
-        # zero-job global path over an always-zero NON-FOLDABLE major
-        # (see exact_rank) — exact values
-        return exact_prefix_sum(
-            df.withColumn("_gm0", F.pmod(F.xxhash64(F.col(key)), F.lit(1))),
-            measure,
-            key,
-            tiebreaks,
-            out=out,
-            major="_gm0",
-            descending=descending,
-            buckets=buckets,
-            accuracy=accuracy,
-            exclusive=exclusive,
-        ).drop("_gm0")
     spark = df.sparkSession
-    if checkpoint and not EXPLAIN_ONLY:
+    if checkpoint:
         # lazy (r11): _sketch_cuts' quantile job is the first action
         # and materializes the pinned blocks; every later pass reads
         # the same stored blocks (the pin the flag promises).
@@ -590,8 +523,7 @@ def exact_ntile(
 
     ``checkpoint=True`` localCheckpoints the (narrow) input so the
     passes don't recompute an expensive upstream; leave False when
-    the input is a bare columnar scan (pushdown makes re-reads cheap)
-    or for explain-only paths.
+    the input is a bare columnar scan (pushdown makes re-reads cheap).
 
     Determinism: the global path reads ``df`` in three jobs (sketch,
     count, final). A non-deterministic source is detected loudly — the
@@ -661,8 +593,7 @@ def dense_index(
     measured 3.5x on the query); leave the default False when the
     input is cheap to rescan or already materialized (exact_ntile's
     lazy-checkpoint discipline, retrofitted here in round 6 so
-    explain-only paths and pre-checkpointed callers stop paying a
-    data-sized copy). Shares :func:`exact_rank`'s determinism
+    pre-checkpointed callers stop paying a data-sized copy). Shares :func:`exact_rank`'s determinism
     requirement across the passes; a bucket, (major, bucket) cell, or
     major the count pass never observed fails loudly in the final
     joins (left joins + raise_error null traps — never a silent row
@@ -678,8 +609,7 @@ def dense_index(
     tiebreak), producing bit-identical indices with no extra job —
     the input is read once, so ``checkpoint`` is moot there. The
     window partitions by a constant over a caller-counted bounded
-    input (same pattern as the EXPLAIN_ONLY offsets window); never
-    pass a guessed n_rows — the gate exists so data-sized inputs
+    input; never pass a guessed n_rows — the gate exists so data-sized inputs
     always take the parallel construction.
     """
     spark = df.sparkSession
@@ -689,8 +619,6 @@ def dense_index(
     )
     hb = F.pmod(F.xxhash64(F.col(tiebreak)), F.lit(buckets))
     if n_rows is not None and n_rows <= _SMALL_INDEX_MAX_ROWS:
-        # No EXPLAIN_ONLY exclusion: this regime runs zero
-        # construction jobs, so the audited plan IS the executed plan.
         # Catalyst folds the constant partition key, so this plans as
         # an explicit `Exchange SinglePartition` + global Window —
         # VISIBLE to tools/audit_single_partition.py's dimension 1 on
@@ -710,7 +638,7 @@ def dense_index(
             .withColumn(out, F.row_number().over(w_small) - 1 + base)
             .drop("_hb")
         )
-    if checkpoint and not EXPLAIN_ONLY:
+    if checkpoint:
         # LAZY: every regime's first action below is a full scan of
         # `d` (the bucket-count collect, or the totals.limit collect
         # whose upstream groupBy shuffles every partition of `d`), so
@@ -720,28 +648,6 @@ def dense_index(
     else:
         d = df.withColumn("_hb", hb)
     base = F.lit(1) if one_based else F.lit(0)
-
-    if major is None and EXPLAIN_ONLY:
-        # zero-job path: exclusive bucket-count cumsum as a lazy window
-        # over the <= `buckets` aggregate rows, partitioned by a
-        # constant so no SinglePartition exchange appears. Exact same
-        # index values as the driver-collect path.
-        cnt = d.groupBy("_hb").agg(F.count(F.lit(1)).alias("_bn"))
-        w_off = (
-            Window.partitionBy(F.pmod(F.xxhash64(F.col("_hb")), F.lit(1)))
-            .orderBy("_hb")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        off_lazy = cnt.select(
-            F.col("_hb").alias("_ob"),
-            F.coalesce(F.sum("_bn").over(w_off), F.lit(0)).alias("_off"),
-        )
-        w = Window.partitionBy("_hb").orderBy(tiebreak)
-        return (
-            d.join(off_lazy, F.col("_hb") == F.col("_ob"))
-            .withColumn(out, F.col("_off") + F.row_number().over(w) - 1 + base)
-            .drop("_hb", "_ob", "_off")
-        )
 
     if major is None:
         w = Window.partitionBy("_hb").orderBy(tiebreak)
@@ -779,25 +685,8 @@ def dense_index(
     # majors are in hand (driver cumsum), an overflowing one falls back
     # to the post-aggregate window (the separate count() job this
     # replaces paid a full pass over `totals` just to learn the size).
-    # EXPLAIN_ONLY takes the lazy window regime unconditionally (exact
-    # values, zero construction jobs), partitioned by a constant so no
-    # SinglePartition exchange appears over the aggregate rows.
-    if EXPLAIN_ONLY:
-        w_m = (
-            Window.partitionBy(F.pmod(F.xxhash64(F.col(major)), F.lit(1)))
-            .orderBy(major)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        moff_df = totals.select(
-            F.col(major).alias("_mm"),
-            F.coalesce(F.sum("_t").over(w_m), F.lit(0)).alias("_moff"),
-        )
-        fetched = None
-    else:
-        fetched = totals.limit(major_cap + 1).collect()
-    if fetched is None:
-        pass  # moff_df already built above (EXPLAIN_ONLY lazy regime)
-    elif len(fetched) <= major_cap:
+    fetched = totals.limit(major_cap + 1).collect()
+    if len(fetched) <= major_cap:
         rows = {r[major]: r["_t"] for r in fetched}
         moff, acc = [], 0
         # None-aware sort key matching Spark's ASC NULLS FIRST, so a

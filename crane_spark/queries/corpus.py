@@ -274,7 +274,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical pipeline with a recursive CTE for the closure. Each CC
     round is a join + min-aggregate; near-dup graphs converge in 2-3
     rounds."""
-    from crane_spark.llm.dedup import minhash_band_pairs, shingle_sets
+    from crane_spark.llm.dedup import (
+        minhash_band_pairs,
+        shingle_sets,
+        verify_jaccard_pairs,
+    )
     from crane_spark.operators.graph import connected_components
     from pyspark.sql import Window
 
@@ -297,16 +301,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_sets(
         docs.join(F.broadcast(ids), "doc_id", "left_semi"), "text", "doc_id", 3
     ).localCheckpoint(eager=False)
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    verified = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter((inter.cast("double") / union) >= 0.5)
-        .select("doc_a", "doc_b")
-    )
+    verified = verify_jaccard_pairs(cand, sh, sh, 1, 2).select("doc_a", "doc_b")
     comps = connected_components(verified, "doc_a", "doc_b")
     w = Window.partitionBy("component_id")
     return comps.select(

@@ -201,7 +201,6 @@ def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     percent_rank are arithmetic on (rank, per-nation n), and
     lag(2)/lead(1) become equi-joins on the unique (nation, rank±d)
     key — shuffle-balanced, no per-nation sort anywhere."""
-    from crane_spark.operators import indexing
     from crane_spark.operators.indexing import _ansi_tile, exact_rank
 
     cust = table(spark, sf_dir, "customer")
@@ -217,11 +216,9 @@ def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranked feeds three plan branches (base + the two lag/lead
     # self-joins); without pinning, the cell-sort/rank machinery runs
     # three times per execution (ReusedExchange dedups only the
-    # shuffles). Lazy localCheckpoint: zero jobs at build time (the
-    # plan audit's EXPLAIN_ONLY contract), one ranking pass at run
-    # time, deterministic rows either way.
-    if not indexing.EXPLAIN_ONLY:
-        ranked = ranked.localCheckpoint(eager=False)
+    # shuffles). Lazy localCheckpoint: zero jobs at build time, one
+    # ranking pass at run time.
+    ranked = ranked.localCheckpoint(eager=False)
     nb = ranked.select(
         F.col("c_nationkey").alias("_jn"),
         F.col("_rk").alias("_jr"),
@@ -573,7 +570,6 @@ def q_window_analytics2(spark: SparkSession, sf_dir: str) -> DataFrame:
     on rank>=3, IGNORE-NULLS first over the full frame = max of the
     positives (order is acctbal DESC), and last over the full frame
     = min(acctbal). The aggregate is 25 rows, broadcast back."""
-    from crane_spark.operators import indexing
     from crane_spark.operators.indexing import exact_rank
 
     cust = table(spark, sf_dir, "customer")
@@ -586,10 +582,9 @@ def q_window_analytics2(spark: SparkSession, sf_dir: str) -> DataFrame:
         descending=True,
         n_out="_n",
     )
-    # two plan branches (aggregate + base row) — pin one ranking pass;
-    # lazy so the plan audit's EXPLAIN_ONLY contract stays zero-job
-    if not indexing.EXPLAIN_ONLY:
-        ranked = ranked.localCheckpoint(eager=False)
+    # two plan branches (aggregate + base row) — pin one ranking pass,
+    # lazily (no job at build time)
+    ranked = ranked.localCheckpoint(eager=False)
     pos_bal = F.when(F.col("c_acctbal") > 0, F.col("c_acctbal"))
     aggs = ranked.groupBy(F.col("c_nationkey").alias("_an")).agg(
         F.max(F.when(F.col("_rk") == 3, F.col("c_acctbal"))).alias("_third"),

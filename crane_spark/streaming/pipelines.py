@@ -130,38 +130,33 @@ def stream_to_parquet(
 
 
 def stream_upsert_parquet(
-    df: DataFrame, path: str, checkpoint: str, key_cols: list[str]
+    df: DataFrame, root: str, name: str, checkpoint: str, key_cols: list[str]
 ) -> StreamingQuery:
     """foreachBatch upsert sink: each micro-batch replaces existing
-    rows for its keys (read-anti-join-union, staged write, RENAME
-    swap on parquet; on a real deployment the same foreachBatch body
-    targets Delta/Iceberg MERGE). This is the 'iterative/merge sink'
-    surface from SURVEY §2.2 that plain append sinks can't express.
+    rows for its keys (read-anti-join-union; on a real deployment the
+    same foreachBatch body targets Delta/Iceberg MERGE). This is the
+    'iterative/merge sink' surface from SURVEY §2.2 that plain append
+    sinks can't express. Read the table with ``versioned.get(spark,
+    root, name)``.
 
-    Crash-safety is a rename swap: the merged store is written ONCE to
-    a staging dir and installed via two metadata-only renames
-    (live -> .old, staging -> live), so the live store is never a
-    half-written overwrite target — a crash at any point leaves either
-    the old or the new version recoverable, and the next batch (or a
-    checkpoint replay of this one) restores a stranded ``.old``
-    before merging. Key equality in the anti-join is NULL-SAFE,
-    matching dropDuplicates' NULLs-are-equal semantics, so NULL-keyed
-    rows upsert instead of duplicating forever."""
-    import os
-    import shutil
+    The table is the versioned dataset ``name`` under ``root``
+    (sources/versioned.py): each batch reads the latest committed
+    version, writes the merge as a NEW version with ``versioned.put``
+    (visible only once its ``_SUCCESS`` commits), then drops the
+    superseded versions with ``versioned.expire(keep_last=1)``. A crash
+    before the commit leaves the previous version as the latest; a
+    crash after it leaves a merge that already holds this batch, and
+    the replay's upsert of the same rows is idempotent. Key equality in
+    the anti-join is NULL-SAFE, matching dropDuplicates'
+    NULLs-are-equal semantics, so NULL-keyed rows upsert instead of
+    duplicating forever."""
+    from crane_spark.sources import versioned
 
     def upsert(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.dropDuplicates(key_cols)
-        staging, old = path + ".staging", path + ".old"
-        # recover from a crashed swap: live gone but .old present
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
-        for stale in (staging, old):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-        if os.path.exists(path):
-            existing = spark.read.parquet(path)
+        if versioned.versions(spark, root, name):
+            existing = versioned.get(spark, root, name)
             bk = batch.select(*key_cols)
             cond = None
             for k in key_cols:
@@ -171,12 +166,8 @@ def stream_upsert_parquet(
             merged = keep.unionByName(batch)
         else:
             merged = batch
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        versioned.put(merged, root, name)
+        versioned.expire(spark, root, name, keep_last=1)
 
     return _foreach_batch(df, checkpoint, upsert).outputMode("update").start()
 
@@ -273,28 +264,11 @@ def stream_neardup_ingest(
         minhash_signatures,
         shingle_sets,
         tokens,
+        verify_jaccard_pairs,
     )
 
     docs_store = store_path + "/docs"
     index_store = store_path + "/bands"
-
-    def _verified_pairs(spark, pairs, sets_a, sets_b):
-        """Exact Jaccard >= t_num/t_den check for candidate id pairs;
-        sets_* are (id, sh) shingle-set frames for each side."""
-        j = (
-            pairs.join(
-                sets_a.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")),
-                "id_a",
-            ).join(
-                sets_b.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")),
-                "id_b",
-            )
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return j.filter(F.lit(t_den) * inter >= F.lit(t_num) * union).select(
-            "id_a", "id_b"
-        )
 
     def ingest(batch: DataFrame, _batch_id: int) -> None:
         import os
@@ -338,7 +312,7 @@ def stream_neardup_ingest(
             .distinct()
         )
         dropped = (
-            _verified_pairs(spark, cand, sets, sets)
+            verify_jaccard_pairs(cand, sets, sets, t_num, t_den, "id_a", "id_b", id_col)
             .select(F.col("id_b").alias(id_col))
             .distinct()
         )
@@ -374,7 +348,9 @@ def stream_neardup_ingest(
             )
             old_sets = shingle_sets(old_docs, text_col, id_col, shingle_n)
             matched = (
-                _verified_pairs(spark, hits, sets, old_sets)
+                verify_jaccard_pairs(
+                    hits, sets, old_sets, t_num, t_den, "id_a", "id_b", id_col
+                )
                 .select(F.col("id_a").alias(id_col))
                 .distinct()
             )
@@ -674,7 +650,7 @@ def _cms_store_geometry(
     spark: SparkSession, store_path: str
 ) -> tuple[int, int] | None:
     """(depth, width) recorded in the store's meta/ dir; None for an
-    empty or pre-meta store. Raises on a store holding MIXED
+    empty store. Raises on a store holding MIXED
     geometries — their sketches must never be cell-wise merged."""
     import os
 
@@ -703,35 +679,25 @@ def read_heavy_hitters(
     store_path: str,
     top_n: int = 10,
     col: str = "token",
-    depth: int | None = None,
-    width: int | None = None,
 ) -> DataFrame:
     """Top keys across every ingested batch and run: merge all batch
     sketches (cell-wise sum — one sketch-sized aggregate), probe the
     deduplicated candidate set, rank by estimate with a key tiebreak.
 
-    Sketch geometry comes from the store's own meta/ records (written
-    by `stream_heavy_hitters`), so a reader can never probe with the
-    wrong (depth, width) — mismatched hashing returns silent zeros for
-    genuinely heavy keys. Passing depth/width explicitly is only for
-    pre-meta stores; explicit values that CONTRADICT the store's meta
-    raise."""
+    Sketch geometry comes only from the store's own meta/ records
+    (written by `stream_heavy_hitters` with every batch), so a reader
+    can never probe with the wrong (depth, width) — mismatched hashing
+    returns silent zeros for genuinely heavy keys. A store without
+    meta/ raises."""
     from crane_spark.functions.sketches import cms_estimate
 
     stored = _cms_store_geometry(spark, store_path)
-    if stored is not None:
-        if (depth is not None and depth != stored[0]) or (
-            width is not None and width != stored[1]
-        ):
-            raise ValueError(
-                f"store {store_path!r} records depth={stored[0]}, "
-                f"width={stored[1]}; caller asked for depth={depth}, "
-                f"width={width}"
-            )
-        depth, width = stored
-    else:
-        depth = 4 if depth is None else depth
-        width = 2048 if width is None else width
+    if stored is None:
+        raise FileNotFoundError(
+            f"no sketch geometry under {store_path!r}/meta — not a "
+            "stream_heavy_hitters store, or nothing ingested yet"
+        )
+    depth, width = stored
 
     sketch = (
         _read_batches(spark, store_path + "/sketch")

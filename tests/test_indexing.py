@@ -372,60 +372,6 @@ def test_exact_rank_major_plan_has_no_data_sized_partition(spark):
         assert "_rb" in spec or "_sb" in spec or "_bn" in spec or "count" in spec, spec
 
 
-def test_explain_only_mode_runs_zero_jobs_and_keeps_values_exact(spark):
-    """EXPLAIN_ONLY (the plan-audit mode): constructing any indexing
-    frame runs NO Spark jobs, and the frames — if executed anyway —
-    produce exactly the values of the normal construction."""
-    from crane_spark.operators import indexing
-    from crane_spark.operators.indexing import (
-        dense_index,
-        exact_ntile,
-        exact_prefix_sum,
-        exact_rank,
-    )
-
-    df = spark.range(500).select(
-        (F.col("id") % 3).alias("m"),
-        (F.col("id") * 13 % 97).alias("v"),
-        F.col("id").alias("tb"),
-    )
-    sc = spark.sparkContext
-    sc.setJobGroup("explain_only_probe", "indexing construction must be lazy")
-    indexing.EXPLAIN_ONLY = True
-    try:
-        fr = exact_rank(df, key="v", tiebreaks=["tb"], out="rk", checkpoint=True)
-        fn = exact_ntile(df, 7, key="v", tiebreaks=["tb"], major="m")
-        fp = exact_prefix_sum(df, measure="v", key="tb", tiebreaks=[], out="ps")
-        fd = dense_index(df.select("tb"), tiebreak="tb", checkpoint=True)
-        fdm = dense_index(df.select("m", "tb"), tiebreak="tb", major="m")
-        jobs = sc.statusTracker().getJobIdsForGroup("explain_only_probe")
-    finally:
-        indexing.EXPLAIN_ONLY = False
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(jobs) == [], f"construction ran jobs: {jobs}"
-    # executing the lazily-built frames must give the normal values
-    def vals(frame, keycols, valcol):
-        return {tuple(r[c] for c in keycols): r[valcol] for r in frame.collect()}
-
-    assert vals(fr, ["tb"], "rk") == vals(
-        exact_rank(df, key="v", tiebreaks=["tb"], out="rk"), ["tb"], "rk"
-    )
-    assert vals(fn, ["tb"], "bucket") == vals(
-        exact_ntile(df, 7, key="v", tiebreaks=["tb"], major="m"), ["tb"], "bucket"
-    )
-    assert vals(fp, ["tb"], "ps") == vals(
-        exact_prefix_sum(df, measure="v", key="tb", tiebreaks=[], out="ps"),
-        ["tb"],
-        "ps",
-    )
-    assert vals(fd, ["tb"], "_ix") == vals(
-        dense_index(df.select("tb"), tiebreak="tb"), ["tb"], "_ix"
-    )
-    assert vals(fdm, ["tb"], "_ix") == vals(
-        dense_index(df.select("m", "tb"), tiebreak="tb", major="m"), ["tb"], "_ix"
-    )
-
-
 def test_exact_prefix_sum_global_decimal_and_float_measures(spark):
     """The global (major=None) path drives its offsets frame from the
     SUM's result type: decimal measures collect as Python Decimal and

@@ -61,8 +61,6 @@ KEEP = {
     "crane_spark.operators.topology:pagerank_iterations": "carries the reliable_every fault-recovery checkpoint path",
     "crane_spark.sources.sink_ds:read_crane_sink": "reads crane_sink output back in commit order",
     "crane_spark.sources.versioned:get_versions": "versioned-snapshot API (the reference DFS client's get-versions)",
-    "crane_spark.sources.versioned:delete": "versioned-snapshot API (the reference DFS client's delete)",
-    "crane_spark.sources.versioned:expire": "versioned-snapshot retention",
     "crane_spark.llm.codecs:encode_bmp": "test fixture encoder",
     "crane_spark.llm.codecs:encode_ppm": "test fixture encoder",
     "crane_spark.llm.codecs:encode_like": "test fixture encoder",

@@ -3,8 +3,12 @@ IVF-bucketed cosine near-dup."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import os
 
+import pyspark.sql.functions as F
+import pytest
+
+from crane_spark.sources import versioned
 from crane_spark.streaming.pipelines import stream_upsert_parquet
 from crane_spark.streaming.stateful import running_totals
 
@@ -147,7 +151,7 @@ def test_running_totals_idle_ttl_evicts_and_restarts(spark, tmp_path):
 
 def test_foreach_batch_upsert(spark, tmp_path):
     src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
+    root = str(tmp_path / "tables")
     ckpt = str(tmp_path / "ckpt")
 
     def write(rows):
@@ -157,22 +161,83 @@ def test_foreach_batch_upsert(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema("k string, v double").parquet(src)
-        q = stream_upsert_parquet(stream, sink, ckpt, key_cols=["k"])
+        q = stream_upsert_parquet(stream, root, "sink", ckpt, key_cols=["k"])
         q.awaitTermination(120)
+
+    def table():
+        return {(r["k"], r["v"]) for r in versioned.get(spark, root, "sink").collect()}
 
     write([("a", 1.0), ("b", 2.0)])
     run()
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(sink).collect()} == {
-        ("a", 1.0),
-        ("b", 2.0),
-    }
+    assert table() == {("a", 1.0), ("b", 2.0)}
     write([("b", 9.0), ("c", 3.0)])  # b updated, c inserted
     run()
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(sink).collect()} == {
-        ("a", 1.0),
-        ("b", 9.0),
-        ("c", 3.0),
-    }
+    assert table() == {("a", 1.0), ("b", 9.0), ("c", 3.0)}
+    # superseded versions are expired: one committed version remains
+    assert len(versioned.versions(spark, root, "sink")) == 1
+
+
+@pytest.mark.parametrize("kill_point", ["before_write", "uncommitted", "before_expire"])
+def test_foreach_batch_upsert_crash_restart_matches_clean_run(
+    spark, tmp_path, monkeypatch, kill_point
+):
+    """Fail the second batch's version write once (before any file,
+    with files but no _SUCCESS, or committed but not yet expired),
+    restart on the same checkpoint, and the table must equal a
+    crash-free run's over the same three batches."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src = str(tmp_path / "src")
+    schema = "k string, v double"
+    for rows in (
+        [("a", 1.0), ("b", 2.0)],
+        [("b", 9.0), ("c", 3.0)],
+        [("a", 5.0), ("d", 4.0)],
+    ):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+
+    def run(root, ckpt):
+        stream = (
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        )
+        q = stream_upsert_parquet(stream, root, "sink", ckpt, key_cols=["k"])
+        try:
+            q.awaitTermination(120)
+        except Exception:
+            pass
+        return q.exception()
+
+    def table(root):
+        return sorted((r["k"], r["v"]) for r in versioned.get(spark, root, "sink").collect())
+
+    ref_root = str(tmp_path / "ref")
+    assert run(ref_root, str(tmp_path / "ref_ckpt")) is None
+    assert table(ref_root) == [("a", 5.0), ("b", 9.0), ("c", 3.0), ("d", 4.0)]
+
+    root, ckpt = str(tmp_path / "tables"), str(tmp_path / "ckpt")
+    orig = DataFrameWriter.parquet
+    state = {"writes": 0, "armed": True}
+
+    def crashing(self, path, *a, **kw):
+        if not (state["armed"] and str(path).startswith(root)):
+            return orig(self, path, *a, **kw)
+        state["writes"] += 1
+        if state["writes"] < 2:
+            return orig(self, path, *a, **kw)
+        state["armed"] = False
+        if kill_point == "before_write":
+            raise RuntimeError("injected crash before the version write")
+        orig(self, path, *a, **kw)
+        if kill_point == "uncommitted":
+            os.remove(os.path.join(path, "_SUCCESS"))
+        raise RuntimeError(f"injected crash: {kill_point}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+    assert run(root, ckpt) is not None, "the injected crash must kill the first run"
+    assert not state["armed"]
+    assert run(root, ckpt) is None
+    assert table(root) == table(ref_root)
+    assert len(versioned.versions(spark, root, "sink")) == 1
 
 
 def test_cosine_near_dup_finds_planted_dups(spark):

@@ -779,6 +779,45 @@ def test_stream_training_corpus_same_checkpoint_replay(spark, sf_dir, tmp_path):
     assert n3 >= len(rows1)
 
 
+def test_stream_training_corpus_reads_eval_docs_once(spark, sf_dir, tmp_path):
+    """The eval set's gram hashes are built once per run, not once per
+    micro-batch: over a three-batch drain, the eval frame (backed by an
+    RDD that counts the rows it yields) is scanned exactly once."""
+    import pyspark.sql.functions as F
+
+    from crane_spark.llm.run_pipeline import stream_training_corpus
+    from crane_spark.streaming.pipelines import _read_batches
+    from crane_spark.tables import table
+
+    docs = table(spark, sf_dir, "documents")
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(row):
+        reads.add(1)
+        return row
+
+    eval_rows = docs.filter(F.col("doc_id") < 20)
+    n_eval = eval_rows.count()
+    eval_docs = spark.createDataFrame(eval_rows.rdd.map(counted), eval_rows.schema)
+    src = str(tmp_path / "src")
+    root = str(tmp_path / "store")
+    for lo in (20, 100, 180):
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 80)).coalesce(
+            1
+        ).write.mode("append").parquet(src)
+    q = stream_training_corpus(
+        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1").parquet(src),
+        eval_docs,
+        root,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    batches = _read_batches(spark, root + "/report").select("batch_id").distinct()
+    assert batches.count() == 3
+    assert reads.value == n_eval
+
+
 def test_stream_vector_ingest_and_probe(spark, sf_dir, tmp_path):
     """Incremental IVF index: two ingest runs accumulate vectors into
     the cell-assigned store; probing the read-back store (reusing the
@@ -1091,9 +1130,9 @@ def test_per_batch_store_replay_keeps_one_copy_on_disk(
 
 
 def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
-    """The CMS store records its (depth, width); a reader needs no
-    params (mismatched defaults would probe the wrong cells and return
-    silent zeros), contradictory explicit params raise, and ingest
+    """The CMS store records its (depth, width); a reader takes the
+    geometry from it alone (a wrong width would probe the wrong cells
+    and return silent zeros), a store without meta/ raises, and ingest
     refuses to append a different geometry into an existing store."""
     import pytest
 
@@ -1119,8 +1158,8 @@ def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
     # paramless read resolves the stored geometry and ranks correctly
     top = read_heavy_hitters(spark, store, top_n=2).collect()
     assert [r["token"] for r in top] == ["t1", "t2"]
-    with pytest.raises(ValueError, match="records depth"):
-        read_heavy_hitters(spark, store, width=2048)
+    with pytest.raises(FileNotFoundError, match="meta"):
+        read_heavy_hitters(spark, str(tmp_path / "not_a_store"))
     # a second ingest run with a different geometry must refuse
     q = stream_heavy_hitters(
         spark.readStream.schema("token string").parquet(src),

@@ -16,6 +16,11 @@ that introduces a global exchange fails the audit until a human either
 re-plans it (dense_index, TakeOrdered, bounded frame) or classifies it
 here with a justification.
 
+Each query is built exactly as the registry runs it and its physical
+plan explained, so the audited plan is the executed plan. Building a
+query can run the indexing constructors' bounded driver jobs (cut
+sketches, bucket-count collects); the query itself never executes.
+
 Run: python tools/audit_single_partition.py [sf_dir]
 Exit 0 = every flagged query is allowlisted and every allowlisted
 query still flags (stale entries fail too, so the list never rots).
@@ -187,20 +192,9 @@ def main() -> int:
         return 3
     spark = get_spark("audit_single_partition")
     spark.sparkContext.setLogLevel("ERROR")
-    # Explain-only mode for the indexing constructors: identical plan
-    # SHAPES (same broadcast arms, window specs, when-term counts) with
-    # placeholder literals, so enumerating the registry runs no
-    # percentile sketches, offset collects, or input checkpoints
-    # (ADVICE r5: the audit used to execute real indexing jobs).
-    from crane_spark.operators import indexing
-
-    indexing.EXPLAIN_ONLY = True
     flagged: dict[str, str] = {}
     w_flagged: dict[str, str] = {}
-    try:
-        plans = _enumerate_plans(spark, sf_dir)
-    finally:
-        indexing.EXPLAIN_ONLY = False
+    plans = _enumerate_plans(spark, sf_dir)
     if plans is None:
         return 2
     for name, plan in plans.items():
