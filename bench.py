@@ -5,7 +5,8 @@ one JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>,
      "session": {"master": "local[N]", "shuffle_partitions": ...,
-                 "checkpoint_file_manager": ..., "initial_partition_num": ...}}
+                 "checkpoint_file_manager": ..., "file_system": ...,
+                 "initial_partition_num": ...}}
 
 Each query executes its full physical plan into the noop sink (no
 driver collect — we measure the engine, not result transfer).
@@ -94,6 +95,16 @@ def checkpoint_file_manager(spark) -> str:
     path = jvm.org.apache.hadoop.fs.Path(pathlib.Path(tempfile.gettempdir()).as_uri())
     conf = spark._jsparkSession.sessionState().newHadoopConf()
     return factory.create(path, conf).getClass().getSimpleName()
+
+
+def file_system(spark) -> str:
+    """Class serving `file:` paths under this session's Hadoop conf:
+    crane_spark's fork-free LocalFileSystem, or the Hadoop default when
+    session.py kept it (no javac, non-local master)."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    return fs.getClass().getName()
 
 
 def loadavg_1m():
@@ -351,6 +362,7 @@ def main() -> int:
             "python": platform.python_version(),
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "checkpoint_file_manager": checkpoint_file_manager(spark),
+            "file_system": file_system(spark),
             "initial_partition_num": spark.conf.get(
                 "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
             ),

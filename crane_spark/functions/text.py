@@ -85,13 +85,15 @@ def exploded_word_grams(
     lambda and exploding it evaluates the lambda interpreted, measured
     ~1.7-5x slower across the gram-based operators (see TUNING.md).
     ``keep`` must name columns already present on ``df`` (project any
-    computed columns before calling)."""
-    base = df.select(*keep, tokens(text_col).alias("_toks")).filter(
-        F.size("_toks") >= n
-    )
+    computed columns before calling). A text shorter than ``n`` tokens
+    explodes a NULL position list (no rows) instead of being filtered:
+    Catalyst pushes a filter on ``_toks`` below the projection and so
+    would tokenize every row twice."""
+    base = df.select(*keep, tokens(text_col).alias("_toks"))
+    positions = F.sequence(F.lit(1), F.size("_toks") - (n - 1))
     return base.select(
         *keep,
-        F.expr(f"explode(sequence(1, size(_toks) - {n - 1}))").alias("_i"),
+        F.explode(F.when(F.size("_toks") >= n, positions)).alias("_i"),
         "_toks",
     ).select(
         *keep, F.array_join(F.slice("_toks", F.col("_i"), n), " ").alias(out)

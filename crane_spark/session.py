@@ -46,6 +46,22 @@ local[N] test harness:
   The files on disk are the same under both. Pass `extra_conf` with
   `FileContextBasedCheckpointFileManager` for a filesystem whose
   `FileSystem.rename` is not atomic.
+* `file:` is served by `crane_spark.jvm.LocalFileSystem`
+  (jvm/LocalFileSystem.java). Hadoop 3.4.2 as bundled with pyspark
+  has no native library, so `RawLocalFileSystem.setPermission` forks
+  a `chmod` process, and every `create` calls it for the file and
+  again for its `.crc`: each checkpoint, state delta and local
+  parquet file cost two process starts (TUNING.md has the numbers). The
+  class sets the same mode bits through java.nio (the sticky bit
+  still takes `chmod`) and keeps the one change Hive's
+  `ProxyLocalFileSystem`, which serves `file:` otherwise, makes:
+  `rename` refuses an existing file. `get_spark` compiles it with the
+  JDK's `javac` once per checkout, into `jvm/build/`, a jar named by
+  the hash of the source and the pyspark version. Two cases keep the
+  Hadoop default: no `javac` next to the `java` Spark launches (a
+  JRE-only host), and a non-`local` master, whose executors would not
+  have the jar and whose checkpoints live on HDFS or S3, where Hadoop
+  forks nothing.
 
 Reference lineage: the reference hard-codes a 10-node cluster and a
 500-tuple micro-batch (/root/reference/util.py:59-61, dfs/env.py:4-14);
@@ -55,13 +71,81 @@ the trigger/file-split config below.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_FS_SOURCE = os.path.join(_JVM_DIR, "LocalFileSystem.java")
+_FS_CLASS = "crane_spark.jvm.LocalFileSystem"
 
 
 def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _javac() -> str | None:
+    """The javac next to the java Spark launches ($JAVA_HOME/bin/java,
+    else java on PATH), or None on a JRE-only host."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java:
+        return None
+    javac = os.path.join(os.path.dirname(os.path.realpath(java)), "javac")
+    return javac if os.access(javac, os.X_OK) else None
+
+
+def fs_jar_path(build_dir: str = os.path.join(_JVM_DIR, "build")) -> str:
+    """Where the compiled `file:` filesystem lives: named by the hash of
+    its source and the pyspark version, so an edit or an upgrade builds
+    a new jar and a stale one is never loaded."""
+    with open(_FS_SOURCE, "rb") as fh:
+        digest = hashlib.sha256(fh.read() + pyspark.__version__.encode()).hexdigest()
+    return os.path.join(build_dir, f"LocalFileSystem-{digest[:16]}.jar")
+
+
+def build_fs_jar(jar: str, javac: str) -> None:
+    """Compile LocalFileSystem.java into ``jar`` unless it exists. The
+    jar is written under a temporary name in the same directory and
+    renamed into place, so a concurrent session or build sees either
+    no jar or a whole one."""
+    if os.path.exists(jar):
+        return
+    build_dir = os.path.dirname(jar)
+    os.makedirs(build_dir, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=build_dir, prefix=".build-") as tmp:
+        classes = os.path.join(tmp, "classes")
+        spark_jars = os.path.join(_find_spark_home(), "jars", "*")
+        done = subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", spark_jars, "-d", classes, _FS_SOURCE],
+            capture_output=True,
+            text=True,
+        )
+        if done.returncode:
+            raise RuntimeError(f"javac failed on {_FS_SOURCE}:\n{done.stderr}")
+        staged = os.path.join(tmp, "staged.jar")
+        with zipfile.ZipFile(staged, "w") as zf:
+            for top, _, files in os.walk(classes):
+                for f in sorted(files):
+                    path = os.path.join(top, f)
+                    zf.write(path, os.path.relpath(path, classes))
+        os.replace(staged, jar)
+
+
+_JAVAC = _javac()
+_FS_CONF = (
+    {"spark.driver.extraClassPath": fs_jar_path(), "spark.hadoop.fs.file.impl": _FS_CLASS}
+    if _JAVAC
+    else {}
+)
 
 
 DEFAULT_CONF: dict[str, str] = {
@@ -104,6 +188,10 @@ DEFAULT_CONF: dict[str, str] = {
         "FileSystemBasedCheckpointFileManager"
     ),
     "spark.ui.enabled": "false",
+    # `file:` without a forked chmod per created file (see the module
+    # docstring); get_spark builds the jar, or drops both entries for
+    # a non-local master.
+    **_FS_CONF,
     # Local-mode driver IS the executor: long many-query sessions
     # accumulate checkpoint/broadcast blocks, and an undersized heap
     # turns the tail of every benchmark pass into GC (8g -> 16g
@@ -123,8 +211,15 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
-    builder = SparkSession.builder.appName(app_name).master(master or default_master())
+    master = master or default_master()
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
+    if _FS_CONF:
+        if re.fullmatch(r"local(\[.*\])?", master):
+            build_fs_jar(_FS_CONF["spark.driver.extraClassPath"], _JAVAC)
+        else:
+            for key in _FS_CONF:
+                del conf[key]
     if extra_conf:
         conf.update(extra_conf)
     for key, value in conf.items():

@@ -89,7 +89,7 @@ def put(df: DataFrame, root: str, name: str) -> int:
     every subsequent put, wedging the dataset. Orphans are skipped,
     never reused or deleted here (a concurrent writer may be
     mid-commit on one); `delete(name)` reclaims them with the
-    dataset."""
+    dataset, and a dataset's only writer with `drop_uncommitted`."""
     spark = df.sparkSession
     existing = _listed_versions(spark, root, name, committed_only=False)
     v = (existing[-1] if existing else 0) + 1
@@ -197,6 +197,26 @@ def compact(
         spark.read.parquet(src).coalesce(int(n_out)), root, name
     )
     return new_v, len(files), int(n_out)
+
+
+def drop_uncommitted(
+    spark: SparkSession, root: str, name: str, below: int
+) -> list[int]:
+    """Delete the uncommitted version directories (crashed puts)
+    numbered below ``below``; returns their numbers. Call it only from
+    a dataset's sole writer, with the version its last put committed:
+    another writer may be mid-commit on a directory this would
+    remove."""
+    committed = set(versions(spark, root, name))
+    orphans = [
+        v
+        for v in _listed_versions(spark, root, name, committed_only=False)
+        if v < below and v not in committed
+    ]
+    fs, _, jvm = _fs_and_path(spark, root)
+    for v in orphans:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_vdir(root, name, v)), True)
+    return orphans
 
 
 def expire(

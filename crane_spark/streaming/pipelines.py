@@ -146,7 +146,11 @@ def stream_upsert_parquet(
     superseded versions with ``versioned.expire(keep_last=1)``. A crash
     before the commit leaves the previous version as the latest; a
     crash after it leaves a merge that already holds this batch, and
-    the replay's upsert of the same rows is idempotent. Key equality in
+    the replay's upsert of the same rows is idempotent. A write that
+    died before its commit leaves an uncommitted version directory;
+    the stream is the dataset's only writer (one query per
+    checkpoint), so each batch then deletes those numbered below the
+    version it committed (``versioned.drop_uncommitted``). Key equality in
     the anti-join is NULL-SAFE, matching dropDuplicates'
     NULLs-are-equal semantics, so NULL-keyed rows upsert instead of
     duplicating forever."""
@@ -166,8 +170,9 @@ def stream_upsert_parquet(
             merged = keep.unionByName(batch)
         else:
             merged = batch
-        versioned.put(merged, root, name)
+        committed = versioned.put(merged, root, name)
         versioned.expire(spark, root, name, keep_last=1)
+        versioned.drop_uncommitted(spark, root, name, below=committed)
 
     return _foreach_batch(df, checkpoint, upsert).outputMode("update").start()
 

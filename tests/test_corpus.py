@@ -235,3 +235,27 @@ def test_contamination_xxhash_key_matches_md5_baseline(spark):
         md = contamination(docs, F.md5)
         assert xx == md, f"xxhash64/md5 contamination keys disagree at {sf}"
         assert len(xx) > 0, f"no contaminated docs found at {sf}"
+
+
+def test_exploded_word_grams_tokenizes_each_row_once(spark):
+    """The length guard sits inside the one projection: a counting UDF
+    that produces ``text`` runs once per row. A filter on the tokens
+    would be pushed below the projection and tokenize (and here call
+    the UDF) twice."""
+    from crane_spark.functions.text import exploded_word_grams
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def text(i):
+        calls.add(1)
+        return " ".join(f"w{i}_{k}" for k in range(i % 6))
+
+    docs = spark.range(20).select(
+        F.col("id").alias("doc_id"), F.udf(text, "string")("id").alias("text")
+    )
+    grams = exploded_word_grams(docs, 3, ["doc_id"], out="g").collect()
+    assert calls.value == 20
+    assert len(grams) == sum(max(0, i % 6 - 2) for i in range(20))
+    assert {r["g"] for r in grams if r["doc_id"] == 5} == {
+        "w5_0 w5_1 w5_2", "w5_1 w5_2 w5_3", "w5_2 w5_3 w5_4"
+    }

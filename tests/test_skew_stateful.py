@@ -237,7 +237,9 @@ def test_foreach_batch_upsert_crash_restart_matches_clean_run(
     assert not state["armed"]
     assert run(root, ckpt) is None
     assert table(root) == table(ref_root)
-    assert len(versioned.versions(spark, root, "sink")) == 1
+    (committed,) = versioned.versions(spark, root, "sink")
+    # a crashed write's uncommitted version is reclaimed, not left behind
+    assert os.listdir(os.path.join(root, "sink")) == [f"v{committed:06d}"]
 
 
 def test_cosine_near_dup_finds_planted_dups(spark):
