@@ -65,15 +65,14 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
 # fixed-point.
 
 
-def units(col: Column | str, decimals: int = 2) -> Column:
-    """Exact integer units of a nominally-fixed-point double column
-    (e.g. cents for 2-decimal money)."""
+def units(col: Column | str) -> Column:
+    """Exact integer cents of a nominally-2-decimal money column."""
     col = F.col(col) if isinstance(col, str) else col
-    return F.round(col * F.lit(10**decimals)).cast("long")
+    return F.round(col * F.lit(100)).cast("long")
 
 
-def sql_units(expr: str, decimals: int = 2) -> str:
-    return f"CAST(round(({expr}) * {10 ** decimals}) AS BIGINT)"
+def sql_units(expr: str) -> str:
+    return f"CAST(round(({expr}) * 100) AS BIGINT)"
 
 
 def usum(unit_expr: Column, tens: int) -> Column:

@@ -77,6 +77,9 @@ LOCAL_VOCAB_MAX = 200_000
 # round (bounds the literal merge-map size in the rewrite expression).
 BATCH_CANDIDATES = 512
 MERGES_PER_ROUND = 256
+# Exact-mode rounds between lineage checkpoints of the batched loop
+# (greedy mode checkpoints every round; see bpe_train).
+EXACT_CHECKPOINT_EVERY = 4
 
 # Exact-mode delta maintenance: when the DISTINCT adjacent-pair table
 # fits under this many entries, the exact distributed loop mirrors it
@@ -449,7 +452,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    checkpoint_every: int = 4,
     exact: bool = True,
     words: DataFrame | None = None,
     reliable_every: int = 0,
@@ -567,14 +569,14 @@ def bpe_train(
         seqs = seqs.select("word", "freq", _batch_merge_col(batch).alias("syms"))
         rounds += 1
         # Bound lineage growth across rounds (each round nests one
-        # HOF); same cadence rationale as the k-means loop. Greedy
-        # rounds carry cap-sized literal maps whose interpreted
-        # lookups are linear in map size, so nesting multiplies a
-        # much bigger per-pass cost — checkpoint every round there
-        # (measured 3x on the 1000-merge training). The checkpoint is
-        # LAZY: the next round's ranked-pairs collect materializes it
-        # as a side effect, so a round costs one job, not two.
-        if rounds % (1 if not exact else checkpoint_every) == 0:
+        # HOF). Greedy rounds carry cap-sized literal maps whose
+        # interpreted lookups are linear in map size, so nesting
+        # multiplies a much bigger per-pass cost — checkpoint every
+        # round there (measured 3x on the 1000-merge training). The
+        # checkpoint is LAZY: the next round's ranked-pairs collect
+        # materializes it as a side effect, so a round costs one job,
+        # not two.
+        if rounds % (EXACT_CHECKPOINT_EVERY if exact else 1) == 0:
             ck_no += 1
             if reliable_every > 0 and ck_no % reliable_every == 0:
                 # durable round state: eager (one extra job this

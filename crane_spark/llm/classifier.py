@@ -5,8 +5,9 @@ ONE aggregate over the corpus.
 This is the workhorse model class of real corpus curation (fastText /
 logistic quality filters a la CCNet, FineWeb-style classifier gates):
 cheap text statistics in, a calibrated keep/drop score out. The Spark
-shape mirrors `kmeans_train`: model state (a handful of weights) lives
-on the driver and BROADCASTS into the plan as a literal; the corpus
+shape is the `kmeans_step` registry query's, iterated by a driver
+loop: model state (a handful of weights) lives on the driver and
+BROADCASTS into the plan as a literal; the corpus
 never moves — each iteration computes the gradient with a decimal-
 summed hash aggregate (order-independent, bit-reproducible on any
 partitioning — the same guarantee every money aggregate in this engine

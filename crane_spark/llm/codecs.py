@@ -1,8 +1,8 @@
 """Dependency-free multimodal codecs: PNG / BMP / PPM / PGM images
 and WAV-PCM audio, pure Python + NumPy (+ stdlib zlib for PNG).
 
-These are the REAL decoders behind `llm.multimodal`'s `fake=False`
-path (the container has no PIL/ffmpeg; these formats need none). Each
+These are the REAL decoders behind `llm.multimodal.extract_features`
+(the container has no PIL/ffmpeg; these formats need none). Each
 decoder parses the actual container format — headers, alignment,
 channel order — and returns typed NumPy arrays; each encoder writes a
 spec-conformant file that external tools (and Python's stdlib `wave`

@@ -30,6 +30,8 @@ from crane_spark.tables import fan_out
 N_MINHASH = 8  # minhash permutations (md5-keyed)
 N_BANDS = 4  # LSH bands => 2 hashes per band
 SIMHASH_BITS = 16
+WINNOW_K = 8  # characters per winnowing k-gram
+SPAN_SALT_BUCKETS = 32  # dup_span_ranges(skew_safe=True) salt fan-out
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -196,45 +198,17 @@ def minhash_bands(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
-def minhash_band_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    max_bucket: int | None = None,
-    pretokenized: DataFrame | None = None,
-) -> DataFrame:
-    """LSH candidate pairs: documents sharing any band bucket.
-    Returns distinct (doc_a < doc_b) pairs.
+def band_bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (doc_a < doc_b) id pairs that share a (band, band_key)
+    bucket of ``bands``.
 
     Pairs are generated INSIDE each bucket (groupBy band key ->
     sorted id list -> in-array combinations) rather than via a bucket
-    self-join: the signature pipeline runs once, there is exactly one
-    shuffle (on the band key), and no join re-computation.
-
-    ``max_bucket`` is the degenerate-band guard for the 100 TB run: a
-    bucket of k docs emits k^2/2 pairs, so ONE band key shared by a
-    million boilerplate documents would emit half a trillion pairs
-    and sink the stage. Buckets above the cap are dropped whole (not
-    truncated — partial pair sets would be order-dependent). The
-    recall cost is confined to documents whose ONLY collision is a
-    degenerate band — near-identical boilerplate the pipeline's
-    span/exact dedup already handles — and the guard's effect is
-    observable (test constructs a giant bucket and asserts containment).
-    Default None keeps the operator lossless for candidate-complete
-    uses (lsh_eval, dedup clustering at test scales).
-    """
-    bands = minhash_bands(
-        minhash_signatures(
-            docs, text_col, id_col, shingle_n, pretokenized=pretokenized
-        ),
-        id_col,
-    )
+    self-join: exactly one shuffle (on the band key), and no join
+    re-computation of the bands."""
     buckets = bands.groupBy("band", "band_key").agg(
         F.sort_array(F.collect_list(id_col)).alias("ids")
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
     pairs = F.expr(
         "flatten(transform(ids, (x, i) -> "
         "transform(slice(ids, i + 2, size(ids) - i - 1), "
@@ -246,6 +220,25 @@ def minhash_band_pairs(
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
+
+
+def minhash_band_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_n: int = 3,
+    pretokenized: DataFrame | None = None,
+) -> DataFrame:
+    """LSH candidate pairs: documents sharing any band bucket.
+    Returns distinct (doc_a < doc_b) pairs; the signature pipeline
+    runs once (`band_bucket_pairs`)."""
+    bands = minhash_bands(
+        minhash_signatures(
+            docs, text_col, id_col, shingle_n, pretokenized=pretokenized
+        ),
+        id_col,
+    )
+    return band_bucket_pairs(bands, id_col)
 
 
 def simhash_values(
@@ -352,20 +345,20 @@ def winnow_fingerprints(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 8,
 ) -> DataFrame:
     """Rolling-hash document fingerprints (0-mod-p sampling).
 
-    Slide a k-char window over the text, hash every k-gram, and keep
-    the ~1/16 sample whose md5 starts with '0' — a content-defined
-    sample that is stable under edits outside the sampled grams (the
-    winnowing/moss family). The document fingerprint is the md5 of the
-    sorted sampled hashes; identical fingerprints => near-identical
-    character content.
+    Slide a k-char window (k = WINNOW_K) over the text, hash every
+    k-gram, and keep the ~1/16 sample whose md5 starts with '0' — a
+    content-defined sample that is stable under edits outside the
+    sampled grams (the winnowing/moss family). The document
+    fingerprint is the md5 of the sorted sampled hashes; identical
+    fingerprints => near-identical character content.
 
     Explode + codegen'd hash agg, same shape as minhash: one narrow
     explode, one shuffle on doc id.
     """
+    k = WINNOW_K
     positions = F.explode(
         F.sequence(F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1)))
     ).alias("pos")
@@ -722,17 +715,17 @@ def verify_jaccard_pairs(
     sets_b: DataFrame,
     t_num: int,
     t_den: int,
-    a: str = "doc_a",
-    b: str = "doc_b",
     id_col: str = "doc_id",
     set_col: str = "sh",
 ) -> DataFrame:
     """Exact Jaccard verify of candidate id pairs: join ``pairs``'
-    ``a``/``b`` ids to their sets in ``sets_a``/``sets_b`` ((id_col,
+    doc_a/doc_b ids to their sets in ``sets_a``/``sets_b`` ((id_col,
     set_col) frames of non-empty distinct arrays) and keep the pairs
     with Jaccard >= t_num/t_den, tested in integers
     (``t_den*inter >= t_num*union``) so no double rounding can flip a
-    decision at the threshold. Returns (a, b, n_common, jaccard)."""
+    decision at the threshold. Returns (doc_a, doc_b, n_common,
+    jaccard)."""
+    a, b = "doc_a", "doc_b"
     j = pairs.join(
         sets_a.select(F.col(id_col).alias(a), F.col(set_col).alias("_sa")), a
     ).join(sets_b.select(F.col(id_col).alias(b), F.col(set_col).alias("_sb")), b)
@@ -994,41 +987,12 @@ def _sliding_grams(
     )
 
 
-def dominant_gram_share(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    L: int = 8,
-    sample_mod: int = 64,
-) -> float:
-    """Cheap dominance probe for `dup_span_ranges`'s regime choice:
-    the share of the sliding-gram stream held by its single most
-    frequent gram, measured on a deterministic 1/``sample_mod`` doc
-    slice. A mega-duplicated boilerplate gram appears in a constant
-    fraction of documents, so its share is invariant under uniform
-    doc sampling (up to sampling noise); the probe costs one sampled
-    gram scan into a map-side-combinable count — no windows, no
-    joins, skew-immune by construction (counts never buffer rows).
-    Returns 0.0 for an empty sampled gram stream."""
-    sample = docs.filter(F.pmod(F.hash(F.col(id_col)), F.lit(sample_mod)) == 0)
-    counts = _sliding_grams(sample, text_col, id_col, L).groupBy("h").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    row = counts.agg(F.max("c").alias("top"), F.sum("c").alias("tot")).first()
-    if row["tot"] is None or row["tot"] == 0:
-        return 0.0
-    return float(row["top"]) / float(row["tot"])
-
-
 def dup_span_ranges(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     L: int = 8,
-    skew_safe: bool | None = False,
-    salt_buckets: int = 32,
-    dominant_share_threshold: float = 0.01,
-    probe_sample_mod: int = 64,
+    skew_safe: bool = False,
 ) -> DataFrame:
     """MAXIMAL duplicated-span detection at arbitrary alignment — the
     relational form of suffix-array training-data dedup (Lee et al.,
@@ -1049,40 +1013,22 @@ def dup_span_ranges(
       sort; spilling bounds memory but not that task's wall clock,
       and AQE cannot split window partitions.
     * ``skew_safe=True``: the salted two-level min/max. Level 1
-      aggregates (h, salt=hash(id) % salt_buckets) so no reducer key
-      ever receives more than 1/salt_buckets of a dominant gram's
-      occurrences REGARDLESS of partial-aggregation effectiveness;
-      level 2 folds the <= salt_buckets partial rows per h into the
-      dup verdict; survivors semi-join back against a second gram
-      scan (join skew is AQE-splittable, unlike window skew). Costs
-      that second scan — the price of removing the single-task
-      bottleneck.
-    * ``skew_safe=None``: auto — run :func:`dominant_gram_share` and
-      pick the salted shape when the top gram holds more than
-      ``dominant_share_threshold`` of the sampled gram stream (1%
-      of a 100 TB gram stream in one window partition is already a
-      multi-TB single task; the threshold is deliberately low
-      because the probe underestimates under sampling noise).
-      ``probe_sample_mod`` sizes the probe's doc sample — lower it
-      toward 1 on SMALL corpora, where a 1/64 slice holds too few
-      grams for the share to mean anything (the default assumes the
-      corpus scale the knob exists for). Probe cost measured (r8,
-      TUNING.md): ~0.6 s FIXED regardless of rung — 56% of the query
-      at sf0.1 but 7.2% at sf10 and vanishing a decade up, which is
-      why ``None`` is the corpus-scale recommendation while the
-      signature default stays ``False``.
+      aggregates (h, salt=hash(id) % SPAN_SALT_BUCKETS) so no reducer
+      key ever receives more than 1/SPAN_SALT_BUCKETS of a dominant
+      gram's occurrences REGARDLESS of partial-aggregation
+      effectiveness; level 2 folds the <= SPAN_SALT_BUCKETS partial
+      rows per h into the dup verdict; survivors semi-join back
+      against a second gram scan (join skew is AQE-splittable, unlike
+      window skew). Costs that second scan — the price of removing
+      the single-task bottleneck, and the regime a corpus-scale
+      caller picks (TUNING.md).
     """
     from pyspark.sql import Window
 
-    if skew_safe is None:
-        skew_safe = (
-            dominant_gram_share(docs, text_col, id_col, L, probe_sample_mod)
-            > dominant_share_threshold
-        )
     grams = _sliding_grams(docs, text_col, id_col, L)
     if skew_safe:
         partial = grams.groupBy(
-            "h", F.pmod(F.hash(F.col(id_col)), F.lit(salt_buckets)).alias("_s")
+            "h", F.pmod(F.hash(F.col(id_col)), F.lit(SPAN_SALT_BUCKETS)).alias("_s")
         ).agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))
         dup = (
             partial.groupBy("h")

@@ -843,7 +843,6 @@ def graph_search_topk(
     k: int = 3,
     beam: int = 8,
     hops: int = 3,
-    entry: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     entry_nodes: DataFrame | None = None,
@@ -852,12 +851,12 @@ def graph_search_topk(
     id_stats=None,
 ) -> DataFrame:
     """ANN top-k by beam search over a k-NN graph: seed each query
-    with ``entry`` strided-sample nodes (deterministic and spread
+    with max(4, sqrt(n)) strided-sample nodes (deterministic and spread
     across the id range — a refined k-NN graph keeps mostly LOCAL
     edges, so navigability depends on the entry set covering the
-    space the way HNSW's upper layers do; the default scales as
-    ~sqrt(n), the same coverage law as the build's anchor count, and
-    a production deployment would pass the build's cell anchors — the
+    space the way HNSW's upper layers do; the count follows the same
+    coverage law as the build's anchor count, and a production
+    deployment would pass the build's cell anchors — the
     IVF-route-then-graph-refine tiering), then expand
     ``hops`` rounds of frontier-neighbors, keeping the ``beam`` best
     scored nodes per query as the next frontier and accumulating
@@ -906,8 +905,7 @@ def graph_search_topk(
             n = int(id_stats[2])
         else:
             n = nv.count()
-        if entry is None:
-            entry = max(4, int(n**0.5))
+        entry = max(4, int(n**0.5))
         entries = _spread_sample(nv, id_col, entry, n, stats=id_stats).select(
             F.col(id_col).alias("node"), F.col("nv").alias("dv")
         )

@@ -8,12 +8,11 @@ container formats — 24-bit BMP, binary PPM/PGM, PCM WAV — decoded by
 the dependency-free codecs in `llm.codecs` (no PIL/ffmpeg in this
 container, and none needed for these formats).
 
-`fake=True` keeps the deterministic byte-level stand-in (shape +
-checksum derived from raw bytes) for plumbing tests and for formats
-outside the codec set; the default `fake=False` path does REAL pixel /
-sample work. Undecodable assets quarantine as null-feature rows by
-default (`on_error="null"`) — at 100 TB a malformed asset must never
-kill the job — or raise with `on_error="raise"`.
+Every asset gets REAL pixel / sample work; a container outside the
+codec set counts as undecodable. Undecodable assets quarantine as
+null-feature rows by default (`on_error="null"`) — at 100 TB a
+malformed asset must never kill the job — or raise with
+`on_error="raise"`.
 
 Schema convention for a multimodal asset column:
     asset: struct<data: binary, mime: string, width: int, height: int>
@@ -56,18 +55,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(data: bytes) -> list[float]:
-    """Deterministic byte-level stand-in: 4 moments of the byte
-    histogram. Kept for plumbing tests and unsupported containers."""
-    if not data:
-        return [0.0, 0.0, 0.0, 0.0]
-    n = float(len(data))
-    s = float(sum(data))
-    mean = s / n
-    var = float(sum((b - mean) ** 2 for b in data)) / n
-    return [n, mean, var, float(data[0])]
-
-
 def _real_feature(data: bytes) -> list[float] | None:
     """Decode and featurize one asset; None for undecodable input.
 
@@ -100,14 +87,12 @@ def _real_feature(data: bytes) -> list[float] | None:
     ]
 
 
-def extract_features(
-    assets: DataFrame, fake: bool = False, on_error: str = "null"
-) -> DataFrame:
+def extract_features(assets: DataFrame, on_error: str = "null") -> DataFrame:
     """Decode + featurize binary assets via Arrow-batched mapInPandas.
 
-    Real path (default): BMP/PPM/PGM pixels and WAV samples are decoded
-    by `llm.codecs` and summarized into a modality-tagged feature
-    vector (see `_real_feature`). Undecodable bytes produce a
+    BMP/PPM/PGM pixels and WAV samples are decoded by `llm.codecs` and
+    summarized into a modality-tagged feature vector (see
+    `_real_feature`). Undecodable bytes produce a
     null-feature row (`on_error="null"`, the quarantine-not-crash
     behavior a 100 TB scan needs) or raise (`on_error="raise"`).
 
@@ -119,10 +104,7 @@ def extract_features(
         import hashlib
 
         def feat(d):
-            d = d or b""
-            if fake:
-                return _fake_decode(d)
-            f = _real_feature(d)
+            f = _real_feature(d or b"")
             if f is None and on_error == "raise":
                 raise ValueError("undecodable asset (and on_error='raise')")
             return f

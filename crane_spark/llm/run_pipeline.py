@@ -1,8 +1,8 @@
 """The end-to-end training-corpus build as an EXECUTABLE product
 feature: every stage is an operator that is individually oracle-
 checked elsewhere; this module chains them, materializes each stage as
-a versioned snapshot (sources/versioned.py — auditable, resumable,
-diffable), and returns the per-stage survivor report.
+a versioned snapshot (sources/versioned.py — auditable, resumable),
+and returns the per-stage survivor report.
 
 Stages (the standard LLM preprocessing funnel, identical to the
 oracle-checked `corpus_funnel` registry query — the test asserts the
@@ -22,8 +22,8 @@ The published artifacts under ``{out_root}``:
 
 Why snapshots: a 100 TB corpus build is re-run weekly against moving
 inputs; versioned immutable outputs give reproducible training runs
-(pin a version), auditable diffs between builds (versioned.diff), and
-retention control (versioned.expire). The driver-facing numbers match
+(pin a version), earlier builds to compare against (versioned.get),
+and retention control (versioned.expire). The driver-facing numbers match
 the `corpus_funnel` registry query, which states the same funnel as
 one lazy plan and is hash-checked against DuckDB.
 """
@@ -38,7 +38,7 @@ from crane_spark.llm.sampling import HASH_SPACE, hash_bucket
 from crane_spark.operators.caching import loop_checkpoint
 from crane_spark.queries.corpus import N_SHARDS
 from crane_spark.sources import versioned as V
-from crane_spark.streaming.pipelines import _read_batches, _start_batch_store
+from crane_spark.streaming.pipelines import _exists, _read_batches, _start_batch_store
 from crane_spark.tables import table
 
 
@@ -197,7 +197,6 @@ def stream_training_corpus(
     replay the same way the batch funnel does. The exactly-once sink
     construction is unchanged either way.
     """
-    import os
 
     corpus_dir = out_root + "/corpus"
     hashes_dir = out_root + "/hashes"
@@ -254,7 +253,7 @@ def stream_training_corpus(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if os.path.exists(hashes_dir):
+        if _exists(spark, hashes_dir):
             # The hash store is keyed by (query_id, batch_id) so a crashed
             # attempt's own hashes/<qid>/batch-N (already on disk when the
             # batch replays under the same checkpoint) is excluded — otherwise
@@ -287,7 +286,7 @@ def stream_training_corpus(
 
         # cumulative language counts = prior batches' ledger + this one
         batch_counts = clean.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-        if os.path.exists(counts_dir):
+        if _exists(spark, counts_dir):
             prior = (
                 _read_batches(spark, counts_dir)
                 .filter(

@@ -50,11 +50,11 @@ def deterministic_sample(
 
 
 def train_test_split(
-    df: DataFrame, key: Column | str, test_fraction: float = 0.1, salt: str = "split"
+    df: DataFrame, key: Column | str, test_fraction: float = 0.1
 ) -> DataFrame:
     """Tag each row 'train' or 'test' — same row, same side, forever.
     Adds a `split` column; filter on it for either side."""
-    is_test = hash_bucket(key, salt) < int(test_fraction * HASH_SPACE)
+    is_test = hash_bucket(key, "split") < int(test_fraction * HASH_SPACE)
     return df.withColumn("split", F.when(is_test, "test").otherwise("train"))
 
 

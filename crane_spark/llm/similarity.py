@@ -314,95 +314,6 @@ def ivf_probe_topk(
     )
 
 
-def kmeans_train(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    checkpoint_every: int = 2,
-    reliable_every: int = 0,
-) -> tuple[DataFrame, list[float]]:
-    """Full k-means training: driver loop over (assign -> recompute)
-    iterations, returning (final centroids, per-iteration inertia).
-
-    The distributed pattern at 100 TB: centroids are k rows and always
-    BROADCAST; each iteration is one cross-score + one hash-agg over
-    the corpus; the driver only ever collects k centroids and one
-    inertia scalar. Centroid means and inertia run through DECIMAL so
-    training is bit-reproducible on any partitioning. Lineage is cut
-    with localCheckpoint every ``checkpoint_every`` rounds (the same
-    discipline as operators/topology.pagerank_iterations — unbounded
-    plan growth is the classic iterative-Spark failure).
-
-    Initialization: the k lowest-id vectors (deterministic; k-means++
-    would plug in here as one extra weighted-sample pass).
-    ``reliable_every=N`` upgrades every Nth checkpoint to a durable
-    ``df.checkpoint()`` — bounded replay after executor loss,
-    bit-identical centroids (operators/caching.py docstring).
-    """
-    centroids = (
-        vectors.orderBy(id_col)
-        .limit(k)
-        .select(F.col(id_col).alias("centroid_id"), vec_col)
-        .localCheckpoint(eager=True)
-    )
-    prev_ck = centroids
-    inertia: list[float] = []
-    for i in range(n_iter):
-        assigned = ivf_assign(vectors, centroids, vec_col=vec_col, id_col=id_col)
-        members = assigned.join(vectors, id_col)
-        # inertia twin of the E step: mean cosine distance to the
-        # assigned centroid (1 - cosine), decimal-summed
-        it = members.agg(
-            F.sum(
-                (F.lit(1.0) - F.col("cosine")).cast("decimal(28,6)")
-            ).cast("double").alias("s")
-        ).collect()[0]["s"]
-        inertia.append(float(it))
-        comp = members.select(
-            "centroid_id", F.posexplode(vec_col).alias("pos0", "valf")
-        ).select(
-            "centroid_id", "pos0", F.col("valf").cast("double").alias("val")
-        )
-        new_centroids = (
-            comp.groupBy("centroid_id", "pos0")
-            .agg(
-                (
-                    F.sum(F.round("val", 6).cast("decimal(28,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos0", "m"))
-                ).alias("pairs")
-            )
-            .select(
-                "centroid_id",
-                F.transform(F.col("pairs"), lambda s: s.m.cast("float")).alias(
-                    vec_col
-                ),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            from crane_spark.operators.caching import (
-                loop_checkpoint,
-                release_local_checkpoint,
-            )
-
-            centroids = loop_checkpoint(
-                new_centroids, (i + 1) // checkpoint_every, reliable_every
-            )
-            # the chain now roots at the fresh copy; free the old one
-            release_local_checkpoint(prev_ck)
-            prev_ck = centroids
-        else:
-            centroids = new_centroids
-    return centroids, inertia
-
-
 def hashed_embeddings(
     docs: DataFrame,
     dim: int = 64,

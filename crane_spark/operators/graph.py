@@ -24,12 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Label propagation converges in diameter rounds; this bounds the
+# loop on a pathological (long-chain) graph.
+MAX_ROUNDS = 50
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_rounds: int = 50,
     reliable_every: int = 0,
 ) -> DataFrame:
     """(vertex, component_id) for every vertex with at least one edge;
@@ -71,7 +74,7 @@ def connected_components(
     )
 
     prev_ck = labels
-    for rnd in range(1, max_rounds + 1):
+    for rnd in range(1, MAX_ROUNDS + 1):
         neighbor_min = (
             und.join(labels, und["s"] == labels["v"])
             .groupBy("t")

@@ -50,23 +50,30 @@ from pyspark.sql import functions as F
 # is that a billion-token vocabulary never sorts in one task.
 _SMALL_INDEX_MAX_ROWS = 262_144
 
+# Range buckets of exact_rank / exact_prefix_sum / exact_ntile and the
+# percentile_approx accuracy of their cut sketch: both move rows
+# between parallel cells (load balance), never change a result.
+_RANGE_BUCKETS = 64
+_SKETCH_ACCURACY = 10_000
+# dense_index hash buckets: parallel within-bucket sorts of ~n/256 rows.
+_HASH_BUCKETS = 256
 
-def _sketch_cuts(df: DataFrame, key: str, buckets: int, accuracy: int) -> list:
-    """``buckets - 1`` approximate cut points of ``key`` (deduplicated,
-    ascending); cut placement only moves rows between parallel cells,
-    never changes results."""
-    fracs = [i / buckets for i in range(1, buckets)]
+
+def _sketch_cuts(df: DataFrame, key: str) -> list:
+    """``_RANGE_BUCKETS - 1`` approximate cut points of ``key``
+    (deduplicated, ascending); cut placement only moves rows between
+    parallel cells, never changes results."""
+    fracs = [i / _RANGE_BUCKETS for i in range(1, _RANGE_BUCKETS)]
     # One parsed expression instead of F.percentile_approx(list):
     # the Column form issues several py4j round-trips PER FRACTION
     # literal (~280 gateway commands for 63 fracs, r10 guide §1.2)
-    # before the sketch job even starts. i/buckets are dyadic
+    # before the sketch job even starts. i/_RANGE_BUCKETS are dyadic
     # rationals, so repr round-trips each to the identical IEEE
     # double; same function, same arguments, same cuts.
     k = "`" + key.replace("`", "``") + "`"
     arr = ", ".join(f"CAST('{f!r}' AS DOUBLE)" for f in fracs)
-    cuts_row = df.select(
-        F.expr(f"percentile_approx({k}, array({arr}), {accuracy})").alias("c")
-    ).first()
+    sketch = f"percentile_approx({k}, array({arr}), {_SKETCH_ACCURACY})"
+    cuts_row = df.select(F.expr(sketch).alias("c")).first()
     return sorted(
         {c for c in ((cuts_row["c"] if cuts_row else None) or []) if c is not None}
     )
@@ -167,8 +174,6 @@ def exact_rank(
     out: str = "_rank",
     major: str | None = None,
     descending: bool = False,
-    buckets: int = 64,
-    accuracy: int = 10_000,
     checkpoint: bool = False,
     n_out: str | None = None,
 ) -> DataFrame:
@@ -185,8 +190,8 @@ def exact_rank(
     (``percentile_approx``; accuracy only affects load balance, never
     the result), ranks within each ``(major, bucket)`` cell in
     parallel, and adds per-cell offsets computed from CELL COUNTS —
-    windows over aggregate rows (<= |majors| x buckets), never data
-    rows.
+    windows over aggregate rows (<= |majors| x _RANGE_BUCKETS), never
+    data rows.
 
     ``n_out``, when given, adds the per-major row count as a column
     (callers derive ntile / percent_rank / cume_dist from rank + n).
@@ -212,7 +217,7 @@ def exact_rank(
         # and materializes the pinned blocks; every later pass reads
         # the same stored blocks (the pin the flag promises).
         df = df.localCheckpoint(eager=False)
-    cuts = _sketch_cuts(df, key, buckets, accuracy)
+    cuts = _sketch_cuts(df, key)
     d = df.withColumn("_rb", _range_bucket(key, cuts, descending))
     order = [F.col(key).desc() if descending else F.col(key).asc()]
     order += [F.col(t).asc() for t in tiebreaks]
@@ -290,13 +295,10 @@ def exact_prefix_sum(
     tiebreaks: list[str],
     out: str = "_psum",
     major: str | None = None,
-    descending: bool = False,
-    buckets: int = 64,
-    accuracy: int = 10_000,
     checkpoint: bool = False,
     exclusive: bool = True,
 ) -> DataFrame:
-    """``sum(measure) OVER ([PARTITION BY major] ORDER BY key [DESC],
+    """``sum(measure) OVER ([PARTITION BY major] ORDER BY key,
     *tiebreaks ROWS UNBOUNDED PRECEDING [AND 1 PRECEDING])`` — the
     running-total twin of :func:`exact_rank`, without a data-sized
     sort in any task.
@@ -333,10 +335,9 @@ def exact_prefix_sum(
         # and materializes the pinned blocks; every later pass reads
         # the same stored blocks (the pin the flag promises).
         df = df.localCheckpoint(eager=False)
-    cuts = _sketch_cuts(df, key, buckets, accuracy)
-    d = df.withColumn("_rb", _range_bucket(key, cuts, descending))
-    order = [F.col(key).desc() if descending else F.col(key).asc()]
-    order += [F.col(t).asc() for t in tiebreaks]
+    cuts = _sketch_cuts(df, key)
+    d = df.withColumn("_rb", _range_bucket(key, cuts, False))
+    order = [F.col(key).asc()] + [F.col(t).asc() for t in tiebreaks]
     end = -1 if exclusive else 0
 
     if major is None:
@@ -476,11 +477,8 @@ def exact_ntile(
     key: str,
     tiebreaks: list[str],
     out: str = "bucket",
-    buckets: int = 64,
-    accuracy: int = 10_000,
     checkpoint: bool = False,
     major: str | None = None,
-    descending: bool = False,
 ) -> DataFrame:
     """SQL ``ntile(k) OVER (ORDER BY key, *tiebreaks)`` — bit-exact
     bucket membership — WITHOUT the data-sized ``Exchange
@@ -491,16 +489,16 @@ def exact_ntile(
     by value range and the global order ``(range_bucket, key,
     tiebreaks)`` equals ``(key, tiebreaks)`` exactly):
 
-    1. one aggregate job sketches ``buckets-1`` approximate cut points
-       of ``key`` (``percentile_approx``; accuracy only affects load
-       balance, never the result);
+    1. one aggregate job sketches ``_RANGE_BUCKETS-1`` approximate cut
+       points of ``key`` (``percentile_approx``; accuracy only affects
+       load balance, never the result);
     2. each row maps to a range bucket via a codegen'd fold over the
        literal cut array with STRICT ``>`` — ties on ``key`` can
        never split across buckets, so within-bucket ``row_number``
        over ``(key, *tiebreaks)`` composes with bucket offsets into
        the exact global rank;
-    3. bucket counts (<= ``buckets`` rows) collect to the driver for
-       the offset cumsum AND the total n, making the ntile boundary
+    3. bucket counts (<= ``_RANGE_BUCKETS`` rows) collect to the driver
+       for the offset cumsum AND the total n, making the ntile boundary
        arithmetic pure literals: with ``q, r = divmod(n, k)`` the
        first ``r`` buckets take ``q+1`` rows (ANSI ntile), so
        ``bucket = (rank-1) div (q+1) + 1`` for ranks in the head and
@@ -541,9 +539,6 @@ def exact_ntile(
         tiebreaks,
         out="_rank",
         major=major,
-        descending=descending,
-        buckets=buckets,
-        accuracy=accuracy,
         checkpoint=checkpoint,
         n_out="_n",
     )
@@ -568,7 +563,6 @@ def dense_index(
     tiebreak: str,
     out: str = "_ix",
     major: str | None = None,
-    buckets: int = 256,
     one_based: bool = False,
     major_cap: int = 2_000_000,
     checkpoint: bool = False,
@@ -617,7 +611,7 @@ def dense_index(
         df, "_hb", "_ob", "_off", "_bn", "_n", "_t", "_mj", "_whb", "_woff",
         "_mm", "_moff", "_smallix",
     )
-    hb = F.pmod(F.xxhash64(F.col(tiebreak)), F.lit(buckets))
+    hb = F.pmod(F.xxhash64(F.col(tiebreak)), F.lit(_HASH_BUCKETS))
     if n_rows is not None and n_rows <= _SMALL_INDEX_MAX_ROWS:
         # Catalyst folds the constant partition key, so this plans as
         # an explicit `Exchange SinglePartition` + global Window —
@@ -651,7 +645,7 @@ def dense_index(
 
     if major is None:
         w = Window.partitionBy("_hb").orderBy(tiebreak)
-        # <= `buckets` rows collected: bounded by construction
+        # <= _HASH_BUCKETS rows collected: bounded by construction
         _, off_df = _global_bucket_offsets(spark, d, "_hb", "long")
         guarded_off = F.when(
             F.col("_off").isNull(),
@@ -672,7 +666,7 @@ def dense_index(
     w = Window.partitionBy(major, "_hb").orderBy(tiebreak)
     cnt = d.groupBy(major, "_hb").agg(F.count(F.lit(1)).alias("_n"))
     # exclusive prefix within each major value, ordered by bucket —
-    # a PARTITIONED window over aggregate rows (<= buckets per group)
+    # a PARTITIONED window over aggregate rows (<= _HASH_BUCKETS a group)
     w_in = (
         Window.partitionBy(major)
         .orderBy("_hb")

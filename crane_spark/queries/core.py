@@ -35,7 +35,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(
-    name: str, sql: str | None, tags: tuple[str, ...] = (), doc: str = ""
+    name: str, sql: str | None, tags: tuple[str, ...] = ()
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
@@ -51,7 +51,7 @@ def register(
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
         REGISTRY[name] = QuerySpec(
-            name=name, fn=wrapped, sql=sql, tags=tuple(tags), doc=doc or (fn.__doc__ or "")
+            name=name, fn=wrapped, sql=sql, tags=tuple(tags), doc=fn.__doc__ or ""
         )
         return fn
 

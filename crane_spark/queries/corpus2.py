@@ -524,8 +524,7 @@ def q_dup_span_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     avoidable artifact of the plan — and since round 7 it is a KNOB,
     not just a caveat: `llm.dedup.dup_span_ranges(skew_safe=True)`
     ships the salted two-level min/max shape (see
-    `dup_span_ranges_skewsafe`), with `skew_safe=None` auto-selecting
-    via the `dominant_gram_share` probe."""
+    `dup_span_ranges_skewsafe`)."""
     from crane_spark.llm.dedup import dup_span_ranges
 
     return dup_span_ranges(
@@ -551,8 +550,7 @@ def q_dup_span_ranges_skewsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape's single h-window partition becomes one multi-TB task; it
     pays a second gram scan for that guarantee (measured 2.3x at
     sf0.1 on this corpus's ORDINARY duplication profile — which is
-    why it is the opt-in, not the default). `skew_safe=None`
-    auto-recommends via the sampled dominant-gram probe."""
+    why it is the opt-in, not the default)."""
     from crane_spark.llm.dedup import dup_span_ranges
 
     return dup_span_ranges(

@@ -555,7 +555,7 @@ def q_multimodal_asset_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes for % 3 == 1, a PCM WAV whose samples encode them for
     % 3 == 2 (llm/codecs encoders, deterministic) — then run the full
     binary -> decode -> featurize path (llm/multimodal.
-    extract_features, fake=False) and report per-mime asset counts,
+    extract_features) and report per-mime asset counts,
     byte totals, and decoded feature means. Exercises the actual
     PNG/PGM/WAV parsers under the driver harness, not just pytest;
     rows-only (the float feature means have no SQL oracle), but the
@@ -601,7 +601,7 @@ def q_multimodal_asset_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = docs.select("doc_id", "text").mapInPandas(
         synth, "asset_id long, data binary, mime string"
     )
-    feats = extract_features(assets, fake=False)
+    feats = extract_features(assets)
     return (
         feats.groupBy("mime")
         .agg(

@@ -45,7 +45,6 @@ def read_csv(
     path: str,
     schema: T.StructType,
     sep: str = ",",
-    header: bool = False,
     streaming: bool = False,
 ) -> DataFrame:
     """Typed CSV in PERMISSIVE mode: malformed numeric fields become
@@ -54,7 +53,7 @@ def read_csv(
     forever (twitter_user_filter_topology.py:14; SURVEY.md §2.1)."""
     reader = spark.readStream if streaming else spark.read
     return reader.csv(
-        path, schema=schema, sep=sep, header=header, mode="PERMISSIVE"
+        path, schema=schema, sep=sep, header=False, mode="PERMISSIVE"
     )
 
 

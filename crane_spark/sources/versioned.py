@@ -149,56 +149,6 @@ def delete(
     return [version]
 
 
-def compact(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    version: int | None = None,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> tuple[int, int, int]:
-    """OPTIMIZE-style small-file compaction: rewrite one committed
-    snapshot (latest by default) as a NEW version whose parquet files
-    are bin-packed toward ``target_bytes`` each. Returns
-    ``(new_version, files_before, files_after)``.
-
-    Why it exists: streaming publishers and incremental appends write
-    one small file per micro-batch/task; at 100 TB that becomes
-    millions of kilobyte files, and every downstream scan pays a
-    per-file open plus a driver-side listing that dwarfs the read
-    itself. Compaction is the storage-layer half of partition sizing
-    (`spark.sql.files.maxPartitionBytes` can merge SPLITS at read
-    time, but not file-open or listing overhead).
-
-    Semantics: content-identical by construction — the rewrite is a
-    pure ``coalesce`` (narrow, no shuffle, no row recomputation) of
-    the immutable source snapshot into a fresh version directory, so
-    the versioned-commit protocol (`_SUCCESS` gating) makes
-    compaction atomic and the small-file original stays readable
-    until explicitly deleted. The reference's DFS plane had no
-    compaction; its versions were whole files by definition
-    (dfs/dfs_server.py:280-288).
-    """
-    vs = versions(spark, root, name)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions of {name!r} under {root}")
-    version = vs[-1] if version is None else version
-    if version not in vs:
-        raise FileNotFoundError(f"{name!r} has versions {vs}, not {version}")
-    src = _vdir(root, name, version)
-    fs, path, jvm = _fs_and_path(spark, src)
-    files = [
-        s
-        for s in fs.listStatus(path)
-        if not s.getPath().getName().startswith("_")
-    ]
-    total = sum(s.getLen() for s in files)
-    n_out = max(1, -(-total // target_bytes))  # ceil
-    new_v = put(
-        spark.read.parquet(src).coalesce(int(n_out)), root, name
-    )
-    return new_v, len(files), int(n_out)
-
-
 def drop_uncommitted(
     spark: SparkSession, root: str, name: str, below: int
 ) -> list[int]:
@@ -235,61 +185,3 @@ def expire(
     for v in doomed:
         removed.extend(delete(spark, root, name, v))
     return removed
-
-
-def diff(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    from_version: int,
-    to_version: int,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Row-level change set between two committed snapshots. Without
-    ``key_cols``: the union of rows only in ``to_version``
-    (change = 'added') and rows only in ``from_version``
-    (change = 'removed'), by full-row multiset comparison
-    (``exceptAll``). With ``key_cols``: one row per CHANGED KEY,
-    classified 'added' (key absent from from_version), 'removed' (key
-    absent from to_version), or 'updated' (key present in BOTH
-    versions but with different row content or multiplicity —
-    detected on FULL rows, so a non-key value change is reported;
-    projecting to the keys first would report an update-heavy release
-    as zero changes). added/removed are derived from the two
-    versions' full key sets, not from the changed-row multisets, so a
-    pure multiplicity change on a duplicated key (a row present twice
-    in from_version, once in to_version) classifies as 'updated', not
-    falsely 'removed'. This is the audit companion
-    to `get_versions` — the reference's version plane
-    (dfs_client.py:160-173) could fetch old bytes but never explain
-    what changed; immutable snapshot pairs make the diff a pure
-    relational operation."""
-    from pyspark.sql import functions as F
-
-    newer = get(spark, root, name, to_version)
-    older = get(spark, root, name, from_version)
-    added_rows = newer.exceptAll(older)
-    removed_rows = older.exceptAll(newer)
-    if key_cols:
-        # 'added'/'removed' come from the FULL versions' key sets —
-        # classifying from the changed-row multisets (exceptAll output)
-        # would mislabel a multiplicity-only change on a duplicated key
-        # as 'removed' even though the key exists in both versions.
-        keys_new = newer.select(*key_cols).distinct()
-        keys_old = older.select(*key_cols).distinct()
-        changed = (
-            added_rows.select(*key_cols)
-            .unionByName(removed_rows.select(*key_cols))
-            .distinct()
-        )
-        added = keys_new.subtract(keys_old).withColumn("change", F.lit("added"))
-        removed = keys_old.subtract(keys_new).withColumn("change", F.lit("removed"))
-        updated = (
-            changed.intersect(keys_new)
-            .intersect(keys_old)
-            .withColumn("change", F.lit("updated"))
-        )
-        return added.unionByName(removed).unionByName(updated)
-    added = added_rows.withColumn("change", F.lit("added"))
-    removed = removed_rows.withColumn("change", F.lit("removed"))
-    return added.unionByName(removed)

@@ -36,6 +36,13 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from crane_spark.functions.aggregates import dsum
 from crane_spark.operators.topology import wordcount
+from crane_spark.sources.versioned import _fs_and_path
+
+# stream_neardup_ingest: shingle width, and the Jaccard threshold
+# t = NEARDUP_T_NUM / NEARDUP_T_DEN a near-duplicate must reach.
+NEARDUP_SHINGLE_N = 3
+NEARDUP_T_NUM = 1
+NEARDUP_T_DEN = 2
 
 
 def stream_wordcount(lines: DataFrame) -> DataFrame:
@@ -218,9 +225,6 @@ def stream_neardup_ingest(
     checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
-    t_num: int = 1,
-    t_den: int = 2,
 ) -> StreamingQuery:
     """Incremental NEAR-duplicate-free corpus ingestion (streaming
     MinHash-LSH). Each micro-batch:
@@ -228,7 +232,7 @@ def stream_neardup_ingest(
     1. computes LSH band keys for its documents (llm/dedup.py: one
        codegen'd hash-agg, #bands short rows per doc);
     2. drops within-batch near-dups (band-bucket candidates verified
-       by exact shingle Jaccard >= t; keeper policy is the order-free
+       by exact shingle Jaccard >= 1/2; keeper policy is the order-free
        "dominated by ANY lower id" rule shared with
        `llm.similarity.semantic_dedup_keep` — NOT sequential greedy: a
        doc that matches a lower-id doc is dropped even when that lower
@@ -249,8 +253,8 @@ def stream_neardup_ingest(
     — the at-least-once-to-exactly-once argument the reference made
     with XOR acks (crane_master.py:86-94), rebuilt on content.
 
-    Documents with fewer than `shingle_n` tokens have NO shingles and
-    therefore no bands; they take an EXACT-hash path instead: their
+    Documents with fewer than NEARDUP_SHINGLE_N tokens have NO shingles
+    and therefore no bands; they take an EXACT-hash path instead: their
     band row is (band=-1, band_key=md5(text)), within-batch dedup is
     min-id-per-hash, and the cross-run probe matches on the hash but
     only drops an arrival whose matched id actually EXISTS in the doc
@@ -265,6 +269,7 @@ def stream_neardup_ingest(
     verification reads only candidate-matched documents.
     """
     from crane_spark.llm.dedup import (
+        band_bucket_pairs,
         minhash_bands,
         minhash_signatures,
         shingle_sets,
@@ -276,49 +281,34 @@ def stream_neardup_ingest(
     index_store = store_path + "/bands"
 
     def ingest(batch: DataFrame, _batch_id: int) -> None:
-        import os
-
         spark = batch.sparkSession
         ball = batch.dropDuplicates([id_col]).localCheckpoint(eager=True)
-        # Split on shingle-ability: short docs (< shingle_n tokens)
-        # have no bands and take the exact-hash path below. NULL text
-        # routes to the short path too (size(NULL tokens) is NULL, so
-        # without the coalesce BOTH filters would silently drop the
-        # row — invisible data loss); its hash coalesces NULL to '',
-        # deliberately deduping NULL-text against empty-text docs.
+        # Split on shingle-ability: short docs (< NEARDUP_SHINGLE_N
+        # tokens) have no bands and take the exact-hash path below.
+        # NULL text routes to the short path too (size(NULL tokens) is
+        # NULL, so without the coalesce BOTH filters would silently
+        # drop the row — invisible data loss); its hash coalesces NULL
+        # to '', deliberately deduping NULL-text against empty-text
+        # docs.
         n_toks = F.coalesce(F.size(tokens(text_col)), F.lit(0))
-        b = ball.filter(n_toks >= shingle_n)
+        b = ball.filter(n_toks >= NEARDUP_SHINGLE_N)
         short = (
-            ball.filter(n_toks < shingle_n)
+            ball.filter(n_toks < NEARDUP_SHINGLE_N)
             .withColumn("_h", F.md5(F.coalesce(F.col(text_col), F.lit(""))))
             .localCheckpoint(eager=True)
         )
-        sets = shingle_sets(b, text_col, id_col, shingle_n).localCheckpoint(eager=True)
+        sets = shingle_sets(b, text_col, id_col, NEARDUP_SHINGLE_N).localCheckpoint(
+            eager=True
+        )
         bands = minhash_bands(
-            minhash_signatures(b, text_col, id_col, shingle_n), id_col
+            minhash_signatures(b, text_col, id_col, NEARDUP_SHINGLE_N), id_col
         ).localCheckpoint(eager=True)
 
         # (2) within-batch: bucket pair-gen, exact verify, drop higher id
-        buckets = bands.groupBy("band", "band_key").agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids")
-        )
-        cand = (
-            buckets.filter(F.size("ids") > 1)
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (x, i) -> "
-                        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                        "y -> struct(x AS id_a, y AS id_b))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.id_a", "p.id_b")
-            .distinct()
-        )
+        cand = band_bucket_pairs(bands, id_col)
         dropped = (
-            verify_jaccard_pairs(cand, sets, sets, t_num, t_den, "id_a", "id_b", id_col)
-            .select(F.col("id_b").alias(id_col))
+            verify_jaccard_pairs(cand, sets, sets, NEARDUP_T_NUM, NEARDUP_T_DEN, id_col)
+            .select(F.col("doc_b").alias(id_col))
             .distinct()
         )
         keep = b.join(dropped, id_col, "left_anti")
@@ -335,28 +325,28 @@ def stream_neardup_ingest(
         # while the doc store does not (crash between the appends) —
         # an absent doc store means nothing is truly ingested and
         # every index hit must resolve to "not stored, keep".
-        if os.path.exists(index_store) and os.path.exists(docs_store):
+        if _exists(spark, index_store) and _exists(spark, docs_store):
             idx = spark.read.parquet(index_store)
             hits = (
                 bands.join(keep.select(id_col), id_col, "left_semi")
                 .join(
                     idx.select(
-                        "band", "band_key", F.col(id_col).alias("id_b")
+                        "band", "band_key", F.col(id_col).alias("doc_b")
                     ),
                     ["band", "band_key"],
                 )
-                .select(F.col(id_col).alias("id_a"), "id_b")
+                .select(F.col(id_col).alias("doc_a"), "doc_b")
                 .distinct()
             )
             old_docs = spark.read.parquet(docs_store).join(
-                hits.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
+                hits.select(F.col("doc_b").alias(id_col)).distinct(), id_col, "left_semi"
             )
-            old_sets = shingle_sets(old_docs, text_col, id_col, shingle_n)
+            old_sets = shingle_sets(old_docs, text_col, id_col, NEARDUP_SHINGLE_N)
             matched = (
                 verify_jaccard_pairs(
-                    hits, sets, old_sets, t_num, t_den, "id_a", "id_b", id_col
+                    hits, sets, old_sets, NEARDUP_T_NUM, NEARDUP_T_DEN, id_col
                 )
-                .select(F.col("id_a").alias(id_col))
+                .select(F.col("doc_a").alias(id_col))
                 .distinct()
             )
             keep = keep.join(matched, id_col, "left_anti")
@@ -369,13 +359,13 @@ def stream_neardup_ingest(
                 short.select(F.col(id_col), F.col("_h").alias("band_key"))
                 .join(
                     idx.filter(F.col("band") == F.lit(-1)).select(
-                        "band_key", F.col(id_col).alias("id_b")
+                        "band_key", F.col(id_col).alias("doc_b")
                     ),
                     "band_key",
                 )
                 .join(
-                    stored_ids.select(F.col(id_col).alias("id_b")),
-                    "id_b",
+                    stored_ids.select(F.col(id_col).alias("doc_b")),
+                    "doc_b",
                     "left_semi",
                 )
                 .select(id_col)
@@ -426,17 +416,28 @@ def _foreach_batch(df: DataFrame, checkpoint: str, fn) -> DataStreamWriter:
     )
 
 
-def _streaming_query_id(checkpoint: str) -> str:
+def _exists(spark: SparkSession, uri: str) -> bool:
+    """Whether ``uri`` exists, on whatever Hadoop filesystem its scheme
+    names (``os.path`` sees only bare local paths)."""
+    fs, path, _ = _fs_and_path(spark, uri)
+    return fs.exists(path)
+
+
+def _streaming_query_id(spark: SparkSession, checkpoint: str) -> str:
     """The StreamingQuery's stable id from the checkpoint's `metadata`
     file (written at query start, BEFORE batch 0; preserved across
     restarts on the same checkpoint, regenerated if the checkpoint is
-    lost). This is the txn-scoping id Delta calls `txnAppId`."""
+    lost), read through Hadoop so any checkpoint scheme works. This is
+    the txn-scoping id Delta calls `txnAppId`."""
     import json as _json
-    import os
 
-    meta = os.path.join(checkpoint.removeprefix("file:"), "metadata")
-    with open(meta) as fh:
-        return _json.load(fh)["id"]
+    fs, path, jvm = _fs_and_path(spark, checkpoint + "/metadata")
+    stream = fs.open(path)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return _json.loads(text)["id"]
 
 
 def _start_batch_store(df: DataFrame, checkpoint: str, ingest) -> StreamingQuery:
@@ -459,7 +460,7 @@ def _start_batch_store(df: DataFrame, checkpoint: str, ingest) -> StreamingQuery
     import os
 
     def run(batch: DataFrame, batch_id: int) -> None:
-        qid = _streaming_query_id(checkpoint)
+        qid = _streaming_query_id(batch.sparkSession, checkpoint)
 
         def write(frame: DataFrame, store: str) -> None:
             frame.write.mode("overwrite").parquet(
@@ -657,10 +658,8 @@ def _cms_store_geometry(
     """(depth, width) recorded in the store's meta/ dir; None for an
     empty store. Raises on a store holding MIXED
     geometries — their sketches must never be cell-wise merged."""
-    import os
-
-    meta_dir = os.path.join(store_path, "meta")
-    if not os.path.exists(meta_dir):
+    meta_dir = store_path + "/meta"
+    if not _exists(spark, meta_dir):
         return None
     rows = (
         _read_batches(spark, meta_dir)

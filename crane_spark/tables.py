@@ -226,13 +226,13 @@ def _trusted_columnar_splits(files: tuple[str, ...], n_parts: int) -> int:
         return min(n_parts, len(files) * _SPLITS_PER_FILE_CAP)
 
 
-def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Ensure a DataFrame has enough partitions to use the cluster.
 
     Single (or few-file, single-row-group) parquet inputs scan as one
     task, which serializes any compute-heavy downstream operator on one
-    core. If the TRUSTED partition count is below ``min_ratio x
-    defaultParallelism``, round-robin repartition to defaultParallelism;
+    core. If the TRUSTED partition count is below half of
+    defaultParallelism, round-robin repartition to defaultParallelism;
     otherwise return the frame untouched (at production scale file
     splits already provide parallelism and the extra shuffle would be
     pure cost).
@@ -255,6 +255,6 @@ def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
             if any(f.endswith((".parquet", ".orc")) for f in files):
                 n_parts = _trusted_columnar_splits(files, n_parts)
             _FAN_OUT_CACHE[files] = n_parts
-    if n_parts < max(1, int(target * min_ratio)):
+    if n_parts < max(1, target // 2):
         return df.repartition(target)
     return df

@@ -1,5 +1,5 @@
 """Real multimodal decode: PNG/BMP/PPM/PGM/WAV codecs (llm/codecs.py) and
-the fake=False paths of llm/multimodal.py over genuine container
+llm/multimodal.extract_features over genuine container
 bytes. Fixtures are built INDEPENDENTLY of the codecs under test where
 possible — WAV via the stdlib `wave` module, BMP by hand with struct —
 so an encoder bug cannot cancel a decoder bug."""
@@ -154,7 +154,7 @@ def test_encode_like_preserves_container():
 
 
 # ------------------------------------------------------------------
-# Spark-level real-decode paths (fake=False)
+# Spark-level real-decode paths (extract_features)
 
 
 def _real_assets(spark):
@@ -177,7 +177,7 @@ def test_real_feature_extraction(spark):
     from crane_spark.llm.multimodal import extract_features
 
     df, img, gray, audio = _real_assets(spark)
-    out = {r["asset_id"]: r for r in extract_features(df, fake=False).collect()}
+    out = {r["asset_id"]: r for r in extract_features(df).collect()}
     # BMP and PPM hold the SAME pixels -> identical image features
     f_bmp, f_ppm = out[0]["feature"], out[1]["feature"]
     assert f_bmp[:4] == [0.0, 8.0, 8.0, 3.0]

@@ -124,8 +124,8 @@ def test_dup_span_ranges_finds_shifted_passages_maximally(spark, tmp_path):
 
 def test_dup_span_ranges_skew_safe_regime_identical(spark, tmp_path):
     """r6 verdict #4: the salted two-level min/max regime must produce
-    EXACTLY the default window regime's spans — on the shifted-passage
-    fixture and with auto-selection engaged."""
+    EXACTLY the default window regime's spans on the shifted-passage
+    fixture."""
     from crane_spark.llm.dedup import dup_span_ranges
 
     passage = " ".join(f"p{i}" for i in range(12))
@@ -145,45 +145,6 @@ def test_dup_span_ranges_skew_safe_regime_identical(spark, tmp_path):
     base = spans(dup_span_ranges(docs, skew_safe=False))
     assert base == {(1, 1, 3, 15, 5), (2, 1, 0, 12, 5)}
     assert spans(dup_span_ranges(docs, skew_safe=True)) == base
-    assert spans(dup_span_ranges(docs, skew_safe=True, salt_buckets=3)) == base
-
-
-def test_dominant_gram_share_probe(spark):
-    """The auto-regime probe: near-1 share on boilerplate-heavy docs,
-    low share on diverse docs, 0.0 on an empty/short corpus — and
-    skew_safe=None picks the salted shape when dominance crosses the
-    threshold (observed via the plan: the salted regime has a
-    semi-join, the window regime has none)."""
-    import pyspark.sql.functions as F
-
-    from crane_spark.llm.dedup import dominant_gram_share, dup_span_ranges
-
-    boiler = " ".join(["x"] * 16)  # one gram dominates every doc
-    heavy = spark.range(300).select(
-        F.col("id").alias("doc_id"), F.lit(boiler).alias("text")
-    )
-    diverse = spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ", *[F.concat(F.lit(f"w{i}_"), F.col("id")) for i in range(16)]
-        ).alias("text"),
-    )
-    assert dominant_gram_share(heavy, sample_mod=2) == 1.0
-    assert dominant_gram_share(diverse, sample_mod=2) < 0.2
-    short = spark.range(5).select(
-        F.col("id").alias("doc_id"), F.lit("too short").alias("text")
-    )
-    assert dominant_gram_share(short, sample_mod=1) == 0.0
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    # probe_sample_mod=1: these corpora are 300 docs, far below the
-    # scale the default 1/64 sample assumes
-    auto_heavy = plan(dup_span_ranges(heavy, skew_safe=None, probe_sample_mod=1))
-    assert "LeftSemi" in auto_heavy  # dominance -> salted regime
-    auto_diverse = plan(dup_span_ranges(diverse, skew_safe=None, probe_sample_mod=1))
-    assert "LeftSemi" not in auto_diverse  # no dominance -> window regime
 
 
 def test_contamination_xxhash_key_matches_md5_baseline(spark):

@@ -371,7 +371,7 @@ def test_dup_span_ranges_skewsafe_salted_shape(spark, sf_dir):
     """Plan guard for the r7 skew-safe regime: TWO gram scans (the
     accepted price), a left-semi probe join instead of any h-window,
     and the level-1 aggregate keyed on (h, _s salt) so a dominant
-    gram splits across salt_buckets reducer keys. The only windows
+    gram splits across SPAN_SALT_BUCKETS reducer keys. The only windows
     left are the per-doc island merges."""
     plan = _plan(spark, sf_dir, "dup_span_ranges_skewsafe")
     assert plan.count("- Generate (") == 2  # two sliding-gram explodes

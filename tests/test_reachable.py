@@ -1,18 +1,26 @@
 """Guard against library code that only tests reach.
 
-A name-based AST closure over ``crane_spark``: start from the roots
-(every ``@register``ed query, module-level code other than the
-imports and ``__all__`` of a package ``__init__``, ``perfbench/``,
-``bench.py``, ``__spark_entry__.py`` and the tools that docs and tests
-run) plus the ``KEEP`` entries below, then repeatedly mark every
-top-level def or class whose NAME appears in reached code. Any
-top-level def or class left unmarked is reachable from tests alone and
-fails the guard: wire it into a root, delete it, or add it to ``KEEP``
-with a one-line reason.
+An AST closure over ``crane_spark`` that resolves names through
+imports: start from the roots (every ``@register``ed query,
+module-level code other than the imports and ``__all__`` of a package
+``__init__``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py`` and
+the tools that docs and tests run) plus the ``KEEP`` entries below,
+then repeatedly mark every top-level def or class that reached code
+refers to. Any top-level def or class left unmarked is reachable from
+tests alone and fails the guard: wire it into a root, delete it, or
+add it to ``KEEP`` with a one-line reason.
 
-Name matching over-approximates (any ``x.compact`` reaches every
-``compact``), so the guard can miss dead code but never flags live
-code. Pure AST work: no Spark session.
+A reference reaches a def only when it is
+
+- a bare name in the def's own module;
+- a name bound by ``from <module> import <name>``, following package
+  re-exports;
+- an attribute chain on a name bound to a module, e.g. ``V.put`` after
+  ``from crane_spark.sources import versioned as V``.
+
+So ``df.diff`` or a local variable named ``compact`` reaches nothing.
+Names built at run time (``getattr`` with a string, ``importlib``) are
+not followed. Pure AST work: no Spark session.
 """
 
 from __future__ import annotations
@@ -64,20 +72,103 @@ KEEP = {
     "crane_spark.llm.codecs:encode_bmp": "test fixture encoder",
     "crane_spark.llm.codecs:encode_ppm": "test fixture encoder",
     "crane_spark.llm.codecs:encode_like": "test fixture encoder",
-    "crane_spark.llm.similarity:kmeans_train": "test fixture: trains the centroids the IVF tests probe",
 }
 
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
-def _refs(node: ast.AST) -> set[str]:
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.add((n.asname or n.name).rsplit(".", 1)[-1])
-    return out
+
+class _Module:
+    """One parsed source file: its top-level defs and the module-level
+    names its imports bind."""
+
+    def __init__(self, name: str, path: str, is_package: bool):
+        self.name = name
+        self.is_package = is_package
+        self.body = ast.parse(open(path, encoding="utf-8").read()).body
+        self.defs = {st.name: st for st in self.body if isinstance(st, _DEF)}
+        self.bindings: dict[str, tuple] = {}
+        for st in self.body:
+            if not isinstance(st, _DEF):
+                self.bindings.update(self.imports(st))
+
+    def imports(self, node: ast.AST) -> dict[str, tuple]:
+        """Names the imports under ``node`` bind: ``("module", m)`` or
+        ``("from", m, name)``."""
+        out: dict[str, tuple] = {}
+        for n in ast.walk(node):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    if a.asname:
+                        out[a.asname] = ("module", a.name)
+                    else:
+                        top = a.name.split(".")[0]
+                        out[top] = ("module", top)
+            elif isinstance(n, ast.ImportFrom):
+                base = n.module or ""
+                if n.level:
+                    parts = self.name.split(".")
+                    keep = len(parts) - n.level + (1 if self.is_package else 0)
+                    base = ".".join(parts[:keep] + ([base] if base else []))
+                for a in n.names:
+                    out[a.asname or a.name] = ("from", base, a.name)
+        return out
+
+
+class _Index:
+    """Resolves references to "module:name" keys of top-level defs."""
+
+    def __init__(self, modules: dict[str, _Module]):
+        self.modules = modules
+
+    def binding(self, b: tuple, seen: frozenset = frozenset()) -> tuple | None:
+        """A binding's target: ``("module", m)``, ``("def", key)`` or None."""
+        if b[0] == "module":
+            return b if b[1] in self.modules else None
+        return self.member(b[1], b[2], seen)
+
+    def member(self, mod: str, name: str, seen: frozenset = frozenset()) -> tuple | None:
+        """``mod.name``: a def of ``mod``, a submodule, or what ``mod``'s
+        own imports bind to ``name`` (a re-export)."""
+        m = self.modules.get(mod)
+        if m is None or (mod, name) in seen:
+            return None
+        if name in m.defs:
+            return ("def", f"{mod}:{name}")
+        if f"{mod}.{name}" in self.modules:
+            return ("module", f"{mod}.{name}")
+        if name in m.bindings:
+            return self.binding(m.bindings[name], seen | {(mod, name)})
+        return None
+
+    def refs(self, m: _Module, node: ast.AST) -> set[str]:
+        """Keys of the defs ``node`` refers to, seen from module ``m``."""
+        scope = {**m.bindings, **m.imports(node)}
+
+        def name(ident: str) -> tuple | None:
+            if ident in m.defs:
+                return ("def", f"{m.name}:{ident}")
+            return self.binding(scope[ident]) if ident in scope else None
+
+        out: set[str] = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                target = name(n.id)
+            elif isinstance(n, ast.Attribute):
+                chain = []
+                base = n
+                while isinstance(base, ast.Attribute):
+                    chain.append(base.attr)
+                    base = base.value
+                target = name(base.id) if isinstance(base, ast.Name) else None
+                for attr in reversed(chain):
+                    if target is None or target[0] != "module":
+                        break
+                    target = self.member(target[1], attr)
+            else:
+                continue
+            if target is not None and target[0] == "def":
+                out.add(target[1])
+        return out
 
 
 def _is_registered(node: ast.AST) -> bool:
@@ -96,45 +187,57 @@ def _is_reexport(st: ast.stmt) -> bool:
     return any(getattr(t, "id", None) == "__all__" for t in targets)
 
 
-def _scan() -> tuple[dict[str, set[str]], set[str]]:
-    """(top-level "module:name" -> names its body references, root names)."""
-    defs: dict[str, set[str]] = {}
-    roots: set[str] = set()
+def _load() -> tuple[dict[str, _Module], list[_Module]]:
+    """(every ``crane_spark`` module by name, the root files outside it)."""
+    modules: dict[str, _Module] = {}
     for dirpath, _, files in os.walk(os.path.join(ROOT, "crane_spark")):
         for f in sorted(files):
             if not f.endswith(".py"):
                 continue
             path = os.path.join(dirpath, f)
-            mod = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
-            for st in ast.parse(open(path, encoding="utf-8").read()).body:
-                if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                    defs[f"{mod}:{st.name}"] = _refs(st)
-                    if _is_registered(st):
-                        roots |= _refs(st) | {st.name}
-                elif not (f == "__init__.py" and _is_reexport(st)):
-                    roots |= _refs(st)
+            name = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+            is_package = f == "__init__.py"
+            if is_package:
+                name = name[: -len(".__init__")]
+            modules[name] = _Module(name, path, is_package)
     paths = [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "__spark_entry__.py")]
     paths += [os.path.join(ROOT, "tools", f"{t}.py") for t in ROOT_TOOLS]
     bench = os.path.join(ROOT, "perfbench")
-    paths += [os.path.join(bench, f) for f in os.listdir(bench) if f.endswith(".py")]
-    for path in paths:
-        roots |= _refs(ast.parse(open(path, encoding="utf-8").read()))
+    paths += [os.path.join(bench, f) for f in sorted(os.listdir(bench)) if f.endswith(".py")]
+    outside = [_Module(os.path.relpath(p, ROOT)[: -len(".py")].replace(os.sep, "."), p, False) for p in paths]
+    return modules, outside
+
+
+def _scan() -> tuple[dict[str, set[str]], set[str]]:
+    """(top-level "module:name" -> keys its body refers to, root keys)."""
+    modules, outside = _load()
+    index = _Index(modules)
+    defs: dict[str, set[str]] = {}
+    roots: set[str] = set()
+    for m in modules.values():
+        for st in m.body:
+            if isinstance(st, _DEF):
+                key = f"{m.name}:{st.name}"
+                defs[key] = index.refs(m, st)
+                if _is_registered(st):
+                    roots |= defs[key] | {key}
+            elif not (m.is_package and _is_reexport(st)):
+                roots |= index.refs(m, st)
+    for m in outside:
+        for st in m.body:
+            roots |= index.refs(m, st)
     return defs, roots
 
 
-def _closure(defs: dict[str, set[str]], names: set[str]) -> set[str]:
-    """Every "module:name" whose name is in ``names`` or in the body of
-    one already reached."""
-    names = set(names)
+def _closure(defs: dict[str, set[str]], keys: set[str]) -> set[str]:
+    """Every key in ``keys`` or referred to by one already reached."""
     live: set[str] = set()
-    grew = True
-    while grew:
-        grew = False
-        for key, refs in defs.items():
-            if key not in live and key.split(":")[1] in names:
-                live.add(key)
-                names |= refs
-                grew = True
+    todo = [k for k in keys if k in defs]
+    while todo:
+        key = todo.pop()
+        if key not in live:
+            live.add(key)
+            todo.extend(defs[key] - live)
     return live
 
 
@@ -145,7 +248,7 @@ def test_every_library_def_is_reached_from_a_root():
     from_roots = _closure(defs, roots)
     redundant = sorted(k for k in KEEP if k in from_roots)
     assert not redundant, f"KEEP entries a root already reaches: {redundant}"
-    live = _closure(defs, roots | {k.split(":")[1] for k in KEEP})
+    live = _closure(defs, roots | set(KEEP))
     dead = sorted(k for k in defs if k not in live)
     assert not dead, (
         "top-level defs reached only from tests (wire into a root, delete, "

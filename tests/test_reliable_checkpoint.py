@@ -55,24 +55,6 @@ def test_pagerank_bit_identical_with_reliable_cadence(spark):
     assert base == rel  # exact float equality: identical plans, rows
 
 
-def test_kmeans_bit_identical_with_reliable_cadence(spark):
-    from crane_spark.llm.similarity import kmeans_train
-
-    vecs = spark.range(120).select(
-        F.col("id").alias("vec_id"),
-        F.array(
-            *[
-                ((F.col("id") * (i + 3)) % 17).cast("float") + F.lit(0.5)
-                for i in range(4)
-            ]
-        ).alias("embedding"),
-    )
-    c0, i0 = kmeans_train(vecs, k=4, n_iter=4, checkpoint_every=2)
-    c1, i1 = kmeans_train(vecs, k=4, n_iter=4, checkpoint_every=2, reliable_every=1)
-    assert i0 == i1
-    assert sorted(map(tuple, c0.collect())) == sorted(map(tuple, c1.collect()))
-
-
 def test_bpe_delta_and_batched_bit_identical_with_reliable_cadence(spark):
     from crane_spark.llm.bpe import _initial_symbols, _pair_counts, _bpe_train_delta, bpe_train
 

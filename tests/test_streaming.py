@@ -1172,6 +1172,60 @@ def test_heavy_hitters_store_is_self_describing(spark, tmp_path):
         raise AssertionError("query should have failed")
 
 
+def test_heavy_hitters_store_at_file_uri(spark, tmp_path):
+    """A ``file://`` store is read back like a bare path: its meta/
+    geometry is found through Hadoop, not ``os.path``."""
+    from crane_spark.streaming.pipelines import (
+        read_heavy_hitters,
+        stream_heavy_hitters,
+    )
+
+    src = str(tmp_path / "in")
+    store = (tmp_path / "hh").as_uri()
+    rows = [(f"t{k}",) for k in range(1, 6) for _ in range(30 // k)]
+    spark.createDataFrame(rows, "token string").coalesce(1).write.parquet(src)
+    q = stream_heavy_hitters(
+        spark.readStream.schema("token string").parquet(src),
+        store,
+        str(tmp_path / "ck"),
+    )
+    q.awaitTermination(60)
+    top = read_heavy_hitters(spark, store, top_n=2).collect()
+    assert [r["token"] for r in top] == ["t1", "t2"]
+
+
+def test_stream_training_corpus_file_uri_dedups_across_batches(spark, tmp_path):
+    """With ``file://`` URIs for the store and the checkpoint, a
+    second batch's exact duplicate of a first-batch document is
+    dropped against the persisted hash index."""
+    from crane_spark.llm.run_pipeline import (
+        read_stream_corpus,
+        stream_training_corpus,
+    )
+
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+
+    def frame(rows):
+        # one language, so the mixing stage admits every document
+        texts = [(i, " ".join(f"{w}{k}" for k in range(40))) for i, w in rows]
+        return spark.createDataFrame(
+            [(i, t, "en", "web", len(t)) for i, t in texts], schema
+        )
+
+    src = str(tmp_path / "src")
+    root = (tmp_path / "store").as_uri()
+    ckpt = (tmp_path / "ckpt").as_uri()
+    eval_docs = frame([(0, "eval")])
+    for rows in ([(1, "a"), (2, "b")], [(3, "a"), (4, "c")]):  # 3 repeats 1
+        frame(rows).coalesce(1).write.mode("append").parquet(src)
+        q = stream_training_corpus(
+            spark.readStream.schema(schema).parquet(src), eval_docs, root, ckpt
+        )
+        q.awaitTermination(180)
+    corpus, _ = read_stream_corpus(spark, root)
+    assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 2, 4]
+
+
 @pytest.mark.parametrize("kill_point", [0, 1, 2, 3, 4])
 def test_stream_training_corpus_crash_matrix(
     spark, sf_dir, tmp_path, monkeypatch, kill_point

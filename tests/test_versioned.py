@@ -139,56 +139,6 @@ def test_incremental_aggregate_maintenance(spark, root):
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
 
 
-def test_snapshot_diff(spark, root):
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (2, "b"), (3, "c")], "id long, s string"
-    )
-    nxt = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "CHANGED"), (4, "d")], "id long, s string"
-    )
-    V.put(base, root, "t")
-    V.put(nxt, root, "t")
-    got = {
-        (r["id"], r["s"], r["change"]) for r in V.diff(spark, root, "t", 1, 2).collect()
-    }
-    assert got == {
-        (3, "CHANGED", "added"),
-        (4, "d", "added"),
-        (2, "b", "removed"),   # multiset: one of the two dup rows went away
-        (3, "c", "removed"),
-    }
-
-
-def test_compaction_rewrites_small_files_content_identical(spark, root):
-    """OPTIMIZE analog: a snapshot written as many tiny files compacts
-    into a new version with few files and a byte-identical row
-    multiset; the original version stays readable (immutability)."""
-    df = spark.range(10_000).withColumnRenamed("id", "x")
-    V.put(df.repartition(64), root, "d")  # 64 tiny files
-    new_v, before, after = V.compact(spark, root, "d", target_bytes=1 << 30)
-    assert new_v == 2 and before == 64 and after == 1
-    fs, path, jvm = V._fs_and_path(spark, f"{root}/d/v{new_v:06d}")
-    data_files = [
-        s for s in fs.listStatus(path) if not s.getPath().getName().startswith("_")
-    ]
-    assert len(data_files) == 1
-    # content-identical multiset, original untouched
-    assert V.get(spark, root, "d", 2).exceptAll(V.get(spark, root, "d", 1)).count() == 0
-    assert V.get(spark, root, "d", 1).exceptAll(V.get(spark, root, "d", 2)).count() == 0
-    assert V.versions(spark, root, "d") == [1, 2]
-    # a mid-range target bin-packs to ceil(total/target) files
-    sz = sum(
-        s.getLen()
-        for s in V._fs_and_path(spark, f"{root}/d/v000001")[0].listStatus(
-            V._fs_and_path(spark, f"{root}/d/v000001")[1]
-        )
-        if not s.getPath().getName().startswith("_")
-    )
-    v3, _, n3 = V.compact(spark, root, "d", version=1, target_bytes=max(1, sz // 4))
-    assert v3 == 3 and 4 <= n3 <= 5
-    assert V.get(spark, root, "d", 3).count() == 10_000
-
-
 def test_expire_keeps_newest_versions(spark, root):
     for n in (1, 2, 3, 4, 5):
         V.put(spark.range(n), root, "d")
@@ -209,39 +159,6 @@ def test_get_versions_zero_and_negative_return_nothing(spark, root):
     assert V.get_versions(spark, root, "d", 0) == {}
     assert V.get_versions(spark, root, "d", -2) == {}
     assert sorted(V.get_versions(spark, root, "d", 2)) == [2, 3]
-
-
-def test_diff_by_key_reports_value_updates(spark, root):
-    """With key_cols, a key whose NON-KEY values changed must surface
-    as 'updated' — projecting to keys first would report an
-    update-heavy release as zero changes."""
-    v1 = spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "id long, score long")
-    v2 = spark.createDataFrame([(1, 99), (2, 20), (4, 40)], "id long, score long")
-    V.put(v1, root, "t")
-    V.put(v2, root, "t")
-    got = {
-        (r["id"], r["change"])
-        for r in V.diff(spark, root, "t", 1, 2, key_cols=["id"]).collect()
-    }
-    assert got == {(1, "updated"), (3, "removed"), (4, "added")}
-
-
-def test_diff_by_key_multiplicity_change_is_updated(spark, root):
-    """A key whose row is duplicated in one version and not the other
-    exists in BOTH versions — it must classify as 'updated', never
-    'removed'/'added' (ADVICE r7: classifying from the changed-row
-    multisets mislabeled this case)."""
-    v1 = spark.createDataFrame(
-        [(1, 10), (1, 10), (2, 20)], "id long, score long"
-    )
-    v2 = spark.createDataFrame([(1, 10), (2, 20)], "id long, score long")
-    V.put(v1, root, "m")
-    V.put(v2, root, "m")
-    got = {
-        (r["id"], r["change"])
-        for r in V.diff(spark, root, "m", 1, 2, key_cols=["id"]).collect()
-    }
-    assert got == {(1, "updated")}
 
 
 def test_put_to_file_uri_invalidates_table_handles(spark, sf_dir, tmp_path):
