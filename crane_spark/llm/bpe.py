@@ -2,30 +2,57 @@
 
 The classic algorithm (Sennrich et al., public literature): start from
 characters, repeatedly merge the most frequent adjacent symbol pair.
-The distributed formulation exploits the standard trick that BPE
-statistics live on the WORD-FREQUENCY table, not the corpus: a 100 TB
+BPE statistics live on the WORD-FREQUENCY table, not the corpus: the
 corpus collapses to a vocabulary-sized (word, freq) table in one
-aggregate, and every merge iteration is then
+aggregate, and every merge round then runs over data proportional to
+the vocabulary. Ties break lexicographically (count desc, pair asc),
+so training is bit-reproducible on any cluster.
 
-    bigram count:  explode adjacent symbol pairs, sum freq   (small)
-    argmax:        1-row global top (count desc, pair asc)   (driver)
-    merge apply:   per-word symbol-array rewrite             (map-only)
-
-so the expensive corpus scan happens exactly once, and the loop runs
-over data proportional to the vocabulary. Ties break lexicographically
-— training is bit-reproducible on any cluster (same corpus, same
-merges), which ad-hoc hash-ordered implementations lose.
-
-The merge rewrite is a left-to-right scan with a skip flag — expressed
-as an `aggregate` HOF over indices (pure JVM, no Python in the loop).
+Training and inference share one symbol representation: a word is the
+string of its symbols, each escaped and bracketed (`_sym`). Merging
+the pair (a, b) is one ``replace`` of ``_sym(a) + _sym(b)`` with
+``_sym(a + b)``: a left-to-right, non-overlapping pass that is exactly
+classic BPE's skip-one merge, in pure JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 END = "</w>"
+
+# Vocabularies at or under this size train all merge rounds driver-
+# side in one pass over the collected (word, freq) table — the same
+# adaptive-local pattern as connected_components' union-find: the
+# iteration data is vocabulary-sized by construction, and when it fits
+# comfortably in one process, a cluster job per merge round is pure
+# scheduling overhead (measured 6x on the 8-round training query).
+# Larger vocabularies keep the distributed loop.
+LOCAL_VOCAB_MAX = 200_000
+
+# The distributed loop ranks pairs from a driver-side (pair -> count)
+# table, kept current by per-round deltas, while the table's DISTINCT
+# size fits under PAIR_DICT_MAX. Pair diversity is symbol-pair-bounded
+# (an alphabet² in the letter phase, growing only by merge-created
+# symbols), orders of magnitude under the word count that gates the
+# local path. Above it, each round re-counts the pairs and fetches the
+# top BATCH_CANDIDATES. MERGES_PER_ROUND caps the replace chain of one
+# round.
+PAIR_DICT_MAX = 2_000_000
+BATCH_CANDIDATES = 512
+MERGES_PER_ROUND = 256
+
+# Symbol string form: each symbol rides as \x01esc(sym)\x02, where esc
+# maps \x03 -> \x03e, then \x01 -> \x03o, then \x02 -> \x03c. Bracket
+# bytes then occur only as brackets, so a replace pattern matches
+# whole adjacent symbols on any corpus. esc works character by
+# character, so esc(a + b) == esc(a) + esc(b): a merged symbol's form
+# is its parts' forms joined. Decoding undoes \x03o and \x03c before
+# \x03e (undoing \x03e first would turn an escaped \x03 followed by a
+# literal 'o' into \x03o).
+_OPEN, _CLOSE = "\x01", "\x02"
+_ESCAPES = (("\x03", "\x03e"), ("\x01", "\x03o"), ("\x02", "\x03c"))
 
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -40,58 +67,71 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _initial_symbols(words: DataFrame) -> DataFrame:
-    """Split each word into characters plus the end-of-word marker."""
-    return words.select(
-        "word",
-        "freq",
-        F.concat(
-            F.split(F.col("word"), ""), F.array(F.lit(END))
-        ).alias("syms"),
-    )
+def _replace(x: str | Column, old: str, new: str) -> str | Column:
+    return x.replace(old, new) if isinstance(x, str) else F.replace(x, F.lit(old), F.lit(new))
+
+
+def _escape(sym: str | Column) -> str | Column:
+    """Escape a symbol (a str, or a string Column) for the string form."""
+    for raw, esc in _ESCAPES:
+        sym = _replace(sym, raw, esc)
+    return sym
+
+
+def _unescape(sym: str | Column) -> str | Column:
+    """Undo `_escape` (a str, or a string Column)."""
+    for raw, esc in _ESCAPES[1:] + _ESCAPES[:1]:  # \x03e last
+        sym = _replace(sym, esc, raw)
+    return sym
+
+
+def _sym(sym: str) -> str:
+    """One symbol in the string form: escaped, then bracketed."""
+    return _OPEN + _escape(sym) + _CLOSE
+
+
+def _encode(word: Column) -> Column:
+    """A word's initial symbol string: its characters, then END."""
+    chars = F.array_join(F.transform(F.split(word, ""), _escape), _CLOSE + _OPEN)
+    return F.concat(F.lit(_OPEN), chars, F.lit(_CLOSE + _sym(END)))
+
+
+def _escaped_symbols(s: Column) -> Column:
+    """The array of escaped symbols of a symbol string. Escaping is
+    one-to-one, so pairs group the same escaped or not: the loop
+    counts escaped pairs and unescapes only the aggregated rows."""
+    return F.split(F.btrim(s, F.lit(_OPEN + _CLOSE)), _CLOSE + _OPEN)
+
+
+def _merge(s: Column, merges: list[tuple[str, str, int]]) -> Column:
+    """Apply ``merges`` to a symbol string in order, one replace each."""
+    for a, b, _n in merges:
+        s = F.replace(s, F.lit(_sym(a) + _sym(b)), F.lit(_sym(a + b)))
+    return s
+
+
+def _pair_structs(col_name: str) -> Column:
+    """Adjacent-pair struct array of a symbol-array column, empty
+    (typed) when the word has shrunk below 2 symbols — `sequence(1, 0)`
+    DESCENDS in Spark, so the size guard is load-bearing."""
+    return F.when(
+        F.size(F.col(col_name)) >= 2,
+        F.expr(
+            f"transform(sequence(1, size({col_name}) - 1), "
+            f"i -> struct({col_name}[i - 1] AS a, {col_name}[i] AS b))"
+        ),
+    ).otherwise(F.expr("CAST(array() AS array<struct<a:string,b:string>>)"))
 
 
 def _pair_counts(seqs: DataFrame) -> DataFrame:
-    pairs = F.expr(
-        "transform(sequence(1, size(syms) - 1), i -> struct(syms[i - 1] AS a, syms[i] AS b))"
-    )
+    """(a, b, n): adjacent-pair counts of a (freq, s) frame."""
     return (
-        seqs.filter(F.size("syms") >= 2)
-        .select("freq", F.explode(pairs).alias("p"))
+        seqs.select("freq", _escaped_symbols(F.col("s")).alias("syms"))
+        .select("freq", F.explode(_pair_structs("syms")).alias("p"))
         .groupBy("p.a", "p.b")
         .agg(F.sum("freq").alias("n"))
+        .select(_unescape(F.col("a")).alias("a"), _unescape(F.col("b")).alias("b"), "n")
     )
-
-
-# Vocabularies at or under this size train all merge rounds driver-
-# side in one pass over the collected (word, freq) table — the same
-# adaptive-local pattern as connected_components' union-find: the
-# iteration data is vocabulary-sized by construction, and when it fits
-# comfortably in one process, 2 cluster jobs per merge round are pure
-# scheduling overhead (measured 6x on the 8-round training query).
-# Larger vocabularies keep the distributed loop.
-LOCAL_VOCAB_MAX = 200_000
-
-# Distributed loop batching: ranked pair candidates fetched per round
-# (they are tiny 3-field rows) and the cap on merges accepted per
-# round (bounds the literal merge-map size in the rewrite expression).
-BATCH_CANDIDATES = 512
-MERGES_PER_ROUND = 256
-# Exact-mode rounds between lineage checkpoints of the batched loop
-# (greedy mode checkpoints every round; see bpe_train).
-EXACT_CHECKPOINT_EVERY = 4
-
-# Exact-mode delta maintenance: when the DISTINCT adjacent-pair table
-# fits under this many entries, the exact distributed loop mirrors it
-# driver-side once and then maintains it incrementally from per-round
-# DELTAS (pairs destroyed/created by the applied batch, aggregated
-# over only the REWRITTEN words) instead of re-counting every pair
-# every round. Pair diversity is symbol-pair-bounded (an alphabet² in
-# the letter phase, growing only by merge-created symbols), orders of
-# magnitude under the word count that gates the local path; corpora
-# whose pair diversity exceeds the cap fall back to the re-counting
-# loop unchanged.
-PAIR_DICT_MAX = 2_000_000
 
 
 def _select_batch(
@@ -133,11 +173,8 @@ def _select_batch(
     ``len(batch)`` picks in order. If truncation empties the batch,
     the top-1 pair alone is always the classic argmax.
 
-    Application safety: sequential replaces (the delta loop) apply in
-    rank order — classic order literally. The one-pass map rewrite
-    (`_batch_merge_col`) is also exact under the chain ban: distinct
-    batch pairs can never match overlapping positions (chains are the
-    only overlap shape), so leftmost-skip equals rank order."""
+    The round applies the batch as one chain of replaces in rank
+    order — classic order literally."""
     firsts: set[str] = set()
     seconds: set[str] = set()
     prod: set[str] = set()
@@ -172,241 +209,127 @@ def _select_batch(
     return accepted
 
 
-def _select_batch_greedy(
-    ranked: list[tuple[str, str, int]], cap: int
+def _update_table(table: dict[tuple[str, str], int], deltas: list) -> None:
+    """Fold one round's aggregated (escaped a, escaped b, d) pair
+    deltas into the driver pair table."""
+    for a, b, d in deltas:
+        key = (_unescape(a), _unescape(b))
+        n = table.get(key, 0) + int(d)
+        if n > 0:
+            table[key] = n
+        elif n == 0:
+            table.pop(key, None)
+        else:  # impossible if the table is consistent
+            raise AssertionError(f"negative pair count for {key}: {n}")
+
+
+def _bpe_train_distributed(
+    cur: DataFrame, n_merges: int, reliable_every: int
 ) -> list[tuple[str, str, int]]:
-    """Greedy batch selection for ``exact=False`` training: accept
-    every ranked pair that is symbol-disjoint (inputs AND produced
-    symbols) from those already accepted, SKIPPING conflicts instead
-    of cutting the batch at the first one.
+    """Exact batched BPE over a (freq, s) frame of symbol strings.
 
-    Within a round the applied merges are still a one-pass-equals-
-    sequential set (disjointness holds), but the SELECTION may
-    deviate from classic BPE: a skipped conflicting pair would, in
-    classic order, have been re-counted after the earlier merge and
-    might outrank a pair accepted here. That reordering is the
-    standard scalable-BPE tradeoff — early letter-pair merges share
-    symbols so heavily that exact-classic batching degenerates to
-    ~2 merges/round (measured), while greedy batches run at the cap.
-    Tie-breaks inside the batch keep the classic ranked order, and
-    training remains fully deterministic."""
-    used: set[str] = set()
-    accepted: list[tuple[str, str, int]] = []
-    for a, b, n in ranked:
-        if len(accepted) >= cap:
-            break
-        if a in used or b in used:
-            continue
-        accepted.append((a, b, n))
-        used.update((a, b, a + b))
-    return accepted
+    Each round ranks the pairs, takes `_select_batch`'s provably-
+    classic-equal batch, rewrites every word with one replace chain
+    and stages the result as a LAZY localCheckpoint, which the next
+    round's single job stores while it reads it. The ranking comes
+    from one of two places:
 
+    - the driver table, while the distinct pairs fit PAIR_DICT_MAX: the
+      complete ranking, kept current by one small aggregate per round
+      over the rewritten words only (-freq for each old adjacency, +freq
+      for each new one). Pairs are an additive function of the word
+      multiset, so the table equals a fresh count every round;
+    - otherwise a re-count of every pair, of which the top
+      BATCH_CANDIDATES come back (an incomplete ranking, which
+      `_select_batch` cuts at the tail count).
 
-def _batch_merge_col(batch: list[tuple[str, str, int]]):
-    """One left-to-right pass applying ALL merges of a (symbol-
-    disjoint) batch: at each position a struct-keyed literal-map
-    lookup decides whether (syms[i], syms[i+1]) is a batch pair.
-    Disjointness means at most one pair can match at a position and
-    no batch merge can preempt another, so the single pass equals
-    applying the batch sequentially. Pure JVM (aggregate HOF + map
-    literal), no string escaping, no Python in the loop.
-    ``try_element_at`` keeps the lookup ANSI-safe at the last
-    position (null key field -> null -> keep symbol)."""
-    entries = []
-    for a, b, _ in batch:
-        entries.append(F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")))
-        entries.append(F.lit(a + b))
-    m = F.create_map(*entries)
-    syms = F.col("syms")
-
-    def step(acc, i):
-        key = F.struct(
-            F.element_at(syms, i).alias("a"),
-            F.try_element_at(syms, i + F.lit(1)).alias("b"),
-        )
-        merged = F.try_element_at(m, key)
-        return (
-            F.when(
-                acc["skip"],
-                F.struct(acc["out"].alias("out"), F.lit(False).alias("skip")),
-            )
-            .when(
-                merged.isNotNull(),
-                F.struct(
-                    F.concat(acc["out"], F.array(merged)).alias("out"),
-                    F.lit(True).alias("skip"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.concat(acc["out"], F.array(F.element_at(syms, i))).alias("out"),
-                    F.lit(False).alias("skip"),
-                )
-            )
-        )
-
-    zero = F.struct(
-        F.expr("array_remove(array(''), '')").alias("out"),
-        F.lit(False).alias("skip"),
-    )
-    return F.aggregate(
-        F.sequence(F.lit(1), F.size(syms)), zero, step, lambda acc: acc["out"]
-    )
-
-
-def _pair_structs(col_name: str):
-    """Adjacent-pair struct array of a symbol column, empty (typed)
-    when the word has shrunk below 2 symbols — `sequence(1, 0)`
-    DESCENDS in Spark, so the size guard is load-bearing."""
-    return F.when(
-        F.size(F.col(col_name)) >= 2,
-        F.expr(
-            f"transform(sequence(1, size({col_name}) - 1), "
-            f"i -> struct({col_name}[i - 1] AS a, {col_name}[i] AS b))"
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<struct<a:string,b:string>>)"))
-
-
-# Bracketing delimiters for the delta loop's STRING symbol
-# representation: each symbol rides as \x01sym\x02, so a merge of
-# (a, b) is one `replace` of \x01a\x02\x01b\x02 with \x01ab\x02 —
-# unambiguous (patterns are bracket-aligned, symbols can't collide
-# across brackets) and non-overlapping left-to-right, which is
-# exactly classic BPE's skip-one merge semantics. Corpora whose raw
-# words contain these control bytes (no natural text does) are
-# detected up front and routed to the array re-counting loop instead.
-_SYM_OPEN, _SYM_CLOSE = "\x01", "\x02"
-
-
-def _bpe_train_delta(
-    seqs: DataFrame,
-    counts: dict[tuple[str, str], int],
-    n_merges: int,
-    reliable_every: int = 0,
-) -> list[tuple[str, str, int]]:
-    """Exact distributed BPE with INCREMENTAL pair counts: the full
-    (pair -> count) table lives driver-side (gated by PAIR_DICT_MAX);
-    each round selects the provably-classic-equal disjoint batch from
-    the COMPLETE ranking (`_select_batch(complete=True)` — no
-    truncation cut, so batches are as long as exactness allows), then
-    one pass rewrites the words containing a batch pair and one small
-    aggregate collects the pair deltas (-freq for every old pair of a
-    rewritten word, +freq for every new one) to update the driver
-    table. Per round: one job — never a full pair re-count, never a
-    vocabulary-wide shuffle.
-
-    The letter phase runs hundreds of ~1-2-merge rounds (the provable
-    batching limit when top pairs share symbols), so the round
-    CONSTANT is everything. Three measured reductions vs the naive
-    round (207 s -> 114 s for 1000 merges on the bench corpus):
-
-    - symbol sequences live as \\x01/\\x02-bracketed STRINGS, so the
-      batch rewrite is 1-2 nested `replace` calls instead of a deep
-      aggregate-HOF + literal-map expression tree (the tree's py4j
-      construction plus Catalyst analysis cost ~0.14 s/round alone);
-    - the rewrite is a LAZY localCheckpoint materialized as a side
-      effect of the delta aggregate — one job per round, and the next
-      round reads the stored copy instead of recomputing;
-    - the previous round's stored copy is released explicitly once
-      its successor is materialized (ADVICE r3: parking hundreds of
-      vocabulary-sized copies until a driver GC cycle noticed them
-      was real executor-storage pressure).
-
-    Exactness: the batch is `_select_batch`'s disjoint prefix, whose
-    one-pass application equals sequential classic merges (for the
-    string form: a replace for pair P neither creates nor destroys
-    occurrences of a disjoint pair Q, since P's output symbol is
-    blocked from Q and positions around a P merge keep their
-    adjacency); the delta update then reproduces exactly the counts a
-    full re-count would produce (pairs are an additive function of
-    the word multiset), so the next round's complete ranking is the
-    classic ranking. Regime equality vs `_bpe_train_local` is pinned
-    in tests.
+    The letter phase runs many short rounds (the provable batching
+    limit when top pairs share symbols; on the bench.py corpus the
+    first 300 merges take ~85 rounds), so the round constant is what
+    counts: one job, a replace chain instead of an expression tree,
+    and the superseded round's stored copy released as soon as its
+    successor is stored.
 
     ``reliable_every=N``: every Nth round stages through a durable
-    eager ``df.checkpoint()`` instead of the lazy localCheckpoint —
-    one extra job that round, bounded replay after executor loss,
-    bit-identical merges (operators/caching.py)."""
+    eager ``df.checkpoint()`` instead — one extra job that round,
+    bounded replay after executor loss, bit-identical merges
+    (operators/caching.py)."""
     from crane_spark.operators.caching import (
         ensure_checkpoint_dir,
         release_local_checkpoint,
     )
 
-    o, c = _SYM_OPEN, _SYM_CLOSE
-    cur = seqs.select(
-        "word",
-        "freq",
-        F.concat(F.lit(o), F.array_join("syms", c + o), F.lit(c)).alias("s"),
-    ).localCheckpoint(eager=True)
-    # Loop-invariant delta expressions (built once): un-bracket both
-    # sides back to symbol arrays, emit -freq for old adjacencies and
-    # +freq for new ones. `split` on \x02\x01 is regex-safe (neither
-    # byte is a metacharacter).
-    old_arr = F.split(F.btrim(F.col("s"), F.lit(o + c)), c + o)
-    new_arr = F.split(F.btrim(F.col("_new"), F.lit(o + c)), c + o)
-    neg = F.transform(
-        _pair_structs("_oa"),
-        lambda p: F.struct(
-            p["a"].alias("a"), p["b"].alias("b"), (-F.col("freq")).alias("d")
-        ),
-    )
-    pos = F.transform(
-        _pair_structs("_na"),
-        lambda p: F.struct(
-            p["a"].alias("a"), p["b"].alias("b"), F.col("freq").alias("d")
-        ),
-    )
-    merges: list[tuple[str, str, int]] = []
-    prev: DataFrame | None = None
-    rnd = 0
-    while len(merges) < n_merges and counts:
-        rnd += 1
-        ranked = sorted(
-            ((a, b, n) for (a, b), n in counts.items()),
-            key=lambda t: (-t[2], t[0], t[1]),
+    pairs = _pair_counts(cur)
+    table = None
+    if pairs.count() <= PAIR_DICT_MAX:
+        table = {(r["a"], r["b"]): int(r["n"]) for r in pairs.collect()}
+
+    def signed(col_name: str, freq: Column) -> Column:
+        return F.transform(
+            _pair_structs(col_name),
+            lambda p: F.struct(p["a"].alias("a"), p["b"].alias("b"), freq.alias("d")),
         )
-        cap = n_merges - len(merges)
-        batch = _select_batch(ranked, cap=min(cap, MERGES_PER_ROUND), complete=True)
+
+    # The delta aggregate's columns, built once (each Column costs py4j
+    # calls, and a run has ~100 rounds): -freq for each old adjacency
+    # of a rewritten word, +freq for each new one.
+    old_new = [
+        F.col("freq"),
+        _escaped_symbols(F.col("s")).alias("_oa"),
+        _escaped_symbols(F.col("_new")).alias("_na"),
+    ]
+    deltas = F.explode(
+        F.concat(signed("_oa", -F.col("freq")), signed("_na", F.col("freq")))
+    ).alias("e")
+    merges: list[tuple[str, str, int]] = []
+    stored, staged = cur, None
+    rnd = 0
+    while len(merges) < n_merges:
+        if table is None:
+            rows = (
+                _pair_counts(cur)
+                .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+                .limit(BATCH_CANDIDATES + 1)
+                .collect()
+            )
+            ranked = [(r["a"], r["b"], int(r["n"])) for r in rows]
+            complete = len(ranked) <= BATCH_CANDIDATES
+        else:
+            if staged is not None:
+                _update_table(
+                    table,
+                    staged.filter("s != _new")
+                    .select(*old_new)
+                    .select(deltas)
+                    .groupBy("e.a", "e.b")
+                    .agg(F.sum("e.d").alias("d"))
+                    .filter("d != 0")
+                    .collect(),
+                )
+            ranked = sorted(
+                ((a, b, n) for (a, b), n in table.items()),
+                key=lambda t: (-t[2], t[0], t[1]),
+            )
+            complete = True
+        if staged is not None:
+            # the collect above stored `staged`; its predecessor has
+            # no consumer left, so free it now instead of stacking one
+            # copy per round until a driver GC notices
+            release_local_checkpoint(stored)
+            stored = staged
+        cap = min(n_merges - len(merges), MERGES_PER_ROUND)
+        batch = _select_batch(ranked, cap=cap, complete=complete)
         if not batch:
             break
         merges.extend(batch)
-        rep = F.col("s")
-        for a, b, _ in batch:
-            rep = F.replace(
-                rep, F.lit(o + a + c + o + b + c), F.lit(o + a + b + c)
-            )
-        staged = cur.select("word", "freq", "s", rep.alias("_new"))
+        rnd += 1
+        staged = cur.select("freq", "s", _merge(F.col("s"), batch).alias("_new"))
         if reliable_every > 0 and rnd % reliable_every == 0:
             ensure_checkpoint_dir(staged.sparkSession)
             staged = staged.checkpoint(eager=True)  # durable round state
         else:
             staged = staged.localCheckpoint(eager=False)
-        delta = (
-            staged.filter("s != _new")
-            .withColumn("_oa", old_arr)
-            .withColumn("_na", new_arr)
-            .select(F.explode(F.concat(neg, pos)).alias("e"))
-            .groupBy("e.a", "e.b")
-            .agg(F.sum("e.d").alias("d"))
-            .filter(F.col("d") != 0)
-            .collect()
-        )
-        # `staged` is stored now (the collect computed every
-        # partition through the checkpoint mark); its predecessor has
-        # no remaining consumer — free it immediately.
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = staged
-        for r in delta:
-            key = (r["a"], r["b"])
-            n = counts.get(key, 0) + int(r["d"])
-            if n > 0:
-                counts[key] = n
-            elif n == 0:
-                counts.pop(key, None)
-            else:  # impossible if the maintained table is consistent
-                raise AssertionError(f"negative pair count for {key}: {n}")
-        cur = staged.select("word", "freq", F.col("_new").alias("s"))
+        cur = staged.select("freq", F.col("_new").alias("s"))
     return merges
 
 
@@ -452,144 +375,44 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    exact: bool = True,
     words: DataFrame | None = None,
     reliable_every: int = 0,
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns [(left, right, freq)]
-    in merge order. Deterministic: ties on count break toward the
-    lexicographically smallest pair.
+    in merge order, bit-identical to classic sequential BPE: ties on
+    count break toward the lexicographically smallest pair.
 
-    ``exact=True`` (default) reproduces classic sequential BPE
-    bit-for-bit — batches are the provably-equal disjoint prefixes of
-    `_select_batch`, which degenerate to ~2 merges/round in the early
-    letter-pair phase where top pairs share symbols. ``exact=False``
-    switches to greedy disjoint batching (`_select_batch_greedy`):
-    merges/round runs at the batch cap at the cost of possible
-    within-round reordering vs classic — the throughput mode for
-    real-vocabulary (tens of thousands of merges) tokenizer training,
-    still fully deterministic. Both modes share the local path
-    equality contract only for ``exact=True``.
+    ``words`` short-circuits the corpus scan when the caller already
+    aggregated (word, freq) — training and inference over the same
+    corpus then share ONE corpus-sized pass.
 
-    ``reliable_every=N`` upgrades every Nth lineage checkpoint to a
-    durable ``df.checkpoint()`` (bounded replay after executor loss;
-    merge list bit-identical either way). The small-vocabulary local
-    path ignores it — that path runs entirely on the driver."""
-    # Materialize the vocabulary-sized table once: the regime gate,
-    # the collect (local path), and the loop partitioning all reuse it
-    # without re-running the corpus aggregate.
-    # ``words`` short-circuits the corpus scan when the caller already
-    # aggregated (word, freq) — training and inference over the same
-    # corpus then share ONE corpus-sized pass.
+    ``reliable_every=N`` makes every Nth merge round's lineage
+    checkpoint a durable ``df.checkpoint()`` (bounded replay after
+    executor loss; merge list bit-identical either way). The
+    small-vocabulary local path ignores it — that path runs entirely
+    on the driver."""
     if words is None:
         # lazy (r11): the count() right below is the first action and
         # materializes the aggregate inside its own job.
         words = word_freqs(docs, text_col).localCheckpoint(eager=False)
     n_words = int(words.count())
-    if exact and n_words <= LOCAL_VOCAB_MAX:
+    if n_words <= LOCAL_VOCAB_MAX:
         return _bpe_train_local(
             [(r["word"], int(r["freq"])) for r in words.collect()], n_merges
         )
     # The iteration runs on vocabulary-sized data; right-size its
-    # partitioning ONCE so each of the ~2 jobs per merge round
-    # schedules a handful of tasks, not defaultParallelism empty ones
-    # (tiny-vocab corpora: measured 3x on the whole loop). ~64k words
-    # per partition keeps even a 10M-word vocabulary under 200 tasks.
+    # partitioning ONCE so each round's job schedules a handful of
+    # tasks, not defaultParallelism empty ones (tiny-vocab corpora:
+    # measured 3x on the whole loop). ~64k words per partition keeps
+    # even a 10M-word vocabulary under 200 tasks.
     n_parts = max(1, min(n_words // 65536 + 1,
                          words.sparkSession.sparkContext.defaultParallelism))
-    seqs = (
-        _initial_symbols(words).coalesce(n_parts).localCheckpoint(eager=True)
+    cur = (
+        words.coalesce(n_parts)
+        .select("freq", _encode(F.col("word")).alias("s"))
+        .localCheckpoint(eager=True)
     )
-    if exact:
-        # Delta-maintained exact loop (r2 verdict #6): mirror the full
-        # pair table driver-side when its DISTINCT size allows, then
-        # never re-count — each round costs one job over the staged
-        # words, so the ~2-merges/round letter phase stops paying a
-        # vocabulary shuffle per round and the complete ranking lets
-        # batches reach full provable length. The loop's string
-        # representation needs words free of its bracket bytes —
-        # no natural corpus contains \x01/\x02, but a corpus that
-        # does simply keeps the array re-counting loop.
-        clean = (
-            words.filter(
-                F.col("word").contains(_SYM_OPEN)
-                | F.col("word").contains(_SYM_CLOSE)
-            )
-            .limit(1)
-            .isEmpty()
-        )
-        pc = _pair_counts(seqs)
-        if clean and pc.count() <= PAIR_DICT_MAX:
-            counts = {
-                (r["a"], r["b"]): int(r["n"]) for r in pc.collect()
-            }
-            return _bpe_train_delta(seqs, counts, n_merges, reliable_every)
-    # BATCHED merge loop: one ranked-pair job per ROUND learns up to
-    # MERGES_PER_ROUND provably-classic-equal merges (see
-    # _select_batch), applied in one map-only pass — the driver
-    # round-trip count drops from 2 jobs/merge to ~1 job per batch,
-    # which is what makes 50k-merge tokenizer training feasible on the
-    # distributed path (VERDICT r1 #1 under "What's wrong").
-    from crane_spark.operators.caching import (
-        ensure_checkpoint_dir,
-        release_local_checkpoint,
-    )
-
-    merges: list[tuple[str, str, int]] = []
-    rounds = 0
-    ck_no = 0
-    prev = seqs  # the materialized checkpoint the current chain roots at
-    pending: DataFrame | None = None  # lazily checkpointed, not yet stored
-    while len(merges) < n_merges:
-        ranked_rows = (
-            _pair_counts(seqs)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(BATCH_CANDIDATES + 1)
-            .collect()
-        )
-        # The collect above ran every partition through any pending
-        # checkpoint mark — the predecessor copy is now dead weight;
-        # free it instead of stacking one copy per round until a
-        # driver GC notices (ADVICE r3).
-        if pending is not None:
-            release_local_checkpoint(prev)
-            prev, pending = pending, None
-        if not ranked_rows:
-            break
-        complete = len(ranked_rows) <= BATCH_CANDIDATES
-        ranked = [(r["a"], r["b"], int(r["n"])) for r in ranked_rows]
-        cap = min(n_merges - len(merges), MERGES_PER_ROUND)
-        if exact:
-            batch = _select_batch(ranked, cap=cap, complete=complete)
-        else:
-            batch = _select_batch_greedy(ranked, cap=cap)
-        if not batch:
-            break
-        merges.extend(batch)
-        seqs = seqs.select("word", "freq", _batch_merge_col(batch).alias("syms"))
-        rounds += 1
-        # Bound lineage growth across rounds (each round nests one
-        # HOF). Greedy rounds carry cap-sized literal maps whose
-        # interpreted lookups are linear in map size, so nesting
-        # multiplies a much bigger per-pass cost — checkpoint every
-        # round there (measured 3x on the 1000-merge training). The
-        # checkpoint is LAZY: the next round's ranked-pairs collect
-        # materializes it as a side effect, so a round costs one job,
-        # not two.
-        if rounds % (EXACT_CHECKPOINT_EVERY if exact else 1) == 0:
-            ck_no += 1
-            if reliable_every > 0 and ck_no % reliable_every == 0:
-                # durable round state: eager (one extra job this
-                # round); `pending` is always None here — the ranked
-                # collect at loop top stored and swapped it already
-                ensure_checkpoint_dir(seqs.sparkSession)
-                seqs = seqs.checkpoint(eager=True)
-                release_local_checkpoint(prev)
-                prev = seqs
-            else:
-                seqs = seqs.localCheckpoint(eager=False)
-                pending = seqs
-    return merges
+    return _bpe_train_distributed(cur, n_merges, reliable_every)
 
 
 def apply_merges(
@@ -601,70 +424,15 @@ def apply_merges(
     """Tokenize with a learned merge table: replay merges in order
     (the inference side of BPE). Accepts a raw documents frame.
 
-    r10 (guide §1.2 — the cost was plan construction, not data): the
-    rewrite runs on the \\x01sym\\x02-bracketed STRING representation
-    the delta training loop already uses — one 3-node `replace` per
-    merge, applied in merge order. Sequential replay IS classic BPE,
-    and a bracket-aligned replace is exactly the left-to-right
-    skip-one merge pass (_bpe_train_delta's exactness note), so the
-    symbol output is identical to the old batched aggregate-HOF
-    chain, which itself equals sequential replay batch by batch. That
-    HOF chain cost ~0.4 s of py4j lambda construction PER BATCH
-    (~6.2 s for a 40-merge apply on a 31-word vocabulary) before a
-    single row moved; it remains only as the fallback for vocabularies
-    containing the bracket bytes (no natural corpus does — the same
-    guard as bpe_train's delta regime). Every ~100 replaces the chain
-    is folded through a named projection to bound expression depth for
-    tokenizer-scale merge lists."""
+    Sequential replay IS classic BPE, and each merge is one replace on
+    the symbol string form (module docstring) — the same rewrite the
+    trainer runs. Every 100 replaces the chain is folded through a
+    projection to bound expression depth for tokenizer-scale merge
+    lists."""
     if words is None:
         words = word_freqs(seqs_or_docs, text_col)
-    o, c = _SYM_OPEN, _SYM_CLOSE
-    clean = (
-        words.filter(F.col("word").contains(o) | F.col("word").contains(c))
-        .limit(1)
-        .isEmpty()
-    )
-    if not clean:
-        return _apply_merges_hof(words, merges)
-    seqs = _initial_symbols(words)
-    cur = seqs.select(
-        "word",
-        "freq",
-        F.concat(F.lit(o), F.array_join("syms", c + o), F.lit(c)).alias("s"),
-    )
-    rep = F.col("s")
-    for k, (a, b, _n) in enumerate(merges, start=1):
-        rep = F.replace(rep, F.lit(o + a + c + o + b + c), F.lit(o + a + b + c))
-        if k % 100 == 0:
-            cur = cur.select("word", "freq", rep.alias("s"))
-            rep = F.col("s")
-    cur = cur.select("word", "freq", rep.alias("s"))
-    return cur.select(
-        "word",
-        "freq",
-        F.split(F.btrim(F.col("s"), F.lit(o + c)), c + o).alias("syms"),
-    )
-
-
-def _apply_merges_hof(
-    words: DataFrame, merges: list[tuple[str, str, int]]
-) -> DataFrame:
-    """Array-form apply (the pre-r10 default): merges re-grouped
-    greedily into symbol-disjoint batches, each applied in one
-    left-to-right aggregate-HOF pass — equal to sequential replay
-    batch by batch (a batch flushes when the next merge's input symbol
-    was an input OR OUTPUT of an earlier batch member). Kept for
-    vocabularies whose words contain the \\x01/\\x02 bracket bytes,
-    where the string form would be ambiguous."""
-    seqs = _initial_symbols(words)
-    batch: list[tuple[str, str, int]] = []
-    blocked: set[str] = set()
-    for a, b, n in merges:
-        if a in blocked or b in blocked or len(batch) >= MERGES_PER_ROUND:
-            seqs = seqs.select("word", "freq", _batch_merge_col(batch).alias("syms"))
-            batch, blocked = [], set()
-        batch.append((a, b, n))
-        blocked |= {a, b, a + b}
-    if batch:
-        seqs = seqs.select("word", "freq", _batch_merge_col(batch).alias("syms"))
-    return seqs
+    cur = words.select("word", "freq", _encode(F.col("word")).alias("s"))
+    for i in range(0, len(merges), 100):
+        cur = cur.select("word", "freq", _merge(F.col("s"), merges[i : i + 100]).alias("s"))
+    syms = F.transform(_escaped_symbols(F.col("s")), _unescape)
+    return cur.select("word", "freq", syms.alias("syms"))

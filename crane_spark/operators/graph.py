@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Label propagation converges in diameter rounds; this bounds the
-# loop on a pathological (long-chain) graph.
+# loop on a pathological (long-chain) graph, which then raises rather
+# than return partial labels as components.
 MAX_ROUNDS = 50
 
 
@@ -98,6 +99,12 @@ def connected_components(
         labels = new_labels.select("v", "label")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after {MAX_ROUNDS} "
+            f"rounds ({changed} vertices improved in the last); the graph's "
+            "diameter exceeds MAX_ROUNDS"
+        )
     return labels.select(F.col("v"), F.col("label").alias("component_id"))
 
 

@@ -1618,13 +1618,13 @@ def q_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INFERENCE side of BPE in the query surface: train 40 merges
     on the corpus vocabulary (deterministic classic order), replay
-    them over the same vocabulary with the batched apply
-    (llm/bpe.apply_merges re-groups the merge list into one-pass
-    disjoint batches), and report the tokenization outcome — how many
-    symbols each word compresses to, weighted by corpus frequency.
-    Rows-only (iterative training has no SQL oracle; training/apply
-    correctness is pinned canonically in tests/test_bpe.py, and the
-    apply machinery itself is hash-anchored by `bpe_apply_fixed`)."""
+    them in order over the same vocabulary (llm/bpe.apply_merges: one
+    replace per merge on the bracketed symbol strings), and report
+    the tokenization outcome — how many symbols each word compresses
+    to, weighted by corpus frequency. Rows-only (iterative training
+    has no SQL oracle; training/apply correctness is pinned
+    canonically in tests/test_bpe.py, and the apply machinery itself
+    is hash-anchored by `bpe_apply_fixed`)."""
     from crane_spark.llm.bpe import apply_merges, bpe_train, word_freqs
 
     docs = table(spark, sf_dir, "documents")
@@ -1643,16 +1643,16 @@ def q_bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Hash-checked twin for the BPE APPLY machinery: a FIXED literal merge
-# list replayed by the engine's batched apply vs DuckDB replaying the
-# same list as nested replace() calls over \x01sym\x02-delimited
-# symbol strings. A single left-to-right non-overlapping replace of
+# list replayed by the engine's apply vs DuckDB replaying the same list
+# as nested replace() calls over \x01sym\x02-delimited symbol strings.
+# A single left-to-right non-overlapping replace of
 # '\x01a\x02\x01b\x02' -> '\x01ab\x02' IS the classic skip-merge pass
-# for one pair (same argument the exact trainer's string fast path
-# rests on, llm/bpe.py), so the nested chain IS sequential replay —
-# which the engine's conflict-aware batching must equal. The list is
-# chosen to force batch flushes (chained merges like t+a -> ta+b ->
-# tab+l share symbols) and includes never-matching pairs (no-ops must
-# be no-ops in both engines).
+# for one pair (llm/bpe.py), so the nested chain IS sequential replay.
+# The oracle leaves out the engine's escaping of \x01-\x03 inside a
+# symbol, which is the identity on a corpus without those bytes. The
+# list holds chained merges (t+a -> ta+b -> tab+l, each needing the
+# one before) and never-matching pairs (no-ops must be no-ops in both
+# engines).
 _BPE_FIXED_MERGES: list[tuple[str, str]] = [
     ("t", "a"), ("ta", "b"), ("tab", "l"), ("tabl", "e"), ("table", "</w>"),
     ("s", "c"), ("sc", "a"), ("sca", "n"), ("scan", "</w>"),
@@ -1696,10 +1696,11 @@ def q_bpe_apply_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol sequences value-hashed against DuckDB's sequential-replay
     definition (see _BPE_FIXED_MERGES above for why the two are
     provably the same function). This anchors the inference half of
-    the BPE family in the driver's hash harness — batching, the
-    struct-keyed merge map, and the skip-merge aggregate all sit on
-    this path; training convergence stays pinned in tests/test_bpe.py
-    and by `bpe_tokenize_stats`'s regime-equality tests."""
+    the BPE family in the driver's hash harness — the symbol string
+    encoding, the replace chain and the decoding back to symbols all
+    sit on this path; training convergence stays pinned in
+    tests/test_bpe.py and by `bpe_tokenize_stats`'s regime-equality
+    tests."""
     from crane_spark.llm.bpe import apply_merges
 
     docs = table(spark, sf_dir, "documents")

@@ -123,18 +123,28 @@ def test_bpe_batched_distributed_equals_local_classic(spark, sf_dir, monkeypatch
     docs = table(spark, sf_dir, "documents").filter("doc_id < 150")
     local = B.bpe_train(docs, n_merges=40)
     monkeypatch.setattr(B, "LOCAL_VOCAB_MAX", 0)
+    monkeypatch.setattr(B, "PAIR_DICT_MAX", 0)  # rank by re-count
     monkeypatch.setattr(B, "BATCH_CANDIDATES", 16)  # force many rounds
+    calls = {"incomplete": 0}
+    orig = B._select_batch
+
+    def counting(ranked, cap, complete):
+        calls["incomplete"] += not complete
+        return orig(ranked, cap, complete)
+
+    monkeypatch.setattr(B, "_select_batch", counting)
     dist_small = B.bpe_train(docs, n_merges=40)
     monkeypatch.setattr(B, "BATCH_CANDIDATES", 512)
     dist_big = B.bpe_train(docs, n_merges=40)
     assert local == dist_small == dist_big
     assert len(local) == 40
+    assert calls["incomplete"] > 0  # the BATCH_CANDIDATES cut ran
 
 
 def test_apply_merges_batched_replay_matches_training(spark):
-    """Inference replay with batched passes must reproduce the
-    training-side symbol sequences, including chained merges like
-    (e,s)->(es,t)->(est,</w>) that CANNOT share one pass."""
+    """Inference replay must reproduce the training-side symbol
+    sequences, including chained merges like (e,s)->(es,t)->(est,</w>)
+    that CANNOT share one training round."""
     from crane_spark.llm.bpe import apply_merges, bpe_train
 
     words = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
@@ -145,38 +155,6 @@ def test_apply_merges_batched_replay_matches_training(spark):
         assert "".join(syms) == w + "</w>"
     # est</w> requires three chained passes
     assert any("est</w>" in syms for syms in seqs.values())
-
-
-def test_bpe_greedy_mode_deterministic_and_valid(spark, sf_dir, monkeypatch):
-    """Greedy batched training (exact=False) trades classic within-
-    round ORDER for throughput, never validity: merges are still
-    deterministic, well-formed (every symbol reassembles), and the
-    merge SET over a saturating corpus equals exact mode's (both
-    drain the same pair space)."""
-    from crane_spark.llm import bpe as B
-    from crane_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents").filter("doc_id < 150")
-    monkeypatch.setattr(B, "LOCAL_VOCAB_MAX", 0)
-    g1 = B.bpe_train(docs, n_merges=30, exact=False)
-    g2 = B.bpe_train(docs, n_merges=30, exact=False)
-    assert g1 == g2 and len(g1) == 30
-    assert all(n > 0 and a and b for a, b, n in g1)
-    # greedy batches strictly beat exact batching on rounds: count
-    # selector invocations for the same workload
-    calls = {"exact": 0, "greedy": 0}
-    orig_e, orig_g = B._select_batch, B._select_batch_greedy
-    monkeypatch.setattr(
-        B, "_select_batch",
-        lambda *a, **k: (calls.__setitem__("exact", calls["exact"] + 1), orig_e(*a, **k))[1],
-    )
-    monkeypatch.setattr(
-        B, "_select_batch_greedy",
-        lambda *a, **k: (calls.__setitem__("greedy", calls["greedy"] + 1), orig_g(*a, **k))[1],
-    )
-    B.bpe_train(docs, n_merges=30, exact=True)
-    B.bpe_train(docs, n_merges=30, exact=False)
-    assert calls["greedy"] < calls["exact"]
 
 
 def test_bpe_delta_path_equals_recount_fallback(spark, sf_dir, monkeypatch):
@@ -221,26 +199,28 @@ def test_bpe_unicode_astral_regime_equality(spark, monkeypatch):
     assert any("\U0001F600" in a + b for a, b, _ in local)
 
 
-def test_bpe_delta_delimiter_collision_falls_back(spark, monkeypatch):
-    """A corpus whose words contain the delta loop's bracket bytes
-    (\\x01/\\x02) must be detected up front and routed to the array
-    re-counting loop — training still exact, never corrupted by a
-    delimiter collision in the string representation."""
+def test_bpe_bracket_bytes_train_and_apply_exactly(spark, monkeypatch):
+    """Words holding the string form's bracket and escape bytes
+    (\\x01, \\x02, \\x03, and \\x03o / \\x03c / \\x03e look-alikes)
+    must train to the classic local merges under both rankings, and
+    apply_merges must give back symbols that reassemble every word."""
     from crane_spark.llm import bpe as B
 
-    rows = [("ab\x01cd",), ("ab\x01cd",), ("ab\x02ef",), ("abxy",), ("abxy",), ("abxy",)]
-    docs = spark.createDataFrame(rows, "text string")
+    freqs = {
+        "ab\x01cd": 3, "ab\x02ef": 2, "x\x03oy": 3, "x\x03cy": 2,
+        "\x03e\x03": 2, "\x01\x02\x01": 2, "o\x03\x01o": 1, "abxy": 3,
+    }
+    text = " ".join(w for w, n in freqs.items() for _ in range(n))
+    docs = spark.createDataFrame([(text,)], "text string")
+    local = B._bpe_train_local(sorted(freqs.items()), 12)
+    assert any("\x03" in a + b for a, b, _ in local)
     monkeypatch.setattr(B, "LOCAL_VOCAB_MAX", 0)
-    calls = {"delta": 0}
-    orig = B._bpe_train_delta
-    monkeypatch.setattr(
-        B,
-        "_bpe_train_delta",
-        lambda *a, **k: (calls.__setitem__("delta", calls["delta"] + 1), orig(*a, **k))[1],
-    )
-    distributed = B.bpe_train(docs, n_merges=8, exact=True)
-    assert calls["delta"] == 0  # delimiter gate kept the delta loop out
-    local = B._bpe_train_local(
-        [("ab\x01cd", 2), ("ab\x02ef", 1), ("abxy", 3)], 8
-    )
-    assert distributed == local
+    table_ranked = B.bpe_train(docs, n_merges=12)
+    monkeypatch.setattr(B, "PAIR_DICT_MAX", 0)  # rank by re-count
+    recounted = B.bpe_train(docs, n_merges=12)
+    assert table_ranked == recounted == local
+    seqs = {r["word"]: r["syms"] for r in apply_merges(docs, local).collect()}
+    assert set(seqs) == set(freqs)
+    for w, syms in seqs.items():
+        assert "".join(syms) == w + END
+    assert any(len(syms) < len(w) + 1 for w, syms in seqs.items())

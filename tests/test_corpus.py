@@ -5,6 +5,7 @@ stable, repetition scoring must flag a constructed repeat-heavy doc."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from crane_spark.queries import REGISTRY
 
@@ -98,6 +99,20 @@ def test_connected_components_chain_and_islands(spark):
         for r in connected_components(edges).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+
+
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    """A 60,000-edge chain (past the union-find threshold) needs far
+    more label-propagation rounds than a capped loop allows: the loop
+    must raise, never return its partial labels as components."""
+    from crane_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 2)
+    edges = spark.range(60_000).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    with pytest.raises(RuntimeError, match="still changing"):
+        graph.connected_components(edges).collect()
 
 
 def test_dup_span_ranges_finds_shifted_passages_maximally(spark, tmp_path):

@@ -8,6 +8,7 @@ rounds actually write to the checkpoint directory."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 
@@ -55,28 +56,32 @@ def test_pagerank_bit_identical_with_reliable_cadence(spark):
     assert base == rel  # exact float equality: identical plans, rows
 
 
-def test_bpe_delta_and_batched_bit_identical_with_reliable_cadence(spark):
-    from crane_spark.llm.bpe import _initial_symbols, _pair_counts, _bpe_train_delta, bpe_train
+def test_bpe_delta_and_batched_bit_identical_with_reliable_cadence(spark, monkeypatch):
+    """Durable rounds leave the merge list bit-identical under both
+    rankings: the delta-kept driver table and the batched re-count."""
+    from crane_spark.llm import bpe as B
 
     docs = spark.createDataFrame(
         [("the cat sat on the mat and the cat ran",), ("a cat and a hat",)] * 3,
         "text string",
     )
-    # batched loop (exact=False skips the local path)
-    m0 = bpe_train(docs, n_merges=12, exact=False)
-    m1 = bpe_train(docs, n_merges=12, exact=False, reliable_every=1)
-    assert m0 == m1 and len(m0) == 12
-    # delta loop, called directly (the distributed-exact regime)
-    from crane_spark.llm.bpe import word_freqs
+    # a dir set earlier in the session comes back as a file: URI
+    ckdir = urlparse(ensure_checkpoint_dir(spark)).path
 
-    words = word_freqs(docs, "text").localCheckpoint(eager=True)
-    seqs = _initial_symbols(words).localCheckpoint(eager=True)
-    counts0 = {
-        (r["a"], r["b"]): int(r["n"]) for r in _pair_counts(seqs).collect()
-    }
-    d0 = _bpe_train_delta(seqs, dict(counts0), 10)
-    d1 = _bpe_train_delta(seqs, dict(counts0), 10, reliable_every=2)
-    assert d0 == d1 and len(d0) == 10
+    def n_files():
+        return sum(len(fs) for _, _, fs in os.walk(ckdir))
+
+    monkeypatch.setattr(B, "LOCAL_VOCAB_MAX", 0)  # the distributed loop
+    d0 = B.bpe_train(docs, n_merges=12)
+    before = n_files()
+    d1 = B.bpe_train(docs, n_merges=12, reliable_every=2)
+    assert n_files() > before, "reliable rounds must write checkpoint files"
+    monkeypatch.setattr(B, "PAIR_DICT_MAX", 0)  # rank by re-count
+    r0 = B.bpe_train(docs, n_merges=12)
+    before = n_files()
+    r1 = B.bpe_train(docs, n_merges=12, reliable_every=1)
+    assert n_files() > before, "reliable rounds must write checkpoint files"
+    assert d0 == d1 == r0 == r1 and len(d0) == 12
 
 
 def test_knn_build_and_logreg_bit_identical_with_reliable(spark):
